@@ -21,12 +21,26 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   *                         that per-job constants don't dominate the
   *                         docs/sec figure; the scaling evidence runs use
   *                         a larger corpus via scripts/bench_scaling.sh)
+  *   SPARK_GRAFT_AB_ROUNDS interleaved exact/LCS e2e rounds (default 3)
+  *   SPARK_GRAFT_WINDOW_TRIES  clean-window probes before measuring
+  *                         (default 6)
   */
 object Bench {
+  /** Env knob `name` as an integer ≥ 1 (`default` when unset); anything
+    * else fails before the session starts, not mid-run.
+    */
+  private def positiveIntEnv(name: String, default: Int): Int = {
+    val raw = sys.env.getOrElse(name, default.toString)
+    raw.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"$name must be an integer >= 1, got '$raw'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val families = sys.env.getOrElse("SPARK_GRAFT_FAMILIES", "400000").toLong
+    val abRounds = positiveIntEnv("SPARK_GRAFT_AB_ROUNDS", 3)
+    val windowTries = positiveIntEnv("SPARK_GRAFT_WINDOW_TRIES", 6)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -36,6 +50,28 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val tempStores = scala.collection.mutable.ArrayBuffer.empty[StageStore]
+    try measure(spark, sfDir, cpus, families, abRounds, windowTries, tempStores)
+    finally {
+      spark.stop()
+      // temp checkpoint stores: delete even when a leg fails, so bench runs
+      // don't pile up multi-GB trees in /tmp (each e2e store holds the full
+      // stage chain)
+      tempStores.map(_.root).foreach { r =>
+        def rm(p: java.nio.file.Path): Unit = {
+          if (Files.isDirectory(p))
+            scala.util.Using.resource(Files.list(p))(
+              _.toArray.map(_.asInstanceOf[java.nio.file.Path])).foreach(rm)
+          Files.deleteIfExists(p); ()
+        }
+        rm(java.nio.file.Paths.get(r))
+      }
+    }
+  }
+
+  private def measure(spark: SparkSession, sfDir: String, cpus: String,
+      families: Long, abRounds: Int, windowTries: Int,
+      tempStores: scala.collection.mutable.ArrayBuffer[StageStore]): Unit = {
     def time(thunk: => Unit): Double = {
       val t0 = System.nanoTime()
       thunk
@@ -59,8 +95,6 @@ object Bench {
     // clean window arrives the bench still runs — self-documented by
     // window_ok=false — because a stale artifact is worse than a flagged
     // one.
-    val windowTries =
-      sys.env.getOrElse("SPARK_GRAFT_WINDOW_TRIES", "6").toInt
     var burn = Burn.probe()
     var diskMbs = Burn.diskWriteMBs()
     var windowAttempts = 1
@@ -93,18 +127,18 @@ object Bench {
 
     // end-to-end near-dup pipeline (the BASELINE.json headline metric).
     //
-    // INTERLEAVED A/B (round-4 verdict item 1): exact-verify and b-bit
-    // sketch-verify alternate ×3 within ONE process and the artifact
-    // reports per-mode MEDIANS — a mode comparison from two single runs
-    // minutes apart measures the box's drifting window, not the mode
-    // (round 4 shipped "sketch 14% slower" while the same code's pricing
-    // run had measured it 17% faster; both were window artifacts). Legs
-    // are also emitted raw so the spread is auditable.
+    // INTERLEAVED A/B (round-4 verdict item 1): exact verify and exact
+    // verify + LCS rescue (useLcsCheck, off by default) alternate
+    // ×SPARK_GRAFT_AB_ROUNDS within ONE process and the artifact reports
+    // per-mode MEDIANS — a mode comparison from two single runs minutes
+    // apart measures the box's drifting window, not the mode. Legs are
+    // also emitted raw so the spread is auditable. The LCS legs price the
+    // borderline text fetch + suffix-automaton join at scale; borderline
+    // pairs are few on this corpus, so the expected gap is not a
+    // corpus-sized term.
     val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = families))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nPages = pages.count() // corpus generation outside the timed window
-    val abRounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "3").toInt
-    val tempStores = scala.collection.mutable.ArrayBuffer.empty[StageStore]
     def freshStore(tag: String): StageStore = {
       val s = new StageStore(spark,
         Files.createTempDirectory(s"graft-bench-$tag-").toString)
@@ -116,13 +150,13 @@ object Bench {
       (time { new DedupPipeline(spark, cfg, s).run(pages).count(); () }, s)
     }
     val exactLegs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val sketchLegs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val lcsLegs = scala.collection.mutable.ArrayBuffer.empty[Double]
     var lastExactStore: StageStore = null
     (1 to abRounds).foreach { _ =>
       val (te, se) = e2e(DedupConfig(), "exact")
       exactLegs += te
       lastExactStore = se
-      sketchLegs += e2e(DedupConfig(verifySketchBits = Some(4)), "sk")._1
+      lcsLegs += e2e(DedupConfig(useLcsCheck = true), "lcs")._1
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -130,16 +164,9 @@ object Bench {
     }
     val dedupSec = median(exactLegs.toSeq)
     results("dedup_e2e") = dedupSec
-    results("dedup_e2e_sketch") = median(sketchLegs.toSeq)
+    results("dedup_e2e_lcs") = median(lcsLegs.toSeq)
     val docsPerSec = nPages / dedupSec
     val store = lastExactStore // incremental entries extend the exact store
-
-    // LCS-rescue variant (useLcsCheck defaults off in DedupConfig): a
-    // separate e2e run so the suffix-automaton verify join's cost at scale
-    // is visible in the artifact instead of only in unit tests. Borderline
-    // pairs are few on this corpus, so the expected delta vs dedup_e2e is
-    // the borderline text fetch + LCS join, not a corpus-sized term.
-    results("dedup_e2e_lcs") = e2e(DedupConfig(useLcsCheck = true), "lcs")._1
 
     // BPE trainer: 1000 merge rounds over the documents table — pins the
     // driver-local merge loop (one corpus scan + zero jobs/round; the
@@ -180,18 +207,6 @@ object Bench {
       xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val total = results.values.filter(_ >= 0).sum
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","dedup_pages":$nPages,"dedup_docs_per_sec":$docsPerSec%.1f,"dedup_e2e_legs":${legsJson(exactLegs.toSeq)},"dedup_e2e_sketch_legs":${legsJson(sketchLegs.toSeq)},"inc_delta_pages":$nDelta,"inc_delta_docs_per_sec":${nDelta / incSec}%.1f,"cores":$cpus,$effCores}""")
-    spark.stop()
-    // temp checkpoint stores: delete so repeated bench runs don't pile up
-    // multi-GB trees in /tmp (each e2e store holds the full stage chain)
-    tempStores.map(_.root).foreach { r =>
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p))
-          scala.util.Using.resource(Files.list(p))(
-            _.toArray.map(_.asInstanceOf[java.nio.file.Path])).foreach(rm)
-        Files.deleteIfExists(p); ()
-      }
-      rm(java.nio.file.Paths.get(r))
-    }
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","dedup_pages":$nPages,"dedup_docs_per_sec":$docsPerSec%.1f,"dedup_e2e_legs":${legsJson(exactLegs.toSeq)},"dedup_e2e_lcs_legs":${legsJson(lcsLegs.toSeq)},"inc_delta_pages":$nDelta,"inc_delta_docs_per_sec":${nDelta / incSec}%.1f,"cores":$cpus,$effCores}""")
   }
 }

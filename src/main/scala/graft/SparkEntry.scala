@@ -954,9 +954,9 @@ object SparkEntry {
     // text (a closed form of the family id), so every within-family pair's
     // b-bit estimate is EXACTLY 1.0 (all cells equal — no estimator noise)
     // and the whole two-shuffled-hash-join decision has a DuckDB closed
-    // form. Near-threshold estimator behavior (accuracy, the exact-Jaccard
-    // escalation band) has no closed form and is pinned by
-    // SketchVerifySpec instead.
+    // form. Near-threshold estimator behavior (accuracy against exact
+    // Jaccard) has no closed form and is pinned by SketchVerifySpec
+    // instead.
     "q_sketch_verify" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(
         col("doc_id").as("id"),

@@ -53,31 +53,17 @@ final case class DedupConfig(
     idBits: Int = 64,
     statePartitions: Int = 32,
     stateCompactEvery: Int = 8,
-    verifySketchBits: Option[Int] = None,
-    sketchNumHashes: Int = 256,
-    sketchEps: Double = 0.08,
     incSketchPrefilter: Boolean = true,
     incPrefilterMargin: Double = 0.35,
     incPrefilterProbePairs: Int = 4096,
-    incPrefilterMinDrop: Double = 0.15,
-    emitSketch: Boolean = true) {
+    incPrefilterMinDrop: Double = 0.15) {
   require(bands * rows == numHashes, "bands*rows must equal numHashes")
   require(resumeChunks >= 1, "resumeChunks must be >= 1")
   require(idBits == 64 || idBits == 128, "idBits must be 64 or 128")
   require(statePartitions >= 1, "statePartitions must be >= 1")
   require(stateCompactEvery >= 1, "stateCompactEvery must be >= 1")
-  verifySketchBits.foreach(b =>
-    require(b > 0 && 64 % b == 0, s"verifySketchBits must divide 64, got $b"))
-  require(sketchNumHashes > 0, "sketchNumHashes must be positive")
-  require(verifySketchBits.isEmpty || !useLcsCheck,
-    "sketch verification decides clear-band pairs without exact Jaccard, so " +
-      "the LCS rescue's [lcsLowJaccard, threshold) band is unobservable — " +
-      "use exact verification (verifySketchBits=None) with useLcsCheck")
-  require(sketchEps >= 0.0 && sketchEps < 0.5, "sketchEps must be in [0, 0.5)")
   require(incPrefilterMargin > 0.0 && incPrefilterMargin < jaccardThreshold,
     "incPrefilterMargin must be in (0, jaccardThreshold)")
-  require(emitSketch || verifySketchBits.isEmpty,
-    "sketch-decide mode (verifySketchBits) requires emitSketch")
   require(incPrefilterProbePairs > 0, "incPrefilterProbePairs must be positive")
   require(incPrefilterMinDrop >= 0.0 && incPrefilterMinDrop <= 1.0,
     "incPrefilterMinDrop must be in [0, 1]")
@@ -206,12 +192,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     val normalized = df
       .withColumn("norm_text", normalize_tokens(col("text")))
       .withColumn("shingles", word_shingles(col("norm_text"), config.shingleK, config.seed))
-      // ONE MinHash pass feeds both the LSH band keys and (in the exact
-      // default) the prefilter sketch — a separate n=256 sketch pass
-      // measured +17% end-to-end, while the fused derivation is free
+      // ONE MinHash pass feeds both the LSH band keys and the prefilter
+      // sketch — a separate n=256 sketch pass measured +17% end-to-end,
+      // while the fused derivation is free
       .withColumn("_bs", minhash_bands_sketch(col("shingles"),
         config.bands, config.rows, PrefilterSketchBits, config.seed))
-    normalized.select(Seq(
+    normalized.select(
       idCol.as("id"),
       col("url"),
       col("warc_ts"),
@@ -224,29 +210,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       // stored/verified representation: low 32 bits (half the bytes;
       // MinHash/SimHash above mix from the full 64-bit hashes)
       truncate_hashes32(col("shingles")).as("shingles"),
-      col("_bs.bands").as("bands")) ++
-      // sketch state, emitted by default (`emitSketch`):
-      //  - sketch-DECIDE mode (verifySketchBits=Some(b)): an independent
-      //    n=sketchNumHashes sketch (its ±eps escalation band needs the
-      //    narrow estimator variance n buys — n=256 → ±0.08 at thr 0.8);
-      //  - exact default: the FREE bands·rows-hash truncation from the
-      //    fused pass above (numHashes·b/64 longs; n=80/b=4 → 40 bytes),
-      //    backing the incremental path's safe prefilter whose 0.35
-      //    margin prices the wider σ ≈ 0.06 at ~5.9σ.
-      // Sketch columns of both widths estimate correctly through
-      // `bbit_jaccard(…, numHashes=80, b=4)`: the coefficient family is
-      // shared, so the first 5 longs of an n=256 sketch ARE the n=80
-      // sketch (old layers stay readable).
-      // `emitSketch = false` opts a never-incremental deployment out of
-      // the (already near-free) column; the prefilter then degrades to
-      // exact verification via its null-keep rule.
-      (config.verifySketchBits match {
-        case Some(b) =>
-          Seq(bbit_minhash(col("shingles"), config.sketchNumHashes, b,
-            config.seed).as("sketch"))
-        case None if config.emitSketch => Seq(col("_bs.sketch").as("sketch"))
-        case None => Nil
-      }): _*)
+      col("_bs.bands").as("bands"),
+      // the prefilter sketch: the FREE bands·rows-hash truncation from the
+      // fused pass above (numHashes·b/64 longs; n=80/b=4 → 40 bytes),
+      // backing the incremental path's safe prefilter whose 0.35 margin
+      // prices the estimator's σ ≈ 0.06 at ~5.9σ
+      col("_bs.sketch").as("sketch"))
   }
 
   /** Stage 2 — exact-dup fast path (the DOI-equality analog, SURVEY.md §2.3):
@@ -387,36 +356,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       pages: Option[Dataset[Page]] = None): DataFrame =
     store.getOrCompute("verified_edges")(verifiedEdgesPlan(sigs, pairs, pages))
 
-  /** Sketch mode (opt-in, Li & König 2010 — see [[SketchVerify]]):
-    * clear-band pairs are decided from the numHashes*b/64-long packed
-    * sketch; only pairs within ±sketchEps of the threshold fetch shingle
-    * arrays for an exact score. The joins keep the verify stage's exact
-    * shape (two shuffled-hash joins on the id) — only the per-id payload
-    * shrinks, which is the point: at 10¹² docs the verify shuffle and the
-    * incremental path's prior-state reads are priced by that payload.
-    * Trade: clear-band decisions are estimates (variance P̂(1−P̂)/n), so
-    * run-to-run bit-identity is NOT this mode's contract — pair recall
-    * ≥ 0.99 is (test-pinned); the default mode stays exact.
-    */
-  private def sketchVerifiedEdgesPlan(sigs: DataFrame, pairs: DataFrame,
-      b: Int): DataFrame =
-    SketchVerify.verifyPairsEscalating(
-      pairs,
-      sigs.select(col("id"), col("sketch")),
-      sigs.select(col("id"), col("shingles")),
-      config.sketchNumHashes, b, config.jaccardThreshold, config.sketchEps)
-      .select(col("a"), col("b"),
-        coalesce(col("jaccard"), col("est")).as("jaccard"))
-
   private[graft] def verifiedEdgesPlan(sigs: DataFrame, pairs: DataFrame,
-      pages: Option[Dataset[Page]] = None): DataFrame =
-    config.verifySketchBits match {
-      case Some(b) => sketchVerifiedEdgesPlan(sigs, pairs, b)
-      case None => exactVerifiedEdgesPlan(sigs, pairs, pages)
-    }
-
-  private def exactVerifiedEdgesPlan(sigs: DataFrame, pairs: DataFrame,
-      pages: Option[Dataset[Page]]): DataFrame = {
+      pages: Option[Dataset[Page]] = None): DataFrame = {
       // Explicit shuffled-hash joins: both joins co-partition on the doc id
       // (a shuffle that is needed regardless), build the hash table on the
       // pair side, and never sort. Left unhinted, the optimizer may instead
@@ -911,8 +852,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // (~10⁻³ expected flips at the 9M-page XXL scale; ~2·10³ at 10¹²
     // candidate pairs — recall impact ~10⁻⁹, far inside the ≥0.99
     // contract), which keeps the incremental output bit-identical to the
-    // unfiltered exact plan at any scale this sandbox can run, unlike the
-    // opt-in sketch-DECIDE mode whose clear-band calls sit 3σ out. What it
+    // unfiltered exact plan at any scale this sandbox can run. What it
     // buys: LSH bucket-collision noise (the bulk of candidates at web
     // scale, essentially all of it far below J 0.45) never reaches the
     // shingle fetch, so the verify stage's state reads + shuffles are
@@ -920,9 +860,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // sketch is NULL (pre-sketch signature layers) are KEPT — degradation
     // is "verify exactly", never "drop silently". Skipped under
     // useLcsCheck (the rescue band [lcsLowJaccard, thr) reaches below the
-    // cutoff) and in sketch-decide mode (subsumed). Estimation reads only
-    // the first numHashes·b bits, so n=256 sketch layers from
-    // sketch-decide-era stores remain readable (shared coefficient
+    // cutoff). Estimation reads only the first numHashes·b bits
+    // (prefilterPairs slices both sides to that width), so the wider n=256
+    // sketches some older stores hold remain readable (shared coefficient
     // family). Whether prefiltering actually RUNS is decided per batch by
     // a selectivity probe over a bounded candidate sample (see below) —
     // clean deltas whose candidates are almost all true dups skip it and
@@ -931,8 +871,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     val verifiedInc = store.getOrCompute(s"inc_${batch}_verified_edges") {
       val pairIds = candInc.select(col("a").as("id"))
         .union(candInc.select(col("b").as("id"))).distinct()
-      val sketchAvailable = config.incSketchPrefilter &&
-        config.verifySketchBits.isEmpty && !config.useLcsCheck &&
+      val sketchAvailable = config.incSketchPrefilter && !config.useLcsCheck &&
         allSigs.columns.contains("sketch")
       val cutoff = config.jaccardThreshold - config.incPrefilterMargin
       def direct() =
@@ -1128,9 +1067,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     }
 
   // unionByName + allowMissingColumns: signature checkpoints written
-  // before the always-on sketch column lack it; rows from such layers
-  // surface sketch = NULL, which every sketch consumer treats as
-  // "no sketch → exact path" (see the prefilter's null-keep rule)
+  // before the sketch column existed lack it; rows from such layers
+  // surface sketch = NULL, which the prefilter's null-keep rule sends
+  // down the exact path
   private def readBaseSignatures(): DataFrame =
     if (config.resumeChunks == 1) store.read("signatures")
     else (0 until config.resumeChunks)
@@ -1400,7 +1339,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * config knob never invalidates existing state (at production scale,
     * "new knob ⇒ recompute exabytes" is not an acceptable failure mode).
     * A stored field unknown to the current config (a field since removed)
-    * cannot be verified and is refused.
+    * cannot be verified and is refused — unless it is a retired field
+    * ([[DedupPipeline.RetiredFieldDefaults]]) stored at its old default,
+    * the value every remaining code path still computes under.
     */
   private def assertCheckpointConfig(): Unit = {
     import java.nio.file.{Files, Paths}
@@ -1432,8 +1373,17 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
                 s"current=$v\n"
         }
       }
-      storedMap.keysIterator.filterNot(fields.map(_._1).toSet).foreach(k =>
-        mismatch ++= s"  $k: stored but unknown to the current config\n")
+      val known = fields.map(_._1).toSet
+      storedMap.filterNot(kv => known(kv._1)).foreach { case (k, sv) =>
+        DedupPipeline.RetiredFieldDefaults.get(k) match {
+          case Some(d) if sv == d => // computed exactly as the current code does
+          case Some(d) =>
+            mismatch ++= s"  $k: retired field stored at $sv (only its old " +
+              s"default $d is still supported)\n"
+          case None =>
+            mismatch ++= s"  $k: stored but unknown to the current config\n"
+        }
+      }
       require(mismatch.isEmpty,
         s"checkpoint dir ${store.root} was written with a different pipeline " +
           s"config:\n$mismatch" +
@@ -1468,4 +1418,16 @@ object DedupPipeline {
     * pass's own signature (`MinHashBandsSketch`).
     */
   private[dedup] val PrefilterSketchBits: Int = 4
+
+  /** `DedupConfig` fields since removed, each with the default it had. A
+    * store whose fingerprint holds one of them at this value was computed
+    * exactly as the current code computes, so it stays resumable; any
+    * other stored value is refused (a sketch-decided store, for one, holds
+    * approximate `verified_edges`).
+    */
+  private[dedup] val RetiredFieldDefaults: Map[String, String] = Map(
+    "verifySketchBits" -> "None",
+    "sketchNumHashes" -> "256",
+    "sketchEps" -> "0.08",
+    "emitSketch" -> "true")
 }

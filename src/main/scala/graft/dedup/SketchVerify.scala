@@ -3,26 +3,24 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{bbit_jaccard, jaccard_sorted}
+import graft.functions.bbit_jaccard
 
-/** Sketch-based candidate verification (Li & König 2010, "b-Bit Minwise
-  * Hashing"): decide LSH candidate pairs from stored b-bit MinHash
-  * sketches instead of fetching full shingle sets — the verification-state
-  * escape hatch for the regime BASELINE.md prices as the incremental
-  * path's residual: per-pair shingle fetches read KBs of sorted hashes per
-  * document, while a b=4, n=128 sketch is 64 BYTES (a 64/b× reduction vs
-  * even the 32-bit truncated shingle state for typical page sizes).
+/** Sketch-based candidate scoring (Li & König 2010, "b-Bit Minwise
+  * Hashing"): score LSH candidate pairs from stored b-bit MinHash
+  * sketches instead of fetching full shingle sets — per-pair shingle
+  * fetches read KBs of sorted hashes per document, while a b=4, n=128
+  * sketch is 64 BYTES (a 64/b× reduction vs even the 32-bit truncated
+  * shingle state for typical page sizes).
   *
   * Accuracy contract (published, not invented): the estimator is unbiased
   * with variance ≈ P̂(1−P̂)/n after the 2^-b collision correction; identical
   * shingle sets estimate EXACTLY 1.0. Sketch-only decisions are therefore
-  * approximate near the threshold — that is what [[verifyPairsEscalating]]
-  * is for: pairs whose estimate lands inside ±eps of the threshold (few,
-  * by the variance bound) are re-scored with exact Jaccard; everything
-  * outside the band is decided from 64 bytes. The batch pipeline keeps
-  * exact verification (bit-identity across runs is its contract); this
-  * operator is the documented trade for state-read-bound deployments, with
-  * its recall pinned against exact ground truth in SketchVerifySpec.
+  * approximate near the threshold, so the dedup pipeline never ACCEPTS a
+  * pair from a sketch: its verify stage is exact, and it uses sketches
+  * only through [[prefilterPairs]] to drop pairs far below the threshold.
+  * [[verifyPairs]] is the sketch-only operator for callers that accept
+  * estimates, with its recall pinned against exact ground truth in
+  * SketchVerifySpec.
   *
   * Scale shape: identical to the pipeline's verify stage — two explicit
   * shuffled-hash joins co-partitioned on the doc id, hash tables built on
@@ -35,46 +33,15 @@ object SketchVerify {
     * corrected estimate clears `threshold`.
     */
   def verifyPairs(candidates: DataFrame, sketches: DataFrame,
-                  numHashes: Int, bBits: Int, threshold: Double): DataFrame =
-    scored(candidates, sketches, numHashes, bBits)
+                  numHashes: Int, bBits: Int, threshold: Double): DataFrame = {
+    val sketchSide = sketches.select(col("id"), col("sketch"))
+    candidates.hint("shuffle_hash")
+      .join(sketchSide.withColumnsRenamed(Map("id" -> "a", "sketch" -> "sk_a")), "a")
+      .hint("shuffle_hash")
+      .join(sketchSide.withColumnsRenamed(Map("id" -> "b", "sketch" -> "sk_b")), "b")
+      .withColumn("est", bbit_jaccard(col("sk_a"), col("sk_b"), numHashes, bBits))
       .filter(col("est") >= threshold)
       .select("a", "b", "est")
-
-  /** Sketch-first verification with exact escalation: pairs with
-    * `|est − threshold| < eps` are re-scored by exact Jaccard over
-    * `shingles` (id, shingles) and decided on the EXACT value; pairs
-    * outside the band are decided by the sketch alone. The escalation join
-    * touches only the borderline slice — by the estimator's variance
-    * bound, an O(eps) fraction of candidates — so shingle-state reads
-    * shrink by the same factor. Emits (a, b, est, jaccard, escalated);
-    * `jaccard` is null for sketch-decided pairs. A borderline pair whose
-    * id is missing from `shingles` (narrower shingle state than sketch
-    * state) falls back to the sketch decision (`escalated = false`)
-    * instead of silently vanishing into an inner join.
-    */
-  def verifyPairsEscalating(candidates: DataFrame, sketches: DataFrame,
-                            shingles: DataFrame, numHashes: Int, bBits: Int,
-                            threshold: Double, eps: Double): DataFrame = {
-    val s = scored(candidates, sketches, numHashes, bBits)
-    val clear = s.filter(abs(col("est") - threshold) >= eps)
-      .filter(col("est") >= threshold)
-      .select(col("a"), col("b"), col("est"),
-        lit(null).cast("double").as("jaccard"), lit(false).as("escalated"))
-    val shingleSide = shingles.select(col("id"), col("shingles"))
-    val borderline = s.filter(abs(col("est") - threshold) < eps)
-      .hint("shuffle_hash")
-      .join(shingleSide.withColumnsRenamed(Map("id" -> "a", "shingles" -> "sh_a")),
-        Seq("a"), "left")
-      .hint("shuffle_hash")
-      .join(shingleSide.withColumnsRenamed(Map("id" -> "b", "shingles" -> "sh_b")),
-        Seq("b"), "left")
-      .withColumn("jaccard",
-        when(col("sh_a").isNotNull && col("sh_b").isNotNull,
-          jaccard_sorted(col("sh_a"), col("sh_b"))))
-      .filter(coalesce(col("jaccard"), col("est")) >= threshold)
-      .select(col("a"), col("b"), col("est"), col("jaccard"),
-        col("jaccard").isNotNull.as("escalated"))
-    clear.unionByName(borderline)
   }
 
   /** Safe prefilter for an EXACT verify stage: drop candidate pairs whose
@@ -88,12 +55,17 @@ object SketchVerify {
     * lowest accepted exact score (σ ≈ √(P(1−P)/n)/(1−2⁻ᵇ); the pipeline's
     * default margin is ~5.9σ at its n=80/b=4 fused sketch — see
     * `DedupPipeline.incremental` step 4).
+    * Sketches may be wider than numHashes·b bits (n=256 layers from older
+    * stores next to n=80 ones): both sides are sliced to that width, whose
+    * cells are the n=numHashes sketch of the same coefficient family.
     * Output is the (a, b) pair set, column-compatible with the candidate
     * input.
     */
   def prefilterPairs(candidates: DataFrame, sketches: DataFrame,
                      numHashes: Int, bBits: Int, cutoff: Double): DataFrame = {
-    val sketchSide = sketches.select(col("id"), col("sketch"))
+    val width = (numHashes * bBits + 63) / 64
+    val sketchSide =
+      sketches.select(col("id"), slice(col("sketch"), 1, width).as("sketch"))
     candidates.hint("shuffle_hash")
       .join(sketchSide.withColumnsRenamed(Map("id" -> "a", "sketch" -> "sk_a")),
         Seq("a"), "left")
@@ -105,15 +77,5 @@ object SketchVerify {
           bbit_jaccard(col("sk_a"), col("sk_b"), numHashes, bBits)))
       .filter(col("est").isNull || col("est") >= cutoff)
       .select("a", "b")
-  }
-
-  private def scored(candidates: DataFrame, sketches: DataFrame,
-                     numHashes: Int, bBits: Int): DataFrame = {
-    val sketchSide = sketches.select(col("id"), col("sketch"))
-    candidates.hint("shuffle_hash")
-      .join(sketchSide.withColumnsRenamed(Map("id" -> "a", "sketch" -> "sk_a")), "a")
-      .hint("shuffle_hash")
-      .join(sketchSide.withColumnsRenamed(Map("id" -> "b", "sketch" -> "sk_b")), "b")
-      .withColumn("est", bbit_jaccard(col("sk_a"), col("sk_b"), numHashes, bBits))
   }
 }

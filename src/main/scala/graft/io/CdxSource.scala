@@ -54,9 +54,10 @@ object CdxSource {
     val authority = regexp_extract(noUser, "^([^/?#]*)", 1)
     // only the scheme's OWN default port is dropped (IA canonicalizer
     // semantics): :80 for http (and schemeless input, which IA treats as
-    // http), :443 for https; `http://host:443` stays a distinct origin
-    val defaultPort =
-      when(scheme === "https", lit(":443")).otherwise(lit(":80"))
+    // http), :443 for https; `http://host:443` stays a distinct origin, and
+    // other schemes (`ftp://host:80`) keep every port
+    val defaultPort = when(scheme === "https", lit(":443"))
+      .when(scheme === "http" || scheme === "", lit(":80"))
     val portStripped = when(
       regexp_extract(authority, "(:[0-9]+)$", 1) === defaultPort,
       regexp_replace(authority, ":[0-9]+$", "")).otherwise(authority)

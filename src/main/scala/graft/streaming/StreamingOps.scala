@@ -25,9 +25,9 @@ object StreamingOps {
     * alike (no shuffle, no state). Columns match the batch pipeline's
     * signature stage minus the monotonic id (streams key by content_hash).
     * `sketchBits = Some(b)` additionally emits the packed b-bit MinHash
-    * `sketch` column (the batch pipeline's `verifySketchBits` analog), so
-    * a streaming candidate feed can be sketch-verified against the
-    * stream's own signatures without a batch sketch table.
+    * `sketch` column, so a streaming candidate feed can be sketch-verified
+    * (`SketchVerify.verifyPairs`) against the stream's own signatures
+    * without a batch sketch table.
     */
   def signatures(pages: DataFrame, shingleK: Int = 5,
       bands: Int = 16, rows: Int = 5, seed: Long = 42L,

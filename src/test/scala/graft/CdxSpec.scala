@@ -36,6 +36,8 @@ class CdxSpec extends AnyFunSuite {
     // schemeless input is treated as http — :80 drops, :443 stays
     assert(surt("example.org:80/x") === "org,example)/x")
     assert(surt("example.org:443/x") === "org,example:443)/x")
+    // other schemes have no default port here: ftp's :80 stays
+    assert(surt("ftp://example.org:80/x") === "org,example:80)/x")
     // userinfo dropped; '@' AFTER the authority is path content, kept
     assert(surt("https://user:pw@example.net/p") === "net,example)/p")
     assert(surt("https://example.net/p@q") === "net,example)/p@q")

@@ -142,50 +142,6 @@ class DedupPipelineSpec extends AnyFunSuite {
     corpus.unpersist()
   }
 
-  test("e2e sketch verification: recall/precision ≥ 0.99 from 128-byte sketches") {
-    val spec = CorpusSpec(nFamilies = 300, pDup = 0.3, seed = 42)
-    val corpus = DeterministicCorpus.generate(spark, spec).cache()
-    import spark.implicits._
-    val pages = corpus.map(_._1)
-    val truth = corpus.map(_._2).toDF()
-
-    val cfg = DedupConfig(verifySketchBits = Some(8))
-    val pipeline = new DedupPipeline(spark, cfg, freshStore())
-    val clusters = pipeline.run(pages)
-    assert(clusters.count() === pages.count())
-
-    val (recall, precision, nTruth) = pairMetrics(clusters, truth)
-    assert(nTruth > 50)
-    assert(recall >= 0.99, s"sketch-mode pair recall $recall < 0.99 over $nTruth pairs")
-    assert(precision >= 0.99, s"sketch-mode pair precision $precision < 0.99")
-
-    // the ±3σ escalation band only touches pairs whose exact J sits near
-    // the threshold. This fixture DELIBERATELY plants borderline families
-    // (candidate-J median ≈ 0.88, measured), so the band covers roughly
-    // half the candidates here — a crawl corpus's post-exact-collapse
-    // candidates are far more bimodal. The pinned claim: the band is a
-    // strict subset (clear-band majority never fetches shingles), and
-    // every pair OUTSIDE it is ≥3σ from the threshold so the sketch
-    // decision is safe — which the recall/precision asserts above already
-    // witnessed end-to-end.
-    import graft.functions.bbit_jaccard
-    val sigs = pipeline.signatures(pages)
-    val cands = pipeline.candidatePairs(sigs, pipeline.exactEdges(sigs))
-    val sk = sigs.select(col("id"), col("sketch"))
-    val ests = cands
-      .join(sk.withColumnsRenamed(Map("id" -> "a", "sketch" -> "sk_a")), "a")
-      .join(sk.withColumnsRenamed(Map("id" -> "b", "sketch" -> "sk_b")), "b")
-      .select(bbit_jaccard(col("sk_a"), col("sk_b"),
-        cfg.sketchNumHashes, 8).as("est"))
-    val nCands = ests.count().toDouble
-    val nEsc = ests
-      .filter(abs(col("est") - cfg.jaccardThreshold) < cfg.sketchEps).count()
-    assert(nCands > 0)
-    assert(nEsc < nCands * 0.75,
-      s"escalated $nEsc of $nCands candidates — band not a strict subset")
-    corpus.unpersist()
-  }
-
   test("e2e idBits=128: struct ids flow through all stages; partition identical to 64-bit") {
     import spark.implicits._
     val spec = CorpusSpec(nFamilies = 300, pDup = 0.3, seed = 42)
@@ -474,6 +430,27 @@ class DedupPipelineSpec extends AnyFunSuite {
     }
     assert(exOff.getMessage.contains("simHashMaxBucket"))
 
+    // retired fields (the sketch-decide mode's) stored at their old
+    // defaults: those stages were computed exactly as today, so the store
+    // resumes AND takes a delta
+    val retiredAtDefault = full + "\nverifySketchBits=None\nsketchNumHashes=256" +
+      "\nsketchEps=0.08\nemitSketch=true"
+    java.nio.file.Files.writeString(fp, retiredAtDefault)
+    assert(new DedupPipeline(spark, DedupConfig(), store)
+      .run(pages).count() === 2L)
+    assert(new DedupPipeline(spark, DedupConfig(), store)
+      .incremental("r", Seq(mkPage("f3", (1 to 30).map(i => s"fc$i").mkString(" "),
+        "s")).toDS()).count() === 3L)
+    // … but a store written in sketch-decide mode holds approximate
+    // verified_edges: refused, naming the retired field
+    java.nio.file.Files.writeString(fp,
+      retiredAtDefault.replace("verifySketchBits=None", "verifySketchBits=Some(4)"))
+    val exRetired = intercept[IllegalArgumentException] {
+      new DedupPipeline(spark, DedupConfig(), store).run(pages).count()
+    }
+    assert(exRetired.getMessage.contains("verifySketchBits") &&
+      exRetired.getMessage.contains("retired"))
+
     // a stored field the current config no longer knows cannot be verified
     java.nio.file.Files.writeString(fp, full + "\nretiredKnob=3")
     val exUnknown = intercept[IllegalArgumentException] {
@@ -578,32 +555,43 @@ class DedupPipelineSpec extends AnyFunSuite {
     all.unpersist()
   }
 
-  test("incremental composes with sketch mode: delta apply, recall ≥ 0.99 vs truth") {
+  test("incremental on a store with n=256 sketches: the prefilter reads their n=80 prefix") {
     import spark.implicits._
     import scala.util.hashing.MurmurHash3
-    val spec = CorpusSpec(nFamilies = 200, pDup = 0.3, seed = 17)
-    val corpus = DeterministicCorpus.generate(spark, spec).cache()
-    val all = corpus.map(_._1)
-    val truth = corpus.map(_._2).toDF()
-    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 4)
-    val base = all.filter(p => part(p) > 0)
-    val delta = all.filter(p => part(p) == 0)
-    assert(base.count() > 0 && delta.count() > 0)
+    import graft.functions.{bbit_minhash, normalize_tokens, word_shingles}
+    val spec = CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 23)
+    val all = DeterministicCorpus.generate(spark, spec).map(_._1).cache()
+    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
+    val aPages = all.filter(p => part(p) >= 1)
+    val bPages = all.filter(p => part(p) == 0)
+    def key(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "cluster_id", "is_representative")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    val full = key(new DedupPipeline(spark, DedupConfig(), freshStore())
+      .run(aPages.union(bPages)))
 
-    // base run + delta apply, both under sketch verification: the sketch
-    // column rides the signature checkpoints into the prior-state reads,
-    // so the delta's verify also decides clear-band pairs from sketches
-    val cfg = DedupConfig(verifySketchBits = Some(4))
-    val pipe = new DedupPipeline(spark, cfg, freshStore())
-    pipe.run(base).count()
-    val clusters = pipe.incremental("d1", delta)
-    assert(clusters.count() === all.count())
-
-    val (recall, precision, nTruth) = pairMetrics(clusters, truth)
-    assert(nTruth > 50)
-    assert(recall >= 0.99, s"incremental sketch recall $recall < 0.99 over $nTruth pairs")
-    assert(precision >= 0.99, s"incremental sketch precision $precision < 0.99")
-    corpus.unpersist()
+    // minDrop = 0 makes the probe engage the prefilter
+    val cfg = DedupConfig(incPrefilterMinDrop = 0.0)
+    val store = freshStore()
+    val pipe = new DedupPipeline(spark, cfg, store)
+    pipe.run(aPages).count()
+    // simulate a base layer holding 16-long n=256 sketches over the same
+    // shingles (the width older stores carry); the delta's layers hold the
+    // 5-long n=80 ones, so the prefilter scores old×old and mixed pairs
+    val wide = aPages.toDF().select(
+      xxhash64(col("url"), col("warc_ts")).as("id"),
+      bbit_minhash(word_shingles(normalize_tokens(col("text")), cfg.shingleK, cfg.seed),
+        256, 4, cfg.seed).as("sketch"))
+    (0 until cfg.resumeChunks).foreach { i =>
+      val st = s"signatures_chunk$i"
+      val rewritten = store.read(st).drop("sketch").join(wide, Seq("id"))
+        .localCheckpoint(true)
+      store.invalidate(st)
+      store.write(st, rewritten)
+    }
+    assert(key(pipe.incremental("b", bPages)) === full,
+      "n=256 base sketches + n=80 delta sketches must match the batch run")
+    all.unpersist()
   }
 
   test("incremental state tables: partition-pruned reads, delta-proportional rewrites") {

@@ -11,7 +11,7 @@ import graft.kernel.Shingling
 /** b-bit MinHash sketches and sketch-based candidate verification:
   * truncation parity with the full signature, estimator exactness on
   * identical sets, accuracy/recall on controlled-overlap pairs, and the
-  * escalation band's exact decisions.
+  * prefilter's keep rules.
   */
 class SketchVerifySpec extends AnyFunSuite {
 
@@ -167,55 +167,5 @@ class SketchVerifySpec extends AnyFunSuite {
       .prefilterPairs(candidates, partial, n, b, cutoff = 0.55)
       .as[(Long, Long)].collect().toSet
     assert(keptPartial === within.toSet + ((16L, 18L))) // noise pair kept: null sketch
-  }
-
-  test("escalation band decides exactly; clear band never fetches shingles") {
-    import spark.implicits._
-    val n = 128
-    val b = 8
-    val thr = 0.8
-    val eps = 0.15 // |1.0 − thr| = 0.2 ≥ eps keeps identical pairs OUT of the band
-    // doc 0 vs 1: identical (est 1.0, clear band, kept unescalated)
-    // doc 0 vs 2: J = 80/120 = 0.667 (below threshold with or without
-    //   escalation — absent from the output either way)
-    // doc 0 vs 3: J = 90/110 ≈ 0.818 (inside band, above threshold)
-    val texts = Seq(
-      (0L, toks("w", 0, 100)),
-      (1L, toks("w", 0, 100)),
-      (2L, toks("w", 0, 80) + " " + toks("v", 0, 20)),
-      (3L, toks("w", 0, 90) + " " + toks("u", 0, 10)))
-    val docs = texts.toDF("id", "text")
-    val sh = docs.select(col("id"), word_shingles(col("text"), 1, seed).as("shingles"))
-    val sketches = docs.select(col("id"),
-      bbit_minhash(word_shingles(col("text"), 1, seed), n, b, seed).as("sketch"))
-    val candidates = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("a", "b")
-    val out = SketchVerify.verifyPairsEscalating(
-      candidates, sketches, sh, n, b, thr, eps)
-      .collect().map(r => ((r.getAs[Long]("a"), r.getAs[Long]("b")),
-        (r.getAs[Double]("est"), Option(r.getAs[java.lang.Double]("jaccard")),
-          r.getAs[Boolean]("escalated")))).toMap
-    // identical pair: sketch-decided at exactly 1.0, never escalated
-    assert(out((0L, 1L)) === ((1.0, None, false)))
-    // borderline below threshold: escalated, exact J=2/3 < 0.8 → absent
-    assert(!out.contains((0L, 2L)))
-    // borderline above: escalated and kept on the EXACT value
-    val (est3, j3, esc3) = out((0L, 3L))
-    assert(esc3 && j3.exists(j => math.abs(j - 90.0 / 110.0) < 1e-12))
-    assert(math.abs(est3 - thr) < eps) // it really was in the band
-
-    // a borderline pair whose ids are missing from the shingle table falls
-    // back to the sketch decision instead of vanishing (narrower shingle
-    // state than sketch state)
-    val noShingles = sh.filter(col("id") < 0)
-    val fallback = SketchVerify.verifyPairsEscalating(
-      candidates, sketches, noShingles, n, b, thr, eps)
-      .collect().map(r => ((r.getAs[Long]("a"), r.getAs[Long]("b")),
-        (r.getAs[Double]("est"), r.getAs[Boolean]("escalated")))).toMap
-    // (0,3): est ≈ 0.82 ≥ thr → kept by sketch, unescalated
-    assert(fallback.contains((0L, 3L)) && !fallback((0L, 3L))._2)
-    // (0,2): est ≈ 0.67 < thr → dropped by sketch
-    assert(!fallback.contains((0L, 2L)))
-    // identical pair unaffected (clear band never needed shingles)
-    assert(fallback((0L, 1L)) === ((1.0, false)))
   }
 }
