@@ -593,8 +593,8 @@ object PlanAudit {
         !pdp.contains("Join") && !pdp.contains("Cartesian"), pdp)
 
     // Leakage-safe split: the label is a narrow per-row function of the
-    // cluster column — no Window anywhere (the union-find itself is
-    // equi-joins + partial aggs).
+    // cluster column — no Window anywhere (the union-find is a driver-side
+    // solve at this size, else equi-joins + partial aggs).
     val psl = plan("q_split_leakage")
     check("q_split_leakage: cluster-keyed label, no Window/cartesian",
       !psl.contains("Window") && !psl.contains("Cartesian"), psl)

@@ -872,10 +872,10 @@ object SparkEntry {
 
     // ---------- deduplication ops ----------
 
-    // Distributed union-find (large-star/small-star connected components)
+    // Union-find (ConnectedComponents: a driver-side solve at this size)
     // over an arithmetic chain graph: nodes i—i+1 within each block of 10,
-    // so components have the closed form doc_id - doc_id % 10. A 10-chain
-    // forces multiple fixpoint iterations — this oracle-checks convergence.
+    // so components have the closed form doc_id - doc_id % 10 — this
+    // oracle-checks the min-id labels.
     "q_connected_components" -> ((s, dir) => {
       val edges = t(s, dir, "documents")
         .filter(col("doc_id") % 10 =!= 9)

@@ -161,6 +161,10 @@ object CitationDedup {
     * `find_duplicates(_with_sources)`: assigns `row_idx` by input order,
     * runs the pipeline, and reassembles [[DuplicateGroup]]s (groups ordered
     * by first member).
+    *
+    * Small N only: input and result both live on the driver (the group
+    * assignments are collected). For a large corpus, run [[preprocess]] +
+    * [[assignGroups]] on a DataFrame and keep the result distributed.
     */
   def findDuplicates(spark: SparkSession, citations: Seq[Citation],
       opts: DedupOptions = DedupOptions(),

@@ -1,15 +1,21 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Distributed connected components via alternating large-star / small-star
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14;
-  * cf. BTS ICDE 2024 in PAPERS.md). Replaces the reference's greedy in-memory
-  * star grouping (/root/reference/src/dedupe.rs:592-690) with a
-  * shuffle-bounded fixpoint: O(log n) rounds, each a groupBy + co-partitioned
-  * join — no collect_list, so a hot component (one node with 10^9 neighbors)
-  * never materializes a neighbor array.
+/** Connected components with min-id labels. An edge set of at most
+  * [[LocalSolveMaxEdges]] canonical edges is collected and solved by
+  * union-find on the driver: zero rounds, the reference's in-memory grouping
+  * pass (its `src/dedupe.rs:592-690`) with transitive closure instead of
+  * greedy stars. A larger one runs alternating large-star/small-star to a
+  * fixpoint (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC'14; cf. BTS ICDE 2024 in PAPERS.md): O(log n) rounds, each a
+  * groupBy + co-partitioned join — no collect_list, so a hot component (one
+  * node with 10^9 neighbors) never materializes a neighbor array. The star
+  * path stays because it is the only one that scales past the driver's heap.
+  * The min-id labels do not depend on the algorithm, so both paths return
+  * the same rows with the same schema.
   *
   * Every accepted pair stays connected (CC ⊇ greedy-star pairs ⇒ dup-pair
   * recall vs the reference is preserved; see SURVEY.md §2.4 for the
@@ -17,15 +23,18 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** 2^20 edges stay under ~100 MB of driver heap even as boxed rows. */
+  val LocalSolveMaxEdges: Int = 1 << 20
+
   /** edges: DataFrame(a, b) with both columns either long (narrower numerics
     * are coerced) or the same struct-of-longs (the 128-bit doc id);
     * undirected, a != b (self-loops ok, ignored). Returns
     * DataFrame(id, component) covering every id present in the edge set;
     * component = min id of the component (field-wise min for structs).
     *
-    * Durability: `localCheckpoint` blocks are executor-local — an executor
-    * loss mid-fixpoint kills the job on a real cluster (no lineage left to
-    * recompute). With `durable = Some((store, k))`, every k-th star round
+    * Durability (star path only, as is `maxIterations`): `localCheckpoint`
+    * blocks are executor-local — an executor loss mid-fixpoint kills the job
+    * on a real cluster (no lineage left to recompute). With `durable = Some((store, k))`, every k-th star round
     * is ALSO written through the [[graft.io.StageStore]] (reliable storage,
     * stages `<prefix>_round_<i>`), and a restarted run FAST-FORWARDS to the
     * latest persisted round instead of redoing the fixpoint from round 0.
@@ -36,8 +45,44 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIterations: Int = 50,
       durable: Option[(graft.io.StageStore, Int)] = None,
-      durablePrefix: String = "cc"): DataFrame = {
+      durablePrefix: String = "cc"): DataFrame =
+    run(edges, maxIterations, durable, durablePrefix, LocalSolveMaxEdges)
+
+  /** [[run]] with the local-solve limit as a parameter; 0 forces the star path. */
+  private[graft] def run(edges: DataFrame, maxIterations: Int,
+      durable: Option[(graft.io.StageStore, Int)], durablePrefix: String,
+      localSolveMaxEdges: Int): DataFrame = {
     durable.foreach { case (_, k) => require(k >= 1, "durable interval must be >= 1") }
+
+    // Fast-forward: resume from the latest durably-persisted round. Rounds
+    // are discovered by NAME SCAN over the store (not bounded by the
+    // current maxIterations), so a resume with a smaller cap still finds
+    // rounds persisted beyond it.
+    val latestRound = durable.flatMap { case (store, _) =>
+      val prefix = s"${durablePrefix}_round_"
+      store.stages(prefix).flatMap(_.stripPrefix(prefix).toIntOption).maxOption
+    }
+
+    // Ids may be longs (narrow numeric inputs coerced to long) or structs
+    // (the 128-bit two-long id): every operation below — least/greatest,
+    // min, >, equi-join, distinct — is field-wise orderable on structs, so
+    // the fixpoint is width-agnostic.
+    val canonInput = edges.schema("a").dataType match {
+      case _: StructType => edges.select(col("a"), col("b"))
+      case _ => edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    }
+    val canon = canonInput
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .distinct()
+
+    // A bounded collect decides whether the edge set fits and, if it does,
+    // is the local solve's whole input. A persisted round is resumed instead.
+    if (latestRound.isEmpty && localSolveMaxEdges > 0) {
+      val rows = canon.limit(localSolveMaxEdges + 1).collect()
+      if (rows.length <= localSolveMaxEdges)
+        return unionFind(edges.sparkSession, rows, labels(canon).schema)
+    }
 
     // Guard the durable prefix against a different edge set: persisted
     // rounds are pure functions of the input, so fast-forwarding from
@@ -65,37 +110,13 @@ object ConnectedComponents {
       }
     }
 
-    // Fast-forward: resume from the latest durably-persisted round. Rounds
-    // are discovered by NAME SCAN over the store (not bounded by the
-    // current maxIterations), so a resume with a smaller cap still finds
-    // rounds persisted beyond it.
-    val resumed = durable.flatMap { case (store, _) =>
-      val prefix = s"${durablePrefix}_round_"
-      store.stages(prefix)
-        .flatMap(n => n.stripPrefix(prefix).toIntOption.map(i => (i, n)))
-        .sortBy(-_._1)
-        .headOption
-        .map { case (i, stage) => (i, store.read(stage)) }
-    }
-
-    // Ids may be longs (narrow numeric inputs coerced to long) or structs
-    // (the 128-bit two-long id): every operation below — least/greatest,
-    // min, >, equi-join, distinct — is field-wise orderable on structs, so
-    // the fixpoint is width-agnostic.
-    val canonInput = edges.schema("a").dataType match {
-      case _: org.apache.spark.sql.types.StructType => edges.select(col("a"), col("b"))
-      case _ => edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-    }
-    var current = resumed.map(_._2).getOrElse {
-      canonInput
-        .filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct()
-        .localCheckpoint(true)
+    var current = (durable, latestRound) match {
+      case (Some((store, _)), Some(i)) => store.read(s"${durablePrefix}_round_$i")
+      case _ => canon.localCheckpoint(true)
     }
 
     var converged = false
-    var iter = resumed.map(_._1).getOrElse(0)
+    var iter = latestRound.getOrElse(0)
     var prevSig = signature(current)
     while (!converged && iter < maxIterations) {
       val round = iter + 1
@@ -114,14 +135,46 @@ object ConnectedComponents {
       current = afterSmall
       iter += 1
     }
+    labels(current)
+  }
 
-    // converged edge set is a forest of stars rooted at component minima:
-    // (a=center, b=member) after canonical orientation center < member.
-    val members = current.select(col("b").as("id"), col("a").as("component"))
-    val roots = current.select(col("a").as("id")).distinct()
+  /** Min-id labels of a converged edge set: a forest of stars (a=center <
+    * b=member) rooted at component minima. Also the local solve's schema. */
+  private def labels(forest: DataFrame): DataFrame = {
+    val members = forest.select(col("b").as("id"), col("a").as("component"))
+    val roots = forest.select(col("a").as("id")).distinct()
       .withColumn("component", col("id"))
     members.union(roots)
       .groupBy("id").agg(min("component").as("component"))
+  }
+
+  /** Union-find over a collected canonical edge set. Ids are sorted in Spark's
+    * order and a union hangs the larger-index root under the smaller, so every
+    * root is its component's min id. */
+  private def unionFind(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame = {
+    // Spark's order: a signed long, or a struct of longs field-wise
+    val order: Ordering[Any] = schema("id").dataType match {
+      case _: StructType => Ordering.Implicits.seqOrdering[Seq, Long].on[Any](
+        _.asInstanceOf[Row].toSeq.asInstanceOf[Seq[Long]])
+      case _ => Ordering.Long.on[Any](_.asInstanceOf[Long])
+    }
+    val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .distinct.toArray.sorted(order)
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = { // iterative: a path can be 2^20 nodes deep
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var c = x
+      while (parent(c) != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    def indexOf(id: Any): Int = ids.search(id)(order).insertionPoint
+    rows.foreach { r =>
+      val (ra, rb) = (find(indexOf(r.get(0))), find(indexOf(r.get(1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val out = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /** large-star: for each node u, connect every strictly-larger neighbor to

@@ -28,6 +28,10 @@ import graft.schema.Page
   * pathological buckets entirely (with a metrics row): content that sits in
   * a >10⁶-page bucket is boilerplate whose duplicates the exact-hash path
   * already links.
+  *
+  * `maxCcIterations` and `ccDurableInterval` govern only the star fixpoint
+  * of [[ConnectedComponents]], which runs when the edge set exceeds
+  * [[ConnectedComponents.LocalSolveMaxEdges]].
   */
 final case class DedupConfig(
     shingleK: Int = 5,
@@ -403,8 +407,10 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       }
   }
 
-  /** Stage 5 — components: union exact + verified edges, run large-star/
-    * small-star to fixpoint. Every `ccDurableInterval`-th star round is
+  /** Stage 5 — components: union exact + verified edges and label them by
+    * [[ConnectedComponents]] (union-find on the driver when the edge set
+    * fits, else large-star/small-star to fixpoint). Only the star path uses
+    * `maxCcIterations` and `ccDurableInterval`: every k-th star round is
     * persisted through the StageStore (reliable storage), so a job killed
     * mid-fixpoint fast-forwards to the last persisted round on resume —
     * `localCheckpoint` alone is executor-local and would force a full redo
@@ -413,12 +419,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
   def components(exact: DataFrame, verified: DataFrame): DataFrame =
     store.getOrCompute("components") {
       val edges = exact.select("a", "b").union(verified.select("a", "b"))
-      val durable =
-        if (config.ccDurableInterval > 0) Some((store, config.ccDurableInterval))
-        else None
-      ConnectedComponents.run(edges, config.maxCcIterations, durable,
+      ConnectedComponents.run(edges, config.maxCcIterations, ccDurable,
         durablePrefix = "components_cc")
     }
+
+  private def ccDurable: Option[(StageStore, Int)] =
+    Option.when(config.ccDurableInterval > 0)((store, config.ccDurableInterval))
 
   /** Stage 6 — clusters: every page gets a cluster (singletons = own id);
     * representative selection mirrors the reference's preference chain
@@ -949,11 +955,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       val subOld = oldMembers
         .select(col("component").as("a"), col("id").as("b"))
         .filter(col("a") =!= col("b"))
-      val durable =
-        if (config.ccDurableInterval > 0) Some((store, config.ccDurableInterval))
-        else None
       ConnectedComponents.run(subOld.union(newEdges),
-        config.maxCcIterations, durable, durablePrefix = s"inc_${batch}_cc")
+        config.maxCcIterations, ccDurable, durablePrefix = s"inc_${batch}_cc")
         .select("id", "component")
     }
     // layer append (merge-on-read upsert): the re-solved rows, plus a

@@ -122,6 +122,42 @@ class CitationDedupSpec extends AnyFunSuite {
     assert(groups.head.duplicates.length === 1)
   }
 
+  test("assignGroups on a DataFrame gives findDuplicates' groups") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // the fixtures above, pooled; pmid tells otherwise-equal citations apart
+    val citations = Seq(
+      cite("Title 1", Some(2020), Some("10.1234/abc"), Some("Journal 1")),
+      cite("Title 1", Some(2020), Some("10.1234/abc"), Some("Journal 1"),
+        abstractText = Some("Abstract")),
+      cite("Title 2", Some(2020), Some("10.1234/def"), Some("Journal 2")),
+      cite("Deep learning for cats", Some(2021), None, Some("J Cats"), volume = Some("3")),
+      cite("Deep learning for catz", Some(2021), None, Some("J Cats"), volume = Some("3")),
+      cite("Completely different title", Some(2021), None, Some("J Cats"), volume = Some("3")),
+      cite("Title OnOff", Some(2020), Some("10.1234/xyz"), Some("Journal 1"), volume = Some("7")),
+      cite("Title OnOff", Some(2019), Some("10.1234/xyz"), Some("Journal 1"), volume = Some("7")))
+      .zipWithIndex.map { case (c, i) => c.copy(pmid = Some(s"p$i")) }
+    val expected = CitationDedup.findDuplicates(spark, citations)
+      .map(g => (g.unique.pmid.get, g.duplicates.map(_.pmid.get).toSet)).toSet
+
+    val opts = DedupOptions()
+    val df = citations.zipWithIndex.map { case (c, i) => (i.toLong, "", c) }
+      .toDF("row_idx", "source", "citation")
+      .select(col("row_idx"), col("source"), col("citation.*"))
+    val assigned = CitationDedup.assignGroups(CitationDedup.preprocess(df, opts), opts)
+      .select("group_id", "pmid", "is_unique").as[(Long, String, Boolean)].collect()
+    val actual = assigned.groupBy(_._1).values.map { members =>
+      val unique = members.filter(_._3)
+      assert(unique.length === 1, "exactly one representative per group")
+      (unique.head._2, members.filterNot(_._3).map(_._2).toSet)
+    }.toSet
+
+    assert(actual === expected)
+    assert(actual === Set("p1" -> Set("p0"), "p2" -> Set.empty[String],
+      "p3" -> Set("p4"), "p5" -> Set.empty[String], "p6" -> Set.empty[String],
+      "p7" -> Set.empty[String]))
+  }
+
   test("distributed parse + dedup end-to-end (RIS blobs → groups)") {
     import spark.implicits._
     val blob1 =

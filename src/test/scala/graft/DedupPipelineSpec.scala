@@ -76,22 +76,31 @@ class DedupPipelineSpec extends AnyFunSuite {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
 
     // "killed" run: durable every 2nd round, hard iteration cap simulates
-    // the job dying mid-fixpoint — round_2 must be on reliable storage
+    // the job dying mid-fixpoint — round_2 must be on reliable storage.
+    // The 299 edges fit the local solve, so the star path is forced.
     val store = freshStore()
     ConnectedComponents.run(edges, maxIterations = 2,
-      durable = Some((store, 2)), durablePrefix = "cc").count()
+      durable = Some((store, 2)), durablePrefix = "cc", localSolveMaxEdges = 0).count()
     assert(store.has("cc_round_2"), "durable round must persist before the kill")
     val mtime = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(store.root, "cc_round_2", "_MANIFEST.json"))
 
     // resume: fast-forwards from cc_round_2 (not recomputed) and converges
-    val resumed = ConnectedComponents.run(edges,
-      durable = Some((store, 2)), durablePrefix = "cc")
+    val resumed = ConnectedComponents.run(edges, maxIterations = 50,
+      durable = Some((store, 2)), durablePrefix = "cc", localSolveMaxEdges = 0)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(resumed === full, "resumed fixpoint must equal the uninterrupted run")
     val mtimeAfter = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(store.root, "cc_round_2", "_MANIFEST.json"))
     assert(mtime === mtimeAfter, "persisted round must not be recomputed on resume")
+
+    // a local solve touches none of the durable machinery
+    val localStore = freshStore()
+    ConnectedComponents.run(edges, durable = Some((localStore, 1)), durablePrefix = "cc")
+      .count()
+    assert(localStore.stages("cc_round_").isEmpty &&
+      !Files.exists(java.nio.file.Paths.get(localStore.root, "cc_META.json")),
+      "a local solve must write no durable round and no fingerprint")
   }
 
   /** Pair-level recall/precision of the pipeline's clusters against planted
