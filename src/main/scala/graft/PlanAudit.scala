@@ -113,17 +113,7 @@ object PlanAudit {
       val pipe = new DedupPipeline(spark, DedupConfig(), new StageStore(spark, ckpt))
       val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 2000))
 
-      // Stage 1 must be narrow: no shuffle of any kind before the checkpoint
-      // write (the write itself is the only materialization).
-      val sigPlan = finalPlan(pipe.signaturesChunkPlan(pages.toDF()))
-      check("pipeline signatures: narrow (no Exchange)",
-        !sigPlan.contains("Exchange"), sigPlan)
-      // the fused bands+sketch MinHash pass must run ONCE even though two
-      // struct fields consume it (CollapseProject must not inline the
-      // non-cheap alias into each consumer)
-      check("pipeline signatures: fused minhash pass evaluated once",
-        "minhashbandssketch".r.findAllIn(sigPlan.toLowerCase).length == 1, sigPlan)
-
+      // Stage 1 (signatures) plan checks live in DedupPipelineSpec.
       val sigs = pipe.signaturesChunkPlan(pages.toDF()).localCheckpoint(true)
 
       // Stage 2: partial-agg min + join back — a Window here would funnel a

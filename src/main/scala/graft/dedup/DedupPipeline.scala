@@ -56,21 +56,12 @@ final case class DedupConfig(
     urlCanonicalPreDedup: Boolean = false,
     idBits: Int = 64,
     statePartitions: Int = 32,
-    stateCompactEvery: Int = 8,
-    incSketchPrefilter: Boolean = true,
-    incPrefilterMargin: Double = 0.35,
-    incPrefilterProbePairs: Int = 4096,
-    incPrefilterMinDrop: Double = 0.15) {
+    stateCompactEvery: Int = 8) {
   require(bands * rows == numHashes, "bands*rows must equal numHashes")
   require(resumeChunks >= 1, "resumeChunks must be >= 1")
   require(idBits == 64 || idBits == 128, "idBits must be 64 or 128")
   require(statePartitions >= 1, "statePartitions must be >= 1")
   require(stateCompactEvery >= 1, "stateCompactEvery must be >= 1")
-  require(incPrefilterMargin > 0.0 && incPrefilterMargin < jaccardThreshold,
-    "incPrefilterMargin must be in (0, jaccardThreshold)")
-  require(incPrefilterProbePairs > 0, "incPrefilterProbePairs must be positive")
-  require(incPrefilterMinDrop >= 0.0 && incPrefilterMinDrop <= 1.0,
-    "incPrefilterMinDrop must be in [0, 1]")
 }
 
 /** The end-to-end near-dup detection + clustering pipeline (SURVEY.md §3.3
@@ -85,7 +76,7 @@ final case class DedupConfig(
 final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: StageStore) {
 
   import spark.implicits._
-  import DedupPipeline.{IdSeed2, PrefilterSketchBits}
+  import DedupPipeline.IdSeed2
 
   /** The stable doc id as a pure function of the row's natural key
     * (url, warc_ts) — identical across resume runs, partitionings, and
@@ -154,7 +145,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         }
       }
       cached.foreach(_.unpersist(blocking = false))
-      parts.reduce(_ union _)
+      // by name: chunks written by an older build may carry extra columns
+      parts.reduce(_.unionByName(_, allowMissingColumns = true))
     }
     // Doc ids are xxhash64(url, warc_ts): duplicate natural keys (and the
     // all-null-key case, where xxhash64 skips null inputs and every such row
@@ -188,19 +180,14 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     out
   }
 
-  /** The signature stage's per-chunk plan — narrow (no Exchange), asserted
-    * by PlanAudit. Extracted so the physical plan can be audited without
-    * touching the checkpoint store.
+  /** The signature stage's per-chunk plan — narrow (no Exchange), one
+    * MinHash pass; both pinned by DedupPipelineSpec. Extracted so the
+    * physical plan can be checked without touching the checkpoint store.
     */
   private[graft] def signaturesChunkPlan(df: DataFrame): DataFrame = {
     val normalized = df
       .withColumn("norm_text", normalize_tokens(col("text")))
       .withColumn("shingles", word_shingles(col("norm_text"), config.shingleK, config.seed))
-      // ONE MinHash pass feeds both the LSH band keys and the prefilter
-      // sketch — a separate n=256 sketch pass measured +17% end-to-end,
-      // while the fused derivation is free
-      .withColumn("_bs", minhash_bands_sketch(col("shingles"),
-        config.bands, config.rows, PrefilterSketchBits, config.seed))
     normalized.select(
       idCol.as("id"),
       col("url"),
@@ -214,12 +201,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       // stored/verified representation: low 32 bits (half the bytes;
       // MinHash/SimHash above mix from the full 64-bit hashes)
       truncate_hashes32(col("shingles")).as("shingles"),
-      col("_bs.bands").as("bands"),
-      // the prefilter sketch: the FREE bands·rows-hash truncation from the
-      // fused pass above (numHashes·b/64 longs; n=80/b=4 → 40 bytes),
-      // backing the incremental path's safe prefilter whose 0.35 margin
-      // prices the estimator's σ ≈ 0.06 at ~5.9σ
-      col("_bs.sketch").as("sketch"))
+      minhash_bands(col("shingles"), config.bands, config.rows, config.seed).as("bands"))
   }
 
   /** Stage 2 — exact-dup fast path (the DOI-equality analog, SURVEY.md §2.3):
@@ -847,78 +829,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     //     semi-filtered to pair-touched ids FIRST — the batch plan shuffles
     //     the whole signature table (necessary there), which for a 5% delta
     //     would make verification cost corpus-sized instead of delta-sized.
-    //
-    // SAFE SKETCH PREFILTER (default on): before any shingle bytes move,
-    // candidates are scored from the 40-byte sketches (the free truncation
-    // of the band pass's own n=80 signature) and pairs with
-    // est < threshold − incPrefilterMargin are dropped. The margin is
-    // chosen for EXACTNESS, not estimation: at n=80/b=4 the estimator's
-    // σ ≈ 0.06, so the default 0.35 margin is ~5.9σ — a true-positive
-    // pair (J ≥ 0.8) estimating below 0.45 is a ~2·10⁻⁹-per-pair event
-    // (~10⁻³ expected flips at the 9M-page XXL scale; ~2·10³ at 10¹²
-    // candidate pairs — recall impact ~10⁻⁹, far inside the ≥0.99
-    // contract), which keeps the incremental output bit-identical to the
-    // unfiltered exact plan at any scale this sandbox can run. What it
-    // buys: LSH bucket-collision noise (the bulk of candidates at web
-    // scale, essentially all of it far below J 0.45) never reaches the
-    // shingle fetch, so the verify stage's state reads + shuffles are
-    // priced by true-dup density instead of collision density. Pairs whose
-    // sketch is NULL (pre-sketch signature layers) are KEPT — degradation
-    // is "verify exactly", never "drop silently". Skipped under
-    // useLcsCheck (the rescue band [lcsLowJaccard, thr) reaches below the
-    // cutoff). Estimation reads only the first numHashes·b bits
-    // (prefilterPairs slices both sides to that width), so the wider n=256
-    // sketches some older stores hold remain readable (shared coefficient
-    // family). Whether prefiltering actually RUNS is decided per batch by
-    // a selectivity probe over a bounded candidate sample (see below) —
-    // clean deltas whose candidates are almost all true dups skip it and
-    // pay nothing.
     val allSigs = priorSigs.unionByName(sigsNew, allowMissingColumns = true)
     val verifiedInc = store.getOrCompute(s"inc_${batch}_verified_edges") {
       val pairIds = candInc.select(col("a").as("id"))
         .union(candInc.select(col("b").as("id"))).distinct()
-      val sketchAvailable = config.incSketchPrefilter && !config.useLcsCheck &&
-        allSigs.columns.contains("sketch")
-      val cutoff = config.jaccardThreshold - config.incPrefilterMargin
-      def direct() =
-        verifiedEdgesPlan(allSigs.join(pairIds, Seq("id"), "left_semi"),
-          candInc, allPages)
-      if (!sketchAvailable) direct()
-      else {
-        // SELECTIVITY PROBE (AQE-spirited): prefiltering costs ~two extra
-        // passes over pair-touched signature columns plus a pair↔sketch
-        // shuffle, and saves the DROPPED fraction of the shingle fetch —
-        // on a clean crawl delta (candidates ≈ true dups) it drops
-        // nothing and the overhead measured ~20% of the apply. So the
-        // decision comes from data: score a bounded candidate sample and
-        // engage only when the droppable fraction clears
-        // incPrefilterMinDrop. Either branch yields the same rows (the
-        // prefilter is output-neutral by construction), so the sample's
-        // ordering doesn't need to be deterministic — this is a cost
-        // decision, not a semantic one.
-        val probe = candInc.limit(config.incPrefilterProbePairs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nProbe = probe.count()
-        val probeIds = probe.select(col("a").as("id"))
-          .union(probe.select(col("b").as("id"))).distinct()
-        val probeKept = SketchVerify.prefilterPairs(probe,
-          allSigs.select("id", "sketch").join(probeIds, Seq("id"), "left_semi"),
-          config.numHashes, PrefilterSketchBits, cutoff).count()
-        probe.unpersist(blocking = false)
-        val dropFrac =
-          if (nProbe == 0L) 0.0 else (nProbe - probeKept).toDouble / nProbe
-        if (dropFrac < config.incPrefilterMinDrop) direct()
-        else {
-          val kept = SketchVerify.prefilterPairs(
-            candInc,
-            allSigs.select("id", "sketch").join(pairIds, Seq("id"), "left_semi"),
-            config.numHashes, PrefilterSketchBits, cutoff)
-          val keptIds = kept.select(col("a").as("id"))
-            .union(kept.select(col("b").as("id"))).distinct()
-          verifiedEdgesPlan(allSigs.join(keptIds, Seq("id"), "left_semi"),
-            kept, allPages)
-        }
-      }
+      verifiedEdgesPlan(allSigs.join(pairIds, Seq("id"), "left_semi"),
+        candInc, allPages)
     }
 
     // 5 — incremental connected components: re-solve ONLY touched
@@ -1069,10 +985,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
 
-  // unionByName + allowMissingColumns: signature checkpoints written
-  // before the sketch column existed lack it; rows from such layers
-  // surface sketch = NULL, which the prefilter's null-keep rule sends
-  // down the exact path
+  // unionByName + allowMissingColumns: signature checkpoints written by
+  // older builds differ in their columns (some carry a `sketch` column no
+  // reader selects), so layers are matched by name, never by position
   private def readBaseSignatures(): DataFrame =
     if (config.resumeChunks == 1) store.read("signatures")
     else (0 until config.resumeChunks)
@@ -1417,11 +1332,6 @@ object DedupPipeline {
     */
   private[dedup] val IdSeed2: Long = 0x9E3779B97F4A7C15L
 
-  /** b of the free prefilter sketch — the low bits kept from the band
-    * pass's own signature (`MinHashBandsSketch`).
-    */
-  private[dedup] val PrefilterSketchBits: Int = 4
-
   /** `DedupConfig` fields since removed, each with the default it had. A
     * store whose fingerprint holds one of them at this value was computed
     * exactly as the current code computes, so it stays resumable; any
@@ -1432,5 +1342,9 @@ object DedupPipeline {
     "verifySketchBits" -> "None",
     "sketchNumHashes" -> "256",
     "sketchEps" -> "0.08",
-    "emitSketch" -> "true")
+    "emitSketch" -> "true",
+    "incSketchPrefilter" -> "true",
+    "incPrefilterMargin" -> "0.35",
+    "incPrefilterProbePairs" -> "4096",
+    "incPrefilterMinDrop" -> "0.15")
 }

@@ -282,11 +282,11 @@ case class MinHashBands(child: Expression, bands: Int, rows: Int, seed: Long)
   *   - `bands`: [[Shingling.bandKeys]] of the signature (≡ MinHashBands);
   *   - `sketch`: [[Shingling.packLowBits]] of the signature (≡ BBitMinHash
   *     at numHashes = bands·rows).
-  * The point is COST: the signature stage needs bands anyway, and deriving
-  * the prefilter sketch from the same pass makes the always-on sketch free
-  * (a separate n=256 BBitMinHash pass measured +17% end-to-end — the
-  * n=bands·rows sketch costs nothing and its estimator at n=80/b=4 has
-  * σ ≈ 0.06, which the prefilter's 0.35 margin prices at ~5.9σ).
+  * The point is COST: a caller that needs both gets the sketch from the
+  * band pass for free (a separate n=256 BBitMinHash pass measured +17%
+  * end-to-end). The dedup pipeline no longer stores a sketch, so its
+  * signature stage runs [[MinHashBands]]; this expression stays for callers
+  * that want both, and dedupbench's kernel microbench still times it.
   */
 case class MinHashBandsSketch(child: Expression, bands: Int, rows: Int,
     b: Int, seed: Long)

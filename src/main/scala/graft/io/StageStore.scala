@@ -2,6 +2,8 @@ package graft.io
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,31 +46,8 @@ final class StageStore(spark: SparkSession, val root: String) {
     // clean partial output from a previous killed run (no manifest ⇒ junk)
     if (Files.exists(dir) && !has(stage)) deleteRecursively(dir)
     df.write.mode("overwrite").parquet(dir.toString)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val files = scala.util.Using.resource(Files.list(dir))(
-      _.toArray.map(_.asInstanceOf[Path]))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val back = spark.read.parquet(dir.toString)
-    // per-file row counts from the parquet footers — metadata only, no
-    // second scan of the stage data
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val entries = files.map { f =>
-      val rows =
-        try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), hadoopConf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try reader.getRecordCount finally reader.close()
-        } catch { case _: Throwable => -1L }
-      s"""{"file":"${f.getFileName}","rows":$rows,"bytes":${Files.size(f)}}"""
-    }
-    val manifest =
-      s"""{"stage":"$stage","status":"complete","wall_ms":$wallMs,
-         |"partitions":[${entries.mkString(",")}]}""".stripMargin
-    val tmp = dir.resolve("_MANIFEST.json.tmp")
-    Files.writeString(tmp, manifest)
-    Files.move(tmp, manifestPath(stage), StandardCopyOption.ATOMIC_MOVE)
-    back
+    commit(stage, (System.nanoTime() - t0) / 1000000, parquetFilesUnder(dir))
+    spark.read.parquet(dir.toString)
   }
 
   /** Compute-or-read: the resume primitive. A completed stage is never
@@ -109,6 +88,25 @@ final class StageStore(spark: SparkSession, val root: String) {
       .write.mode("overwrite").partitionBy("pkey").parquet(dir.toString)
     val wallMs = (System.nanoTime() - t0) / 1000000
     val files = parquetFilesUnder(dir)
+    // schema sidecar: a partitioned stage whose every owned partition came
+    // out EMPTY (legitimate — e.g. a base corpus with no duplicate edges
+    // leaves the component state empty) has no parquet file to infer a
+    // schema from, yet layered-state readers still need a typed empty frame
+    Files.writeString(dir.resolve("_SCHEMA.json"), df.schema.json)
+    commit(stage, wallMs, files,
+      s""""pkeys":[${pkeyDirs(dir).distinct.sorted.mkString(",")}]""")
+    if (files.isEmpty) df.limit(0) // all-empty write: nothing to discover
+    else spark.read.parquet(dir.toString)
+  }
+
+  /** Mark `stage` complete: a manifest recording each data file's rows
+    * (from its parquet footer — metadata only, no second scan of the stage
+    * data) and bytes, written to a temp file and atomically renamed into
+    * place. `wallMs` is the data write's time; `extra` adds JSON fields.
+    */
+  private def commit(stage: String, wallMs: Long, files: Seq[Path],
+                     extra: String*): Unit = {
+    val dir = stageDir(stage)
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val entries = files.map { f =>
       val rows =
@@ -117,24 +115,14 @@ final class StageStore(spark: SparkSession, val root: String) {
             new org.apache.hadoop.fs.Path(f.toUri), hadoopConf)
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try reader.getRecordCount finally reader.close()
-        } catch { case _: Throwable => -1L }
+        } catch { case NonFatal(_) => -1L }
       s"""{"file":"${dir.relativize(f)}","rows":$rows,"bytes":${Files.size(f)}}"""
     }
-    val ownedKeys = pkeyDirs(dir).distinct.sorted
-    // schema sidecar: a partitioned stage whose every owned partition came
-    // out EMPTY (legitimate — e.g. a base corpus with no duplicate edges
-    // leaves the component state empty) has no parquet file to infer a
-    // schema from, yet layered-state readers still need a typed empty frame
-    Files.writeString(dir.resolve("_SCHEMA.json"), df.schema.json)
-    val manifest =
-      s"""{"stage":"$stage","status":"complete","wall_ms":$wallMs,
-         |"pkeys":[${ownedKeys.mkString(",")}],
-         |"partitions":[${entries.mkString(",")}]}""".stripMargin
+    val fields = Seq(s""""stage":"$stage","status":"complete","wall_ms":$wallMs""") ++
+      extra :+ s""""partitions":[${entries.mkString(",")}]"""
     val tmp = dir.resolve("_MANIFEST.json.tmp")
-    Files.writeString(tmp, manifest)
+    Files.writeString(tmp, fields.mkString("{", ",\n", "}"))
     Files.move(tmp, manifestPath(stage), StandardCopyOption.ATOMIC_MOVE)
-    if (files.isEmpty) df.limit(0) // all-empty write: nothing to discover
-    else spark.read.parquet(dir.toString)
   }
 
   def getOrComputePartitioned(stage: String)(thunk: => DataFrame): DataFrame =
@@ -172,7 +160,7 @@ final class StageStore(spark: SparkSession, val root: String) {
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("pkey="))
       .map(_.getFileName.toString.stripPrefix("pkey=").toInt).toSeq
 
-  private def parquetFilesUnder(dir: Path): Array[Path] = {
+  private def parquetFilesUnder(dir: Path): Seq[Path] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Path]
     def walk(p: Path): Unit =
       if (Files.isDirectory(p))
@@ -180,7 +168,7 @@ final class StageStore(spark: SparkSession, val root: String) {
           _.toArray.map(_.asInstanceOf[Path])).foreach(walk)
       else if (p.getFileName.toString.endsWith(".parquet")) out += p
     walk(dir)
-    out.toArray
+    out.toSeq
   }
 
   /** Per-partition lineage rows of a completed stage. */

@@ -266,6 +266,40 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(lin.map(_.getAs[Long]("rows")).sum > 0)
   }
 
+  test("resume: a signature chunk with an extra column unions by name") {
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 80, pDup = 0.3, seed = 7))
+    def key(df: DataFrame) =
+      df.select("url", "cluster_id", "is_representative")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    val fresh = key(new DedupPipeline(spark, DedupConfig(), freshStore()).run(pages))
+
+    val store = freshStore()
+    new DedupPipeline(spark, DedupConfig(), store).run(pages).count()
+    // an older build wrote chunk 0 with one more column (last, as the
+    // retired `sketch` was) before the run was killed; this build resumes
+    // and recomputes everything downstream over the mixed-schema chunks
+    val legacy = store.read("signatures_chunk0")
+      .withColumn("retired", array(col("content_hash"))).localCheckpoint(true)
+    store.invalidate("signatures_chunk0")
+    store.write("signatures_chunk0", legacy)
+    Seq("exact_edges", "candidate_pairs", "verified_edges", "components",
+      "clusters").foreach(store.invalidate)
+    assert(key(new DedupPipeline(spark, DedupConfig(), store).run(pages)) === fresh)
+  }
+
+  test("signatures plan: narrow (no Exchange), one MinHash pass") {
+    val pipe = new DedupPipeline(spark, DedupConfig(), freshStore())
+    val df = pipe.signaturesChunkPlan(
+      DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 200)).toDF())
+    df.collect() // materialize so AQE finalizes the plan
+    // AQE prints Final AND Initial plans — inspect the final one only
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    // stage 1 must not shuffle before its checkpoint write
+    assert(!plan.contains("Exchange"), plan)
+    // the MinHash pass is evaluated once, not inlined into several consumers
+    assert("minhashbands".r.findAllIn(plan.toLowerCase).length === 1, plan)
+  }
+
   test("simhash candidate source: planted families still recovered; precision holds") {
     import spark.implicits._
     val spec = CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 7)
@@ -439,11 +473,12 @@ class DedupPipelineSpec extends AnyFunSuite {
     }
     assert(exOff.getMessage.contains("simHashMaxBucket"))
 
-    // retired fields (the sketch-decide mode's) stored at their old
-    // defaults: those stages were computed exactly as today, so the store
-    // resumes AND takes a delta
+    // retired fields (the sketch-decide mode's and the incremental sketch
+    // prefilter's) stored at their old defaults: those stages were
+    // computed exactly as today, so the store resumes AND takes a delta
     val retiredAtDefault = full + "\nverifySketchBits=None\nsketchNumHashes=256" +
-      "\nsketchEps=0.08\nemitSketch=true"
+      "\nsketchEps=0.08\nemitSketch=true\nincSketchPrefilter=true" +
+      "\nincPrefilterMargin=0.35\nincPrefilterProbePairs=4096\nincPrefilterMinDrop=0.15"
     java.nio.file.Files.writeString(fp, retiredAtDefault)
     assert(new DedupPipeline(spark, DedupConfig(), store)
       .run(pages).count() === 2L)
@@ -459,6 +494,14 @@ class DedupPipelineSpec extends AnyFunSuite {
     }
     assert(exRetired.getMessage.contains("verifySketchBits") &&
       exRetired.getMessage.contains("retired"))
+    // a retired prefilter knob off its old default is refused the same way
+    java.nio.file.Files.writeString(fp,
+      retiredAtDefault.replace("incPrefilterMargin=0.35", "incPrefilterMargin=0.2"))
+    val exMargin = intercept[IllegalArgumentException] {
+      new DedupPipeline(spark, DedupConfig(), store).run(pages).count()
+    }
+    assert(exMargin.getMessage.contains("incPrefilterMargin") &&
+      exMargin.getMessage.contains("retired"))
 
     // a stored field the current config no longer knows cannot be verified
     java.nio.file.Files.writeString(fp, full + "\nretiredKnob=3")
@@ -520,9 +563,10 @@ class DedupPipelineSpec extends AnyFunSuite {
     all.unpersist()
   }
 
-  test("incremental on a pre-sketch base store: null sketches degrade to exact") {
+  test("incremental over legacy n=80/n=256 sketch chunks equals batch") {
     import spark.implicits._
     import scala.util.hashing.MurmurHash3
+    import graft.functions.{bbit_minhash, normalize_tokens, word_shingles}
     val spec = CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 23)
     val all = DeterministicCorpus.generate(spark, spec).map(_._1).cache()
     def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
@@ -532,74 +576,30 @@ class DedupPipelineSpec extends AnyFunSuite {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("url", "cluster_id", "is_representative")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
-    val full = key(new DedupPipeline(spark, DedupConfig(), freshStore())
+    val cfg = DedupConfig()
+    val full = key(new DedupPipeline(spark, cfg, freshStore())
       .run(aPages.union(bPages)))
 
     val store = freshStore()
-    // minDrop = 0 forces the probe to ENGAGE the prefilter (a clean
-    // synthetic delta would otherwise skip it), so the null-keep rule is
-    // exercised through the real incremental path
-    val cfg = DedupConfig(incPrefilterMinDrop = 0.0)
     val pipe = new DedupPipeline(spark, cfg, store)
     pipe.run(aPages).count()
-    // simulate a base layer written before the always-on sketch column:
-    // strip it from every signature chunk; the delta's layers still carry
-    // it, so priorSignatures unions mixed schemas (null-filled) and the
-    // prefilter must KEEP every null-sketch pair instead of dropping it
-    (0 until DedupConfig().resumeChunks).foreach { i =>
-      val st = s"signatures_chunk$i"
-      val noSketch = store.read(st).drop("sketch").localCheckpoint(true)
-      store.invalidate(st)
-      store.write(st, noSketch)
-    }
-    assert(key(pipe.incremental("b", bPages)) === full,
-      "pre-sketch base + sketch delta must still match the batch run")
-
-    // and the engaged-prefilter path on a FULLY sketched store matches too
-    val store2 = freshStore()
-    val pipe2 = new DedupPipeline(spark, cfg, store2)
-    pipe2.run(aPages).count()
-    assert(key(pipe2.incremental("b", bPages)) === full,
-      "engaged prefilter must be output-neutral vs the batch run")
-    all.unpersist()
-  }
-
-  test("incremental on a store with n=256 sketches: the prefilter reads their n=80 prefix") {
-    import spark.implicits._
-    import scala.util.hashing.MurmurHash3
-    import graft.functions.{bbit_minhash, normalize_tokens, word_shingles}
-    val spec = CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 23)
-    val all = DeterministicCorpus.generate(spark, spec).map(_._1).cache()
-    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
-    val aPages = all.filter(p => part(p) >= 1)
-    val bPages = all.filter(p => part(p) == 0)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("url", "cluster_id", "is_representative")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
-    val full = key(new DedupPipeline(spark, DedupConfig(), freshStore())
-      .run(aPages.union(bPages)))
-
-    // minDrop = 0 makes the probe engage the prefilter
-    val cfg = DedupConfig(incPrefilterMinDrop = 0.0)
-    val store = freshStore()
-    val pipe = new DedupPipeline(spark, cfg, store)
-    pipe.run(aPages).count()
-    // simulate a base layer holding 16-long n=256 sketches over the same
-    // shingles (the width older stores carry); the delta's layers hold the
-    // 5-long n=80 ones, so the prefilter scores old×old and mixed pairs
-    val wide = aPages.toDF().select(
+    // simulate a store written by older builds: base signature chunks carry
+    // a `sketch` column, n=80 in some chunks and n=256 in others; the
+    // delta's layers carry none, so the layer unions must go by name
+    def sketch(n: Int) = aPages.toDF().select(
       xxhash64(col("url"), col("warc_ts")).as("id"),
       bbit_minhash(word_shingles(normalize_tokens(col("text")), cfg.shingleK, cfg.seed),
-        256, 4, cfg.seed).as("sketch"))
+        n, 4, cfg.seed).as("sketch"))
     (0 until cfg.resumeChunks).foreach { i =>
       val st = s"signatures_chunk$i"
-      val rewritten = store.read(st).drop("sketch").join(wide, Seq("id"))
+      val legacy = store.read(st).join(sketch(if (i < 2) 80 else 256), Seq("id"))
         .localCheckpoint(true)
       store.invalidate(st)
-      store.write(st, rewritten)
+      store.write(st, legacy)
     }
+    assert(store.read("signatures_chunk0").columns.contains("sketch"))
     assert(key(pipe.incremental("b", bPages)) === full,
-      "n=256 base sketches + n=80 delta sketches must match the batch run")
+      "legacy-sketch base + sketch-free delta must match the batch run")
     all.unpersist()
   }
 
@@ -650,6 +650,9 @@ class DedupPipelineSpec extends AnyFunSuite {
     val clRows = store.read("inc_d1_cluster_state").count()
     assert(clRows > 0 && clRows <= 4 * nDelta + 50,
       s"cluster layer wrote $clRows rows for a $nDelta-page delta")
+    // the partitioned layer's manifest accounts for every row it wrote
+    assert(store.lineage("inc_d1_cluster_state").agg(sum("rows")).as[Long].head() ===
+      clRows)
     val compRows = store.read("inc_d1_comp_state").count()
     assert(compRows <= 4 * nDelta + 50,
       s"component layer wrote $compRows rows for a $nDelta-page delta")

@@ -11,7 +11,7 @@ import graft.kernel.Shingling
 /** b-bit MinHash sketches and sketch-based candidate verification:
   * truncation parity with the full signature, estimator exactness on
   * identical sets, accuracy/recall on controlled-overlap pairs, and the
-  * prefilter's keep rules.
+  * fused bands+sketch kernel's parity with the separate ones.
   */
 class SketchVerifySpec extends AnyFunSuite {
 
@@ -129,7 +129,8 @@ class SketchVerifySpec extends AnyFunSuite {
     df.collect().foreach { r =>
       val bs = r.getStruct(3)
       // fused band keys are bit-identical to MinHashBands (same coeff
-      // family) — checkpoints and oracles unaffected by the fusion
+      // family) — stores written by the fused signature pass and by the
+      // MinHashBands one hold the same band keys
       assert(r.getSeq[Long](0) === bs.getSeq[Long](0))
       // fused sketch ≡ standalone BBitMinHash at n = bands·rows
       assert(r.getSeq[Long](1) === bs.getSeq[Long](1))
@@ -138,34 +139,5 @@ class SketchVerifySpec extends AnyFunSuite {
       // bbit_jaccard(…, 80, 4) reads sketch-decide-era layers correctly
       assert(r.getSeq[Long](2).take(5) === r.getSeq[Long](1))
     }
-  }
-
-  test("prefilterPairs: noise dropped, dups and null-sketch pairs kept") {
-    import spark.implicits._
-    val n = 256
-    val b = 4
-    // family f: 2 identical docs; cross-family pairs are disjoint-vocab
-    // noise (the LSH bucket-collision shape the prefilter exists for)
-    val docs = (0 until 20).map { i =>
-      (i.toLong, toks(s"f${i / 2}t", 0, 60))
-    }.toDF("id", "text")
-    val sketches = docs.select(col("id"),
-      bbit_minhash(word_shingles(col("text"), 2, seed), n, b, seed).as("sketch"))
-    val within = (0 until 10).map(f => (f * 2L, f * 2L + 1))
-    val cross = (0 until 9).map(f => (f * 2L, (f + 1) * 2L))
-    val candidates = (within ++ cross).toDF("a", "b")
-    val kept = SketchVerify
-      .prefilterPairs(candidates, sketches, n, b, cutoff = 0.55)
-      .as[(Long, Long)].collect().toSet
-    assert(kept === within.toSet) // dups survive, noise never reaches verify
-
-    // ids 18,19 missing a sketch (pre-sketch signature layer): their pairs
-    // MUST pass through — degradation is "verify exactly", never "drop"
-    val partial = sketches.withColumn("sketch",
-      when(col("id") >= 18L, lit(null)).otherwise(col("sketch")))
-    val keptPartial = SketchVerify
-      .prefilterPairs(candidates, partial, n, b, cutoff = 0.55)
-      .as[(Long, Long)].collect().toSet
-    assert(keptPartial === within.toSet + ((16L, 18L))) // noise pair kept: null sketch
   }
 }
