@@ -28,6 +28,10 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   * the delta comes from --inc-input, or is synthesized with --inc-families
   * at --inc-offset (default 10⁹ — far past any base family range, so the
   * delta's url space is disjoint).
+  *
+  * An unknown flag, a flag without a value, or a value of the wrong type
+  * (a number or true/false where the flag expects one) is refused with a
+  * message naming the flag, before Spark starts.
   */
 object DedupMain {
   def main(args: Array[String]): Unit = {
@@ -74,7 +78,7 @@ object DedupMain {
         graft.functions.normalize_tokens(col("text")), rateStr.toDouble,
         s"probe${opts.getOrElse("seed", "42")}")
       val dflt = DedupConfig()
-      val p = DedupProbe.plan(est, dflt.jaccardThreshold, dflt.numHashes)
+      val p = DedupProbe.plan(est, dflt.jaccardThreshold, dflt.bands * dflt.rows)
       println(f"""{"probe_rate":${est.rate}%.6f,"sampled_docs":${est.sampledDocs},""" +
         f""""sampled_families":${est.sampledFamilies},"est_docs":${est.estDocs}%.1f,""" +
         f""""est_families":${est.estFamilies}%.1f,"est_dup_fraction":${est.estDupFraction}%.6f,""" +
@@ -142,9 +146,7 @@ object DedupMain {
 
     // stage row counts come from the checkpoint manifests (parquet footer
     // metadata recorded at write time) — no re-scan of stage tables
-    val sigStages =
-      if (cfg.resumeChunks == 1) Seq("signatures")
-      else (0 until cfg.resumeChunks).map(i => s"signatures_chunk$i")
+    val sigStages = pipeline.signatureStages
     def rowsOf(sts: Seq[String]): Long =
       sts.map(st => store.lineage(st).agg(sum("rows")).as[Long].collect()(0)).sum
     val stages = (Seq("signatures" -> sigStages) ++
@@ -170,13 +172,37 @@ object DedupMain {
     spark.stop()
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
-    require(args.nonEmpty, "usage: DedupMain <checkpointDir> [--key value ...]")
+  private val IntFlag = ("an integer", (v: String) => v.toIntOption.isDefined)
+  private val LongFlag = ("an integer", (v: String) => v.toLongOption.isDefined)
+  private val BoolFlag = ("true or false", (v: String) => v.toBooleanOption.isDefined)
+  private val TextFlag = ("a value", (_: String) => true)
+
+  /** The flags of the usage above, each with the kind of value it takes. */
+  private val Flags: Map[String, (String, String => Boolean)] = Map(
+    "families" -> LongFlag, "hot" -> IntFlag, "cores" -> IntFlag,
+    "input" -> TextFlag, "seed" -> LongFlag, "idbits" -> IntFlag,
+    "simhash" -> BoolFlag, "urldedup" -> BoolFlag, "adopt-state" -> BoolFlag,
+    "inc-batch" -> TextFlag, "inc-input" -> TextFlag,
+    "inc-families" -> LongFlag, "inc-offset" -> LongFlag,
+    "probe" -> ("a number", (v: String) => v.toDoubleOption.isDefined))
+
+  /** `<checkpointDir> (--flag value)*` as a map keyed by flag name (plus
+    * `checkpoint`).
+    */
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
+    require(args.nonEmpty && !args(0).startsWith("--"),
+      "usage: DedupMain <checkpointDir> [--flag value ...]")
     val kv = scala.collection.mutable.Map("checkpoint" -> args(0))
-    var i = 1
-    while (i < args.length - 1) {
-      if (args(i).startsWith("--")) { kv(args(i).drop(2)) = args(i + 1); i += 2 }
-      else i += 1
+    args.drop(1).grouped(2).foreach { pair =>
+      val flag = pair(0)
+      require(flag.startsWith("--"), s"unexpected argument '$flag' (flags start with --)")
+      val name = flag.drop(2)
+      val (kind, valid) = Flags.getOrElse(name, throw new IllegalArgumentException(
+        s"unknown flag $flag; known flags: ${Flags.keys.toSeq.sorted.map("--" + _).mkString(" ")}"))
+      require(pair.length == 2 && !pair(1).startsWith("--"), s"flag $flag needs a value")
+      require(valid(pair(1)), s"flag $flag expects $kind, got '${pair(1)}'")
+      require(!kv.contains(name), s"flag $flag given twice")
+      kv(name) = pair(1)
     }
     kv.toMap
   }

@@ -91,96 +91,7 @@ object PlanAudit {
     check("ivf corpus assignment: narrow (no Exchange, no Window)",
       !pAssign.contains("Exchange") && !pAssign.contains("Window"), pAssign)
 
-    // ---- dedup pipeline stage plans (the 100-TB hot path) ----
-    // Each stage's physical plan is audited in isolation (inputs pinned via
-    // localCheckpoint so lineage doesn't leak upstream operators into the
-    // stage under audit). AQE prints Final AND Initial plans — count
-    // operators on the final section only.
-    locally {
-      import graft.dedup.{DedupConfig, DedupPipeline}
-      import graft.io.StageStore
-      import graft.synth.DeterministicCorpus
-      import graft.synth.DeterministicCorpus.CorpusSpec
-
-      def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-        df.collect()
-        df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      }
-      def shuffleExchanges(p: String): Int =
-        "Exchange hashpartitioning".r.findAllIn(p).length
-
-      val ckpt = java.nio.file.Files.createTempDirectory("planaudit_ckpt").toString
-      val pipe = new DedupPipeline(spark, DedupConfig(), new StageStore(spark, ckpt))
-      val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 2000))
-
-      // Stage 1 (signatures) plan checks live in DedupPipelineSpec.
-      val sigs = pipe.signaturesChunkPlan(pages.toDF()).localCheckpoint(true)
-
-      // Stage 2: partial-agg min + join back — a Window here would funnel a
-      // hot content_hash into one task.
-      val exactPlan = finalPlan(pipe.exactEdgesPlan(sigs))
-      check("exact_edges: no Window (partial-agg min + join back)",
-        !exactPlan.contains("Window") && exactPlan.contains("partial_min"), exactPlan)
-
-      val exact = pipe.exactEdgesPlan(sigs).localCheckpoint(true)
-
-      // Stage 3: one repartition shuffle for the bucket-sorted emission pass
-      // + one for the final pair distinct; the exact-edge anti join
-      // broadcasts at audit scale. No Window, no cartesian.
-      val candPlan = finalPlan(pipe.candidatePairsPlan(sigs, exact))
-      check("candidate stage: no Window, no cartesian",
-        !candPlan.contains("Window") && !candPlan.contains("CartesianProduct"), candPlan)
-      check("candidate stage: exactly 2 shuffle Exchanges (repartition + distinct)",
-        shuffleExchanges(candPlan) == 2,
-        s"count=${shuffleExchanges(candPlan)}\n" + candPlan)
-
-      val pairs = pipe.candidatePairsPlan(sigs, exact).localCheckpoint(true)
-
-      // Stage 4: both joins back to the signature table must be shuffled
-      // hash joins (co-partition on the id, build on the slim pair side) —
-      // never sort-merge (pointless sort of shingle arrays) and never a
-      // broadcast of an intermediate carrying shingles through the driver.
-      val verPlan = finalPlan(pipe.verifiedEdgesPlan(sigs, pairs))
-      check("verify stage: ShuffledHashJoin x2, no SortMergeJoin/Broadcast",
-        "ShuffledHashJoin".r.findAllIn(verPlan).length == 2 &&
-          !verPlan.contains("SortMergeJoin") && !verPlan.contains("BroadcastHashJoin"),
-        verPlan)
-
-      // Stage 6: min_by partial agg + join back — a row_number Window here
-      // would sort a monster cluster in one task.
-      val comps = exact.select(col("b").as("id"), col("a").as("component"))
-        .localCheckpoint(true)
-      val cluPlan = finalPlan(pipe.clustersPlan(sigs, comps))
-      check("clusters: no Window (partial-agg min_by + join back)",
-        !cluPlan.contains("Window") && cluPlan.contains("min_by"), cluPlan)
-
-      // ---- incremental stage plans (the delta-proportional apply) ----
-      // A real base run + delta apply against the temp store, then audit
-      // the state-table access paths the apply is built on.
-      pipe.run(pages).count()
-      val delta = DeterministicCorpus.pages(spark,
-        CorpusSpec(nFamilies = 20, familyOffset = 90000))
-      pipe.incremental("d1", delta).count()
-      // prior band rows must come from a partition-PRUNED scan of the band
-      // state (directory-level pruning on pkey), with no Exchange — never a
-      // full-corpus re-derivation
-      val prunedBand = pipe.stateView("band", Seq("d1"), Some(Seq(0, 1, 2)),
-        appendOnly = true)
-      val pv = finalPlan(prunedBand)
-      check("incremental band state: partition-pruned scan (PartitionFilters on pkey), no Exchange",
-        "PartitionFilters: \\[[^\\]]*pkey".r.findFirstIn(pv).isDefined &&
-          !pv.contains("Exchange"), pv)
-      // the incremental verify runs the same plan over a pair-semi-filtered
-      // signature side: the two verify joins must stay shuffled-hash (the
-      // semi filter itself may broadcast — that is the point of it)
-      val pairIds = pairs.select(col("a").as("id"))
-        .union(pairs.select(col("b").as("id"))).distinct()
-      val verIncPlan = finalPlan(pipe.verifiedEdgesPlan(
-        sigs.join(pairIds, Seq("id"), "left_semi"), pairs))
-      check("incremental verify: ShuffledHashJoin x2, no SortMergeJoin",
-        "ShuffledHashJoin".r.findAllIn(verIncPlan).length == 2 &&
-          !verIncPlan.contains("SortMergeJoin"), verIncPlan)
-    }
+    // The dedup pipeline's stage plan checks live in DedupPipelineSpec.
 
     // Per-domain gate: partial-agg'd max + join back — a max-over-Window on
     // the domain key would funnel a hot domain into one task.

@@ -1058,13 +1058,13 @@ object SparkEntry {
         "2026-01-02 00:00:00")
       val tmpDirs = Seq.fill(2)(
         java.nio.file.Files.createTempDirectory("graft-q-inc-"))
-      // lean checkpointing (single chunk, no durable CC rounds, state
-      // partitions sized to the 1,000-doc cap — 32 dirs × 5 tables of
-      // fixed write/list cost would dominate this latency-bound row):
-      // resume durability is pinned by its own suite; this query buys the
-      // equivalence contract at the smallest stage-write cost
+      // lean checkpointing (single chunk, state partitions sized to the
+      // 1,000-doc cap — 32 dirs × 5 tables of fixed write/list cost would
+      // dominate this latency-bound row): resume durability is pinned by
+      // its own suite; this query buys the equivalence contract at the
+      // smallest stage-write cost
       val cfg = graft.dedup.DedupConfig(useSimHashCandidates = true,
-        resumeChunks = 1, ccDurableInterval = 0, statePartitions = 4)
+        resumeChunks = 1, statePartitions = 4)
       try {
         val batchRun = new graft.dedup.DedupPipeline(s, cfg,
           new graft.io.StageStore(s, tmpDirs(0).toString))

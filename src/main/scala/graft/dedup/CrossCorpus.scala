@@ -38,7 +38,9 @@ import graft.functions.{jaccard_sorted, minhash_bands, truncate_hashes32, word_s
   */
 object CrossCorpus {
 
-  /** Tuning mirrors [[DedupConfig]]'s defaults for the same knobs. */
+  /** Tuning mirrors [[DedupConfig]]'s defaults for the same knobs, except
+    * `rows`: 16 bands × 4 rows, where the pipeline uses 16 × 5.
+    */
   case class Config(
       shingleK: Int = 5,
       bands: Int = 16,

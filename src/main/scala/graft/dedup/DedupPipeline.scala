@@ -24,40 +24,31 @@ import graft.schema.Page
   * larger buckets emit an id-ordered chain (n-1 pairs). A hot bucket is a
   * near-clique at verify threshold (its members agree on a full band), so
   * chaining preserves connectivity through CC while bounding join output —
-  * the explicit skew defense of SURVEY.md §4.2. `hugeBucketCutoff` drops
-  * pathological buckets entirely (with a metrics row): content that sits in
-  * a >10⁶-page bucket is boilerplate whose duplicates the exact-hash path
-  * already links.
+  * the explicit skew defense of SURVEY.md §4.2. Buckets past
+  * [[DedupPipeline.HugeBucketCutoff]] are dropped entirely (with a metrics
+  * row): content that sits in a >10⁶-page bucket is boilerplate whose
+  * duplicates the exact-hash path already links.
   *
-  * `maxCcIterations` and `ccDurableInterval` govern only the star fixpoint
-  * of [[ConnectedComponents]], which runs when the edge set exceeds
-  * [[ConnectedComponents.LocalSolveMaxEdges]].
+  * Fixed, not configurable: the MinHash count is `bands * rows`; the
+  * doc-id uniqueness check always runs; the LCS band, SimHash distance and
+  * union-find durability are the named constants beside their code.
   */
 final case class DedupConfig(
     shingleK: Int = 5,
-    numHashes: Int = 80,
     bands: Int = 16,
     rows: Int = 5,
     seed: Long = 42L,
     jaccardThreshold: Double = 0.8,
     useLcsCheck: Boolean = false,
-    lcsMinFraction: Double = 0.5,
-    lcsLowJaccard: Double = 0.4,
     maxBucketAllPairs: Int = 64,
-    hugeBucketCutoff: Long = 1000000L,
     sourcePreferences: Seq[String] = Nil,
-    maxCcIterations: Int = 50,
     resumeChunks: Int = 4,
-    verifyIdUniqueness: Boolean = true,
-    ccDurableInterval: Int = 5,
     useSimHashCandidates: Boolean = false,
-    simHashMaxHamming: Int = 3,
     simHashMaxBucket: Int = 10000,
     urlCanonicalPreDedup: Boolean = false,
     idBits: Int = 64,
     statePartitions: Int = 32,
     stateCompactEvery: Int = 8) {
-  require(bands * rows == numHashes, "bands*rows must equal numHashes")
   require(resumeChunks >= 1, "resumeChunks must be >= 1")
   require(idBits == 64 || idBits == 128, "idBits must be 64 or 128")
   require(statePartitions >= 1, "statePartitions must be >= 1")
@@ -76,7 +67,7 @@ final case class DedupConfig(
 final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: StageStore) {
 
   import spark.implicits._
-  import DedupPipeline.IdSeed2
+  import DedupPipeline.{CcDurableInterval, HugeBucketCutoff, IdSeed2}
 
   /** The stable doc id as a pure function of the row's natural key
     * (url, warc_ts) — identical across resume runs, partitionings, and
@@ -118,36 +109,34 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * at 10⁵ rows/executor-thread) by ~4×.
     */
   def signatures(pages: Dataset[Page]): DataFrame = {
-    def chunk(df: DataFrame): DataFrame = signaturesChunkPlan(df)
     val c = config.resumeChunks
-    val freshCompute = // any chunk (or the single stage) computed this run?
-      if (c == 1) !store.has("signatures")
-      else (0 until c).exists(i => !store.has(s"signatures_chunk$i"))
-    val out = if (c == 1) store.getOrCompute("signatures")(chunk(pages.toDF()))
-    else {
-      // one input scan for all chunk computations: cache the pages only if
-      // some chunk actually needs computing (on clean resume: zero reads).
-      // In production the chunk key is the Iceberg ingest partition and
-      // each chunk's scan prunes to its own files — no cache needed.
-      val missing = (0 until c).filterNot(i => store.has(s"signatures_chunk$i"))
-      // the signature projection never touches the raw html payload — keep
-      // it out of the cache (it is the corpus's largest column)
-      val slimPages = pages.toDF().drop("html")
-      val cached =
-        if (missing.size > 1)
-          Some(slimPages.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        else None
-      val input = cached.getOrElse(slimPages)
-      val parts = (0 until c).map { i =>
-        store.getOrCompute(s"signatures_chunk$i") {
-          chunk(input.filter(
-            pmod(xxhash64(col("url"), col("warc_ts")), lit(c)) === i))
+    // stages to compute this run; empty on a clean resume
+    val missing = signatureStages.filterNot(store.has)
+    val out =
+      if (c == 1) store.getOrCompute("signatures")(signaturesChunkPlan(pages.toDF()))
+      else {
+        // one input scan for all chunk computations: cache the pages only if
+        // some chunk actually needs computing (on clean resume: zero reads).
+        // In production the chunk key is the Iceberg ingest partition and
+        // each chunk's scan prunes to its own files — no cache needed.
+        // The signature projection never touches the raw html payload — keep
+        // it out of the cache (it is the corpus's largest column)
+        val slimPages = pages.toDF().drop("html")
+        val cached =
+          if (missing.size > 1)
+            Some(slimPages.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          else None
+        val input = cached.getOrElse(slimPages)
+        val parts = signatureStages.zipWithIndex.map { case (st, i) =>
+          store.getOrCompute(st) {
+            signaturesChunkPlan(input.filter(
+              pmod(xxhash64(col("url"), col("warc_ts")), lit(c)) === i))
+          }
         }
+        cached.foreach(_.unpersist(blocking = false))
+        // by name: chunks written by an older build may carry extra columns
+        parts.reduce(_.unionByName(_, allowMissingColumns = true))
       }
-      cached.foreach(_.unpersist(blocking = false))
-      // by name: chunks written by an older build may carry extra columns
-      parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    }
     // Doc ids are xxhash64(url, warc_ts): duplicate natural keys (and the
     // all-null-key case, where xxhash64 skips null inputs and every such row
     // shares one id) silently merge distinct documents. Assert uniqueness
@@ -155,19 +144,16 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // the stage write. The pass is recorded as a durable MARKER, not
     // inferred from chunk completeness: a crash between the last chunk
     // commit and this check would otherwise leave every manifest present,
-    // and the rerun (freshCompute=false) would silently adopt unchecked —
+    // and the rerun (nothing missing) would silently adopt unchecked —
     // possibly duplicate-id — signatures.
-    if (config.verifyIdUniqueness &&
-        (freshCompute || !store.marked("signatures_idcheck"))) {
+    if (missing.nonEmpty || !store.marked("signatures_idcheck")) {
       val row = out.agg(count(lit(1)).as("n"), count_distinct(col("id")).as("d"))
         .collect()(0)
       if (row.getLong(0) != row.getLong(1)) {
         // Delete the just-written signature checkpoints BEFORE throwing:
         // leaving them on disk would let a rerun see every chunk present,
-        // set freshCompute=false, skip this check, and silently adopt the
-        // duplicate-id signatures.
-        if (c == 1) store.invalidate("signatures")
-        else (0 until c).foreach(i => store.invalidate(s"signatures_chunk$i"))
+        // skip this check, and silently adopt the duplicate-id signatures.
+        signatureStages.foreach(store.invalidate)
         store.unmark("signatures_idcheck")
         throw new IllegalArgumentException(
           s"doc ids are not unique: ${row.getLong(0)} rows but ${row.getLong(1)} " +
@@ -179,6 +165,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     }
     out
   }
+
+  /** The signature stage's checkpoint names: `signatures` when
+    * `resumeChunks == 1`, else `signatures_chunk0` … `signatures_chunk<C-1>`.
+    */
+  private[graft] def signatureStages: Seq[String] =
+    if (config.resumeChunks == 1) Seq("signatures")
+    else (0 until config.resumeChunks).map(i => s"signatures_chunk$i")
 
   /** The signature stage's per-chunk plan — narrow (no Exchange), one
     * MinHash pass; both pinned by DedupPipelineSpec. Extracted so the
@@ -230,7 +223,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
 
   /** Skew-policy observability (SURVEY.md §4.2 "no silent caps"): buckets
     * that fell back to chain emission, and buckets/rows dropped past
-    * `hugeBucketCutoff`. Populated by the candidate stage's job.
+    * [[DedupPipeline.HugeBucketCutoff]]. Populated by the candidate stage's job.
     */
   val hotBuckets = spark.sparkContext.longAccumulator("graft.dedup.hotBuckets")
   val droppedBuckets = spark.sparkContext.longAccumulator("graft.dedup.droppedBuckets")
@@ -241,7 +234,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * bucket-sorted rows via the shared [[PairEmission]] policy: all C(n,2)
     * pairs for buckets up to `maxBucketAllPairs`, an id-ordered chain for
     * hot buckets (connectivity preserved through connected components — the
-    * explicit skew defense), nothing for buckets past `hugeBucketCutoff`
+    * explicit skew defense), nothing for buckets past [[HugeBucketCutoff]]
     * (boilerplate whose dups the exact-hash path already links; counted in
     * [[droppedBuckets]]/[[droppedBucketRows]], never silent).
     *
@@ -250,7 +243,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     *
     * Physical shape: ONE shuffle (repartition by bucket key) + in-partition
     * sort + `mapPartitions` run detection, then a distinct on the emitted
-    * pairs. Buffered state is one bucket's ids, capped at hugeBucketCutoff
+    * pairs. Buffered state is one bucket's ids, capped at HugeBucketCutoff
     * (8 MB at the default) — no hash-aggregate state. Earlier formulations
     * (window counts + bucket self-join; groupBy + collect_list) both
     * anti-scaled with cores: at n pages × b bands the bucket key space is
@@ -278,7 +271,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       val bandRows = bandRowsOf(sigs, exact)
 
       val maxAll = config.maxBucketAllPairs
-      val hugeCutoff = config.hugeBucketCutoff
       val (hot, droppedB, droppedR) = (hotBuckets, droppedBuckets, droppedBucketRows)
       val sorted = bandRows
         .repartition(col("band"), col("bucket"))
@@ -297,7 +289,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
               PairEmission.emit[Long](
                 it,
                 maxAllPairs = maxAll,
-                hugeCutoff = hugeCutoff,
+                hugeCutoff = HugeBucketCutoff,
                 chainHuge = false,
                 onHot = () => hot.add(1L),
                 onDropped = n => { droppedB.add(1L); droppedR.add(n) })
@@ -311,7 +303,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
               PairEmission.emit[(Long, Long)](
                 it.map { case (band, bucket, h1, h2) => (band, bucket, (h1, h2)) },
                 maxAllPairs = maxAll,
-                hugeCutoff = hugeCutoff,
+                hugeCutoff = HugeBucketCutoff,
                 chainHuge = false,
                 onHot = () => hot.add(1L),
                 onDropped = n => { droppedB.add(1L); droppedR.add(n) })
@@ -325,14 +317,18 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       pairs.distinct()
   }
 
+  /** The LCS second chance's Jaccard floor and verbatim-run share. */
+  private val LcsLowJaccard = 0.4
+  private val LcsMinFraction = 0.5
+
   /** Stage 4 — verification: exact Jaccard over the persisted shingle sets
     * (two co-keyed joins back to the signature table); optionally a
     * longest-common-substring second chance for borderline pairs.
     *
     * The LCS check (north_star: "exact Jaccard plus suffix-array
     * longest-common-substring checks") rescues pairs whose shingle Jaccard
-    * falls in [lcsLowJaccard, jaccardThreshold) but that share a verbatim
-    * run covering ≥ lcsMinFraction of the shorter normalized text — the
+    * falls in [LcsLowJaccard, jaccardThreshold) but that share a verbatim
+    * run covering ≥ LcsMinFraction of the shorter normalized text — the
     * "quoted-in-full inside extra boilerplate" shape that set-similarity
     * underrates. Borderline pairs are few, so the text join (back to the
     * input pages by url) is a small broadcast-side join; texts are never
@@ -361,7 +357,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       (config.useLcsCheck, pages) match {
         case (true, Some(p)) =>
           val borderline = scored
-            .filter(col("jaccard") >= config.lcsLowJaccard &&
+            .filter(col("jaccard") >= LcsLowJaccard &&
               col("jaccard") < config.jaccardThreshold)
             .select("a", "b", "jaccard")
             .localCheckpoint(true) // small; reused below and as a semi filter
@@ -381,7 +377,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
             .join(texts.withColumnsRenamed(Map("id" -> "a", "nt" -> "nt_a")), "a")
             .join(texts.withColumnsRenamed(Map("id" -> "b", "nt" -> "nt_b")), "b")
             .filter(lcs_length(col("nt_a"), col("nt_b")) >=
-              least(length(col("nt_a")), length(col("nt_b"))) * config.lcsMinFraction)
+              least(length(col("nt_a")), length(col("nt_b"))) * LcsMinFraction)
             .select("a", "b", "jaccard")
             .distinct()
           direct.union(rescued)
@@ -391,22 +387,19 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
 
   /** Stage 5 — components: union exact + verified edges and label them by
     * [[ConnectedComponents]] (union-find on the driver when the edge set
-    * fits, else large-star/small-star to fixpoint). Only the star path uses
-    * `maxCcIterations` and `ccDurableInterval`: every k-th star round is
-    * persisted through the StageStore (reliable storage), so a job killed
-    * mid-fixpoint fast-forwards to the last persisted round on resume —
-    * `localCheckpoint` alone is executor-local and would force a full redo
-    * (or a job failure) after an executor loss. 0 disables.
+    * fits, else large-star/small-star to fixpoint). On the star path every
+    * [[CcDurableInterval]]-th round is persisted through the StageStore
+    * (reliable storage), so a job killed mid-fixpoint fast-forwards to the
+    * last persisted round on resume — `localCheckpoint` alone is
+    * executor-local and would force a full redo (or a job failure) after an
+    * executor loss.
     */
   def components(exact: DataFrame, verified: DataFrame): DataFrame =
     store.getOrCompute("components") {
       val edges = exact.select("a", "b").union(verified.select("a", "b"))
-      ConnectedComponents.run(edges, config.maxCcIterations, ccDurable,
+      ConnectedComponents.run(edges, durable = Some((store, CcDurableInterval)),
         durablePrefix = "components_cc")
     }
-
-  private def ccDurable: Option[(StageStore, Int)] =
-    Option.when(config.ccDurableInterval > 0)((store, config.ccDurableInterval))
 
   /** Stage 6 — clusters: every page gets a cluster (singletons = own id);
     * representative selection mirrors the reference's preference chain
@@ -458,7 +451,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
   def simHashCandidates(sigs: DataFrame): DataFrame =
     store.getOrCompute("simhash_pairs") {
       SimHashDedup.nearDupPairs(
-        sigs.select("id", "simhash"), config.simHashMaxHamming,
+        sigs.select("id", "simhash"), SimHashDedup.MaxHamming,
         maxBucketSize = config.simHashMaxBucket,
         hotBucketAcc = Some(hotBuckets))
         .select("a", "b")
@@ -564,7 +557,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     *     semi-restricted to touched buckets, with the same skew ladder as
     *     the batch stage: full cross pairs for small buckets,
     *     chain-to-bucket-min above `maxBucketAllPairs` (O(delta) output),
-    *     drop + metric above `hugeBucketCutoff`; with
+    *     drop + metric above [[HugeBucketCutoff]]; with
     *     `useSimHashCandidates`, the SimHash source is mirrored the same
     *     way (delta×delta via the batch operator, delta×prior via the
     *     pruned SimHash state);
@@ -657,7 +650,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       signaturesChunkPlan(urlPreDedup(newPages).toDF())
         .join(priorSigs.select("id"), Seq("id"), "left_anti")
     }
-    if (config.verifyIdUniqueness && !store.marked(s"inc_${batch}_idcheck")) {
+    if (!store.marked(s"inc_${batch}_idcheck")) {
       val row = sigsNew.agg(count(lit(1)).as("n"), count_distinct(col("id")).as("d"))
         .collect()(0)
       if (row.getLong(0) != row.getLong(1)) {
@@ -727,7 +720,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       if (!config.useSimHashCandidates) None
       else Some(store.getOrComputePartitioned(s"inc_${batch}_sim_state") {
         SimHashDedup.tableRows(
-          sigsNew.select("id", "simhash"), config.simHashMaxHamming)
+          sigsNew.select("id", "simhash"), SimHashDedup.MaxHamming)
           .withColumn("pkey", pkeyOf(col("table"), col("key")))
       })
     val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
@@ -757,14 +750,14 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
           greatest(col("id"), col("oid")).as("b"))
       val chained = deltaBand
         .join(stats.filter(col("n") > config.maxBucketAllPairs &&
-          col("n") <= config.hugeBucketCutoff)
+          col("n") <= HugeBucketCutoff)
           .select(col("band"), col("bucket"), col("bmin")), Seq("band", "bucket"))
         .select(least(col("id"), col("bmin")).as("a"),
           greatest(col("id"), col("bmin")).as("b"))
         .filter(col("a") =!= col("b"))
       // no silent caps: surface dropped huge buckets (stats is already
       // aggregated — this probe job is tiny)
-      val nHuge = stats.filter(col("n") > config.hugeBucketCutoff).count()
+      val nHuge = stats.filter(col("n") > HugeBucketCutoff).count()
       if (nHuge > 0) droppedBuckets.add(nHuge)
       val lsh = within.union(smallCross).union(chained)
 
@@ -778,7 +771,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       val all =
         if (!config.useSimHashCandidates) lsh
         else {
-          val k = config.simHashMaxHamming
+          val k = SimHashDedup.MaxHamming
           val simWithin = SimHashDedup.nearDupPairs(
             sigsNew.select("id", "simhash"), k,
             maxBucketSize = config.simHashMaxBucket,
@@ -872,7 +865,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         .select(col("component").as("a"), col("id").as("b"))
         .filter(col("a") =!= col("b"))
       ConnectedComponents.run(subOld.union(newEdges),
-        config.maxCcIterations, ccDurable, durablePrefix = s"inc_${batch}_cc")
+        durable = Some((store, CcDurableInterval)), durablePrefix = s"inc_${batch}_cc")
         .select("id", "component")
     }
     // layer append (merge-on-read upsert): the re-solved rows, plus a
@@ -989,10 +982,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
   // older builds differ in their columns (some carry a `sketch` column no
   // reader selects), so layers are matched by name, never by position
   private def readBaseSignatures(): DataFrame =
-    if (config.resumeChunks == 1) store.read("signatures")
-    else (0 until config.resumeChunks)
-      .map(i => store.read(s"signatures_chunk$i"))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    signatureStages.map(store.read).reduce(_.unionByName(_, allowMissingColumns = true))
 
   private def priorSignatures(applied: Seq[String]): DataFrame =
     (readBaseSignatures() +: applied.map(b => store.read(s"inc_${b}_signatures")))
@@ -1200,7 +1190,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     if (config.useSimHashCandidates)
       ensureStateBase("sim", applied) {
         SimHashDedup.tableRows(
-          priorSigs.select("id", "simhash"), config.simHashMaxHamming)
+          priorSigs.select("id", "simhash"), SimHashDedup.MaxHamming)
           .withColumn("pkey", pkeyOf(col("table"), col("key")))
       }
   }
@@ -1332,11 +1322,20 @@ object DedupPipeline {
     */
   private[dedup] val IdSeed2: Long = 0x9E3779B97F4A7C15L
 
-  /** `DedupConfig` fields since removed, each with the default it had. A
-    * store whose fingerprint holds one of them at this value was computed
-    * exactly as the current code computes, so it stays resumable; any
-    * other stored value is refused (a sketch-decided store, for one, holds
-    * approximate `verified_edges`).
+  /** LSH buckets larger than this are dropped, not chained (counted in
+    * `droppedBuckets`): boilerplate the exact-hash path already links.
+    */
+  private[dedup] val HugeBucketCutoff: Long = 1000000L
+
+  /** Every k-th union-find star round is persisted (star path only). */
+  private[dedup] val CcDurableInterval: Int = 5
+
+  /** `DedupConfig` fields since removed (retired modes, and knobs folded
+    * into constants), each with the default it had. A store whose
+    * fingerprint holds one of them at this value was computed exactly as
+    * the current code computes, so it stays resumable; any other stored
+    * value is refused (a sketch-decided store, for one, holds approximate
+    * `verified_edges`).
     */
   private[dedup] val RetiredFieldDefaults: Map[String, String] = Map(
     "verifySketchBits" -> "None",
@@ -1346,5 +1345,13 @@ object DedupPipeline {
     "incSketchPrefilter" -> "true",
     "incPrefilterMargin" -> "0.35",
     "incPrefilterProbePairs" -> "4096",
-    "incPrefilterMinDrop" -> "0.15")
+    "incPrefilterMinDrop" -> "0.15",
+    "numHashes" -> "80",
+    "verifyIdUniqueness" -> "true",
+    "maxCcIterations" -> "50",
+    "ccDurableInterval" -> "5",
+    "lcsLowJaccard" -> "0.4",
+    "lcsMinFraction" -> "0.5",
+    "simHashMaxHamming" -> "3",
+    "hugeBucketCutoff" -> "1000000")
 }

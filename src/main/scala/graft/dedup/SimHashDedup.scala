@@ -36,6 +36,9 @@ import graft.functions.hamming64
   */
 object SimHashDedup {
 
+  /** The pipeline's SimHash near-dup distance: Hamming ≤ 3 of 64 bits. */
+  val MaxHamming: Int = 3
+
   /** The C(B,3) block-combination tables for 64-bit fingerprints split into
     * B = maxHamming+3 blocks. Returns (tableId, key Column) pairs; the key
     * concatenates the 3 chosen blocks' bits (≥30 bits for maxHamming ≤ 4).
@@ -84,7 +87,7 @@ object SimHashDedup {
     * `hotBucketAcc`: optional accumulator counting buckets that fell back
     * to chain emission (the skew-policy activation metric).
     */
-  def nearDupPairs(sigs: DataFrame, maxHamming: Int = 3,
+  def nearDupPairs(sigs: DataFrame, maxHamming: Int = MaxHamming,
       maxBucketSize: Int = 10000,
       hotBucketAcc: Option[LongAccumulator] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 4,

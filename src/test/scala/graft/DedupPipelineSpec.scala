@@ -287,6 +287,17 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(key(new DedupPipeline(spark, DedupConfig(), store).run(pages)) === fresh)
   }
 
+  test("signature stage names: one owner for chunked and single-stage stores") {
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 40, seed = 3))
+    Seq(1, 4).foreach { c =>
+      val store = freshStore()
+      val pipe = new DedupPipeline(spark, DedupConfig(resumeChunks = c), store)
+      pipe.run(pages).count()
+      assert(store.stages("signatures").sorted === pipe.signatureStages.sorted)
+      assert(pipe.signatureStages.size === c)
+    }
+  }
+
   test("signatures plan: narrow (no Exchange), one MinHash pass") {
     val pipe = new DedupPipeline(spark, DedupConfig(), freshStore())
     val df = pipe.signaturesChunkPlan(
@@ -298,6 +309,66 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), plan)
     // the MinHash pass is evaluated once, not inlined into several consumers
     assert("minhashbands".r.findAllIn(plan.toLowerCase).length === 1, plan)
+  }
+
+  test("stage plans: no Window or cartesian, 2 candidate shuffles, shuffled-hash verify") {
+    // Each stage's physical plan is checked in isolation (inputs pinned via
+    // localCheckpoint so lineage doesn't leak upstream operators into the
+    // stage under check). AQE prints Final AND Initial plans — count
+    // operators on the final section only.
+    def finalPlan(df: DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
+    def shuffleExchanges(p: String): Int =
+      "Exchange hashpartitioning".r.findAllIn(p).length
+
+    val pipe = new DedupPipeline(spark, DedupConfig(), freshStore())
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 2000))
+    val sigs = pipe.signaturesChunkPlan(pages.toDF()).localCheckpoint(true)
+
+    // Stage 2: partial-agg min + join back — a Window here would funnel a
+    // hot content_hash into one task.
+    val exactPlan = finalPlan(pipe.exactEdgesPlan(sigs))
+    assert(!exactPlan.contains("Window") && exactPlan.contains("partial_min"), exactPlan)
+
+    val exact = pipe.exactEdgesPlan(sigs).localCheckpoint(true)
+
+    // Stage 3: one repartition shuffle for the bucket-sorted emission pass
+    // + one for the final pair distinct; the exact-edge anti join
+    // broadcasts at this scale. No Window, no cartesian.
+    val candPlan = finalPlan(pipe.candidatePairsPlan(sigs, exact))
+    assert(!candPlan.contains("Window") && !candPlan.contains("CartesianProduct"), candPlan)
+    assert(shuffleExchanges(candPlan) === 2, candPlan)
+
+    val pairs = pipe.candidatePairsPlan(sigs, exact).localCheckpoint(true)
+
+    // Stage 4: both joins back to the signature table must be shuffled
+    // hash joins (co-partition on the id, build on the slim pair side) —
+    // never sort-merge (pointless sort of shingle arrays) and never a
+    // broadcast of an intermediate carrying shingles through the driver.
+    val verPlan = finalPlan(pipe.verifiedEdgesPlan(sigs, pairs))
+    assert("ShuffledHashJoin".r.findAllIn(verPlan).length == 2 &&
+      !verPlan.contains("SortMergeJoin") && !verPlan.contains("BroadcastHashJoin"), verPlan)
+
+    // Stage 6: min_by partial agg + join back — a row_number Window here
+    // would sort a monster cluster in one task.
+    val comps = exact.select(col("b").as("id"), col("a").as("component"))
+      .localCheckpoint(true)
+    val cluPlan = finalPlan(pipe.clustersPlan(sigs, comps))
+    assert(!cluPlan.contains("Window") && cluPlan.contains("min_by"), cluPlan)
+
+    // (the incremental band state's partition-pruned scan is pinned by
+    // "incremental state tables")
+    // the incremental verify runs the same plan over a pair-semi-filtered
+    // signature side: the two verify joins must stay shuffled-hash (the
+    // semi filter itself may broadcast — that is the point of it)
+    val pairIds = pairs.select(col("a").as("id"))
+      .union(pairs.select(col("b").as("id"))).distinct()
+    val verIncPlan = finalPlan(pipe.verifiedEdgesPlan(
+      sigs.join(pairIds, Seq("id"), "left_semi"), pairs))
+    assert("ShuffledHashJoin".r.findAllIn(verIncPlan).length == 2 &&
+      !verIncPlan.contains("SortMergeJoin"), verIncPlan)
   }
 
   test("simhash candidate source: planted families still recovered; precision holds") {
@@ -473,12 +544,17 @@ class DedupPipelineSpec extends AnyFunSuite {
     }
     assert(exOff.getMessage.contains("simHashMaxBucket"))
 
-    // retired fields (the sketch-decide mode's and the incremental sketch
-    // prefilter's) stored at their old defaults: those stages were
-    // computed exactly as today, so the store resumes AND takes a delta
+    // retired fields (the sketch-decide mode's, the incremental sketch
+    // prefilter's, and the knobs folded into constants — a fingerprint as
+    // the 23-field config wrote it) stored at their old defaults: those
+    // stages were computed exactly as today, so the store resumes AND
+    // takes a delta
     val retiredAtDefault = full + "\nverifySketchBits=None\nsketchNumHashes=256" +
       "\nsketchEps=0.08\nemitSketch=true\nincSketchPrefilter=true" +
-      "\nincPrefilterMargin=0.35\nincPrefilterProbePairs=4096\nincPrefilterMinDrop=0.15"
+      "\nincPrefilterMargin=0.35\nincPrefilterProbePairs=4096\nincPrefilterMinDrop=0.15" +
+      "\nnumHashes=80\nverifyIdUniqueness=true\nmaxCcIterations=50" +
+      "\nccDurableInterval=5\nlcsLowJaccard=0.4\nlcsMinFraction=0.5" +
+      "\nsimHashMaxHamming=3\nhugeBucketCutoff=1000000"
     java.nio.file.Files.writeString(fp, retiredAtDefault)
     assert(new DedupPipeline(spark, DedupConfig(), store)
       .run(pages).count() === 2L)
@@ -502,6 +578,17 @@ class DedupPipelineSpec extends AnyFunSuite {
     }
     assert(exMargin.getMessage.contains("incPrefilterMargin") &&
       exMargin.getMessage.contains("retired"))
+    // … and so is a folded knob off its old default: an unchecked store
+    // may hold duplicate ids, a small cutoff drops buckets today's code keeps
+    Seq("verifyIdUniqueness=true" -> "verifyIdUniqueness=false",
+        "hugeBucketCutoff=1000000" -> "hugeBucketCutoff=10").foreach { case (from, to) =>
+      java.nio.file.Files.writeString(fp, retiredAtDefault.replace(from, to))
+      val ex = intercept[IllegalArgumentException] {
+        new DedupPipeline(spark, DedupConfig(), store).run(pages).count()
+      }
+      val field = to.takeWhile(_ != '=')
+      assert(ex.getMessage.contains(s"$field: retired field"), ex.getMessage)
+    }
 
     // a stored field the current config no longer knows cannot be verified
     java.nio.file.Files.writeString(fp, full + "\nretiredKnob=3")
