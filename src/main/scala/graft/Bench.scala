@@ -26,15 +26,6 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   *                         (default 6)
   */
 object Bench {
-  /** Env knob `name` as an integer ≥ 1 (`default` when unset); anything
-    * else fails before the session starts, not mid-run.
-    */
-  private def positiveIntEnv(name: String, default: Int): Int = {
-    val raw = sys.env.getOrElse(name, default.toString)
-    raw.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-      s"$name must be an integer >= 1, got '$raw'"))
-  }
-
   /** The total line's head. A crashed entry (-1) is left out of `value` and
     * named in `failed`, so a total over fewer entries never looks faster.
     */
@@ -48,10 +39,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val families = sys.env.getOrElse("SPARK_GRAFT_FAMILIES", "400000").toLong
-    val abRounds = positiveIntEnv("SPARK_GRAFT_AB_ROUNDS", 3)
-    val windowTries = positiveIntEnv("SPARK_GRAFT_WINDOW_TRIES", 6)
+    val cpus = EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", 32)
+    val families = EnvKnobs.positiveInt("SPARK_GRAFT_FAMILIES", 400000).toLong
+    val abRounds = EnvKnobs.positiveInt("SPARK_GRAFT_AB_ROUNDS", 3)
+    val windowTries = EnvKnobs.positiveInt("SPARK_GRAFT_WINDOW_TRIES", 6)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -80,7 +71,7 @@ object Bench {
     }
   }
 
-  private def measure(spark: SparkSession, sfDir: String, cpus: String,
+  private def measure(spark: SparkSession, sfDir: String, cpus: Int,
       families: Long, abRounds: Int, windowTries: Int,
       tempStores: scala.collection.mutable.ArrayBuffer[StageStore]): Unit = {
     def time(thunk: => Unit): Double = {

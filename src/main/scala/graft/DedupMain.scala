@@ -29,15 +29,16 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   * at --inc-offset (default 10⁹ — far past any base family range, so the
   * delta's url space is disjoint).
   *
-  * An unknown flag, a flag without a value, or a value of the wrong type
-  * (a number or true/false where the flag expects one) is refused with a
-  * message naming the flag, before Spark starts.
+  * An unknown flag, a flag without a value, a value of the wrong type
+  * (a number or true/false where the flag expects one) or `--cores` below
+  * 1 is refused with a message naming the flag, before Spark starts.
+  * Without `--cores`, `SPARK_GRAFT_CPUS` (validated the same way) or 8.
   */
 object DedupMain {
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
     val checkpointDir = opts("checkpoint")
-    val cores = opts.getOrElse("cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val cores = opts.get("cores").fold(EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", 8))(_.toInt)
 
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
@@ -45,7 +46,7 @@ object DedupMain {
       // 4 tasks per core: the candidate stage's big repartition+sort then
       // works on data-sized chunks (no low-core spill) and stragglers
       // load-balance; AQE coalesces where fewer partitions suffice
-      .config("spark.sql.shuffle.partitions", cores.toInt * 4)
+      .config("spark.sql.shuffle.partitions", cores * 4)
       .config("spark.sql.adaptive.enabled", "true")
       // verify/anti-join small sides (pair lists, exact-dup ids) fit well
       // under 64 MB at sandbox scale → broadcast joins keep the big
@@ -204,6 +205,7 @@ object DedupMain {
       require(!kv.contains(name), s"flag $flag given twice")
       kv(name) = pair(1)
     }
+    kv.get("cores").foreach(c => require(c.toInt >= 1, s"flag --cores must be >= 1, got '$c'"))
     kv.toMap
   }
 }

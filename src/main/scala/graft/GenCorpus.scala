@@ -17,7 +17,7 @@ object GenCorpus {
     val nFamilies = if (args.length > 1) args(1).toLong else 100000L
     val hot = if (args.length > 2) args(2).toInt else 0
     val seed = if (args.length > 3) args(3).toLong else 42L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", 32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -12,7 +12,7 @@ object Verify {
       case Seq(_, _, "--only", names) => Some(names.split(",").toSet)
       case _ => None
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -21,10 +21,11 @@ import graft.functions.{jaccard_sorted, minhash_bands, truncate_hashes32, word_s
   * Scale shape: each side is scanned once for signatures (narrow,
   * codegen'd Catalyst expressions); candidates come from an EQUI-join of
   * left band rows against right band rows on (band, bucket) under the
-  * pipeline's skew ladder, priced off a partial-agg'd right-bucket stats
-  * table — full cross pairs for small buckets, chain-to-right-bucket-min
-  * above `maxBucketAllPairs` (output linear in left rows), drop + metric
-  * above `hugeBucketCutoff`; verification fetches shingles for
+  * skew ladder the incremental pipeline also uses
+  * ([[PairEmission.crossBucketPairs]], right side as the build side) —
+  * full cross pairs for small buckets, chain-to-right-bucket-min above
+  * `maxBucketAllPairs` (output linear in left rows), drop + metric above
+  * `hugeBucketCutoff`; verification fetches shingles for
   * PAIR-TOUCHED ids only (left-semi first) through shuffled-hash joins.
   * No window functions, no cartesian products, no UDFs.
   *
@@ -72,28 +73,12 @@ object CrossCorpus {
     val lb = bandRows(sigL)
     val rb = bandRows(sigR)
 
-    // right-bucket stats: one partial-agg'd pass over right band rows —
-    // the skew ladder prices every bucket BEFORE any pair is emitted
-    val stats = rb.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("n"), min("id").as("rmin"))
-      .localCheckpoint(true)
-
-    val smallCross = lb
-      .join(stats.filter(col("n") <= cfg.maxBucketAllPairs)
-        .select("band", "bucket"), Seq("band", "bucket"), "left_semi")
-      .join(rb.withColumnRenamed("id", "rid"), Seq("band", "bucket"))
-      .select(col("id").as("a"), col("rid").as("b"))
-    val chained = lb
-      .join(stats.filter(col("n") > cfg.maxBucketAllPairs &&
-        col("n") <= cfg.hugeBucketCutoff)
-        .select("band", "bucket", "rmin"), Seq("band", "bucket"))
-      .select(col("id").as("a"), col("rmin").as("b"))
-    // no silent caps: dropped huge buckets are counted (stats is tiny)
-    droppedBuckets.foreach { acc =>
-      val nHuge = stats.filter(col("n") > cfg.hugeBucketCutoff).count()
-      if (nHuge > 0) acc.add(nHuge)
-    }
-    val cand = smallCross.union(chained).distinct()
+    // the pipeline's skew ladder, priced off the right side's bucket stats
+    // BEFORE any pair is emitted
+    val cand = PairEmission.crossBucketPairs(lb, rb, Seq("band", "bucket"),
+      cfg.maxBucketAllPairs, cfg.hugeBucketCutoff, droppedBuckets)
+      .select(col("id").as("a"), col("oid").as("b"))
+      .distinct()
 
     // verification: shingles for pair-touched ids only, shuffled-hash
     // joins (shingle arrays never sort-merge or broadcast)

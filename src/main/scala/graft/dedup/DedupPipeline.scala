@@ -108,11 +108,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * stage consumes, which cuts the stage's write volume (the dominant cost
     * at 10⁵ rows/executor-thread) by ~4×.
     */
-  def signatures(pages: Dataset[Page]): DataFrame = {
-    val c = config.resumeChunks
-    // stages to compute this run; empty on a clean resume
-    val missing = signatureStages.filterNot(store.has)
-    val out =
+  def signatures(pages: Dataset[Page]): DataFrame =
+    withUniqueIds("input", "signatures_idcheck", signatureStages) { missing =>
+      val c = config.resumeChunks
       if (c == 1) store.getOrCompute("signatures")(signaturesChunkPlan(pages.toDF()))
       else {
         // one input scan for all chunk computations: cache the pages only if
@@ -137,31 +135,39 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         // by name: chunks written by an older build may carry extra columns
         parts.reduce(_.unionByName(_, allowMissingColumns = true))
       }
-    // Doc ids are xxhash64(url, warc_ts): duplicate natural keys (and the
-    // all-null-key case, where xxhash64 skips null inputs and every such row
-    // shares one id) silently merge distinct documents. Assert uniqueness
-    // with one column-pruned agg over the checkpointed stage — cheap next to
-    // the stage write. The pass is recorded as a durable MARKER, not
-    // inferred from chunk completeness: a crash between the last chunk
-    // commit and this check would otherwise leave every manifest present,
-    // and the rerun (nothing missing) would silently adopt unchecked —
-    // possibly duplicate-id — signatures.
-    if (missing.nonEmpty || !store.marked("signatures_idcheck")) {
+    }
+
+  /** `compute(missing)` — `missing` being the `stages` not yet
+    * checkpointed — with its doc ids asserted unique. Doc ids are
+    * xxhash64(url, warc_ts): duplicate natural keys (and the all-null-key
+    * case, where xxhash64 skips null inputs and every such row shares one
+    * id) silently merge distinct documents. One column-pruned agg over the
+    * checkpointed result checks them — cheap next to the stage write. The
+    * pass is recorded as the durable `marker`, not inferred from stage
+    * completeness: a crash between the last commit and the check would
+    * otherwise leave every manifest present, and the rerun would silently
+    * adopt unchecked signatures. So the check runs when the marker is
+    * absent or any stage was recomputed, and on failure the stages and the
+    * marker are deleted BEFORE throwing, so a rerun recomputes and
+    * re-checks.
+    */
+  private def withUniqueIds(what: String, marker: String, stages: Seq[String])
+      (compute: Seq[String] => DataFrame): DataFrame = {
+    val missing = stages.filterNot(store.has)
+    val out = compute(missing)
+    if (missing.nonEmpty || !store.marked(marker)) {
       val row = out.agg(count(lit(1)).as("n"), count_distinct(col("id")).as("d"))
         .collect()(0)
       if (row.getLong(0) != row.getLong(1)) {
-        // Delete the just-written signature checkpoints BEFORE throwing:
-        // leaving them on disk would let a rerun see every chunk present,
-        // skip this check, and silently adopt the duplicate-id signatures.
-        signatureStages.foreach(store.invalidate)
-        store.unmark("signatures_idcheck")
+        stages.foreach(store.invalidate)
+        store.unmark(marker)
         throw new IllegalArgumentException(
-          s"doc ids are not unique: ${row.getLong(0)} rows but ${row.getLong(1)} " +
-            "distinct hash(url, warc_ts) ids — dedupe the input on " +
-            "(url, warc_ts) or switch to idBits=128 (signature checkpoints " +
-            "were removed so a rerun re-checks)")
+          s"$what doc ids are not unique: ${row.getLong(0)} rows but " +
+            s"${row.getLong(1)} distinct hash(url, warc_ts) ids — dedupe the " +
+            s"$what on (url, warc_ts) or switch to idBits=128 (signature " +
+            "checkpoints were removed so a rerun re-checks)")
       }
-      store.mark("signatures_idcheck")
+      store.mark(marker)
     }
     out
   }
@@ -554,8 +560,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     *         when the touched keys hash into every partition;
     *   - LSH candidates join the delta's band rows against the band STATE
     *     pruned to delta-touched partitions (directory-level pruning) and
-    *     semi-restricted to touched buckets, with the same skew ladder as
-    *     the batch stage: full cross pairs for small buckets,
+    *     semi-restricted to touched buckets, under the cross-bucket skew
+    *     ladder [[PairEmission.crossBucketPairs]] (shared with
+    *     [[CrossCorpus]]): full cross pairs for small buckets,
     *     chain-to-bucket-min above `maxBucketAllPairs` (O(delta) output),
     *     drop + metric above [[HugeBucketCutoff]]; with
     *     `useSimHashCandidates`, the SimHash source is mirrored the same
@@ -608,7 +615,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * (appended only after the batch's last stage commits); re-applying an
     * already-logged batch returns its checkpointed result, and stages from
     * a different half-applied batch are refused rather than silently
-    * ignored.
+    * ignored. A store with no completed [[run]] is refused before any
+    * state is written, as is one whose batches were applied under the
+    * layout that predates the state tables.
     */
   def incremental(batch: String, newPages: Dataset[Page],
       allPages: Option[Dataset[Page]] = None): DataFrame = {
@@ -616,11 +625,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       s"batch id '$batch' must match [A-Za-z0-9-]+ (stage names are '_'-delimited)")
     assertCheckpointConfig()
     val applied = incBatches
+    requireStateSource(applied)
     if (applied.contains(batch)) {
-      // batches applied under the pre-state-table layout kept a full
-      // clusters stage; state-table batches return the layered view
-      if (store.has(s"inc_${batch}_clusters"))
-        return store.read(s"inc_${batch}_clusters")
       val upTo = applied.indexOf(batch) + 1
       // the as-of-batch view exists only while the base layer covers no
       // MORE than this batch: once compaction folded later batches in,
@@ -640,27 +646,20 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       s"checkpoint dir ${store.root} holds stages from unapplied batch(es) " +
         s"${stray.mkString(", ")} — finish or invalidate them before starting '$batch'")
 
-    val priorSigs = priorSignatures(applied)
-    ensureStateTables(applied, priorSigs)
+    val priorSigs = (readBaseSignatures() +: applied.map(b => store.read(s"inc_${b}_signatures")))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    ensureStateTables(applied)
 
     // 1 — delta signatures (ids already present are the same capture:
     // drop); the optional canonical-url pre-dedup applies within the
     // delta, like the batch path (see urlPreDedup's scope note)
-    val sigsNew = store.getOrCompute(s"inc_${batch}_signatures") {
-      signaturesChunkPlan(urlPreDedup(newPages).toDF())
-        .join(priorSigs.select("id"), Seq("id"), "left_anti")
-    }
-    if (!store.marked(s"inc_${batch}_idcheck")) {
-      val row = sigsNew.agg(count(lit(1)).as("n"), count_distinct(col("id")).as("d"))
-        .collect()(0)
-      if (row.getLong(0) != row.getLong(1)) {
-        store.invalidate(s"inc_${batch}_signatures")
-        throw new IllegalArgumentException(
-          s"batch '$batch' doc ids are not unique: ${row.getLong(0)} rows but " +
-            s"${row.getLong(1)} distinct hash(url, warc_ts) ids — dedupe the " +
-            "batch on (url, warc_ts) or switch to idBits=128")
+    val sigsStage = s"inc_${batch}_signatures"
+    val sigsNew = withUniqueIds(s"batch '$batch'", s"inc_${batch}_idcheck",
+        Seq(sigsStage)) { _ =>
+      store.getOrCompute(sigsStage) {
+        signaturesChunkPlan(urlPreDedup(newPages).toDF())
+          .join(priorSigs.select("id"), Seq("id"), "left_anti")
       }
-      store.mark(s"inc_${batch}_idcheck")
     }
 
     // 2 — exact path via the (content_hash → min id) state: a pruned
@@ -672,12 +671,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // persist so the pruned read runs once, not per consumer.
     val deltaMin = sigsNew.groupBy("content_hash").agg(min("id").as("dm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touchedHashPk = deltaMin
-      .select(pkeyOf(col("content_hash")).as("pkey")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val priorTouchedHash = resolveState(
-      stateView("hash_min", applied, Some(touchedHashPk), appendOnly = false),
-      Seq("content_hash"))
+    val touchedHashPk = touchedPkeys("hash_min", deltaMin)
+    val priorTouchedHash = resolveState("hash_min",
+      stateView("hash_min", applied, Some(touchedHashPk)))
       .select("content_hash", "m")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the batch's current min per delta hash — prior min if smaller
@@ -686,10 +682,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         least(col("dm"), coalesce(col("m"), col("dm"))).as("cm"),
         col("m").as("pm"), col("dm"))
     store.getOrComputePartitioned(s"inc_${batch}_hash_min_state") {
-      curMin.filter(col("pm").isNull || col("cm") < col("pm"))
-        .select(col("content_hash"), col("cm").as("m"))
-        .withColumn("pkey", pkeyOf(col("content_hash")))
-        .withColumn(DelCol, lit(false))
+      layerRows("hash_min", curMin.filter(col("pm").isNull || col("cm") < col("pm"))
+        .select(col("content_hash"), col("cm").as("m")))
     }
     val exactInc = store.getOrCompute(s"inc_${batch}_exact_edges") {
       // delta docs to their (possibly old) group min …
@@ -707,21 +701,19 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // 3 — LSH candidates: delta×delta via the batch plan, delta×prior via
     //     the pkey-partitioned band STATE (appended per batch at ingest,
     //     never re-derived from the corpus), pruned to delta-touched
-    //     partitions, with the same skew ladder.
+    //     partitions, under the shared cross-bucket skew ladder.
     // The delta's band rows are APPENDED to the state table as their own
     // stage FIRST — outside the candidate thunk, so a resume that skips
     // the (complete) candidate stage still guarantees the append exists
     // for every later batch.
     val bandStateStage = store.getOrComputePartitioned(s"inc_${batch}_band_state") {
-      bandRowsOf(sigsNew, exactInc)
-        .withColumn("pkey", pkeyOf(col("band"), col("bucket")))
+      layerRows("band", bandRowsOf(sigsNew, exactInc))
     }
     val deltaSimStage =
       if (!config.useSimHashCandidates) None
       else Some(store.getOrComputePartitioned(s"inc_${batch}_sim_state") {
-        SimHashDedup.tableRows(
-          sigsNew.select("id", "simhash"), SimHashDedup.MaxHamming)
-          .withColumn("pkey", pkeyOf(col("table"), col("key")))
+        layerRows("sim",
+          SimHashDedup.tableRows(sigsNew.select("id", "simhash"), SimHashDedup.MaxHamming))
       })
     val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
       val within = candidatePairsPlan(sigsNew, exactInc)
@@ -732,34 +724,18 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       // (prior band rows never shuffle); a corpus-sized delta would OOM the
       // driver under a forced broadcast, and shuffling is then correct
       val touchedBuckets = deltaBand.select("band", "bucket").distinct()
-      val touchedBandPk = deltaBand
-        .select(pkeyOf(col("band"), col("bucket")).as("pkey")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val oldBand = stateView("band", applied, Some(touchedBandPk), appendOnly = true)
+      val touchedBandPk = touchedPkeys("band", deltaBand)
+      val oldBand = stateView("band", applied, Some(touchedBandPk))
         .join(touchedBuckets, Seq("band", "bucket"), "left_semi")
         .select("id", "band", "bucket")
         .localCheckpoint(true)
-      val stats = oldBand.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("n"), min("id").as("bmin"))
-        .localCheckpoint(true)
-      val smallCross = deltaBand
-        .join(stats.filter(col("n") <= config.maxBucketAllPairs)
-          .select("band", "bucket"), Seq("band", "bucket"), "left_semi")
-        .join(oldBand.withColumnRenamed("id", "oid"), Seq("band", "bucket"))
+      val cross = PairEmission.crossBucketPairs(deltaBand, oldBand,
+        Seq("band", "bucket"), config.maxBucketAllPairs, HugeBucketCutoff,
+        Some(droppedBuckets))
         .select(least(col("id"), col("oid")).as("a"),
           greatest(col("id"), col("oid")).as("b"))
-      val chained = deltaBand
-        .join(stats.filter(col("n") > config.maxBucketAllPairs &&
-          col("n") <= HugeBucketCutoff)
-          .select(col("band"), col("bucket"), col("bmin")), Seq("band", "bucket"))
-        .select(least(col("id"), col("bmin")).as("a"),
-          greatest(col("id"), col("bmin")).as("b"))
         .filter(col("a") =!= col("b"))
-      // no silent caps: surface dropped huge buckets (stats is already
-      // aggregated — this probe job is tiny)
-      val nHuge = stats.filter(col("n") > HugeBucketCutoff).count()
-      if (nHuge > 0) droppedBuckets.add(nHuge)
-      val lsh = within.union(smallCross).union(chained)
+      val lsh = within.union(cross)
 
       // optional SimHash candidate source, mirrored incrementally:
       // delta×delta via the batch operator, delta×prior via a Manku-table
@@ -781,10 +757,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
           // at ingest — never tableRows(corpus) re-derivation)
           val deltaSim = deltaSimStage.get
             .select("table", "key", "simhash", "id").localCheckpoint(true)
-          val touchedSimPk = deltaSim
-            .select(pkeyOf(col("table"), col("key")).as("pkey")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val priorSim = stateView("sim", applied, Some(touchedSimPk), appendOnly = true)
+          val touchedSimPk = touchedPkeys("sim", deltaSim)
+          val priorSim = stateView("sim", applied, Some(touchedSimPk))
             .select("table", "key", "simhash", "id")
             .join(deltaSim.select("table", "key").distinct(),
               Seq("table", "key"), "left_semi")
@@ -841,22 +815,18 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // latest-wins resolution runs on the delta-sized survivors only. The
     // component-hash layout cannot prune an id lookup; production puts a
     // bloom/id index on the state files.
-    val compRaw = stateView("comp", applied, None, appendOnly = false)
-    val priorOfEdge = resolveState(
-      compRaw.join(edgeIds, Seq("id"), "left_semi"), Seq("id"))
+    val priorOfEdge = resolveState("comp",
+      stateView("comp", applied, None).join(edgeIds, Seq("id"), "left_semi"))
     val touched = edgeIds
       .join(priorOfEdge.select("id", "component"), Seq("id"), "left")
       .select(coalesce(col("component"), col("id")).as("component")).distinct()
       .localCheckpoint(true)
-    val touchedCompPk = touched
-      .select(pkeyOf(col("component")).as("pkey")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val touchedCompPk = touchedPkeys("comp", touched)
     // the touched components' CURRENT member rows: a partition-pruned scan
     // + latest-wins resolve over the pruned rows (stale rows from earlier
     // moves lose to their tombstones, see resolveState)
-    val oldMembers = resolveState(
-      stateView("comp", applied, Some(touchedCompPk), appendOnly = false),
-      Seq("id"))
+    val oldMembers = resolveState("comp",
+      stateView("comp", applied, Some(touchedCompPk)))
       .join(touched, Seq("component"), "left_semi")
       .select("id", "component")
       .localCheckpoint(true)
@@ -873,28 +843,17 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     // hence state partition — changed. Write volume is O(touched members
     // + delta); untouched rows are never read or copied.
     store.getOrComputePartitioned(s"inc_${batch}_comp_state") {
-      val live = subStage.select("id", "component")
-        .withColumn("pkey", pkeyOf(col("component")))
-        .withColumn(DelCol, lit(false))
-      val tombs = oldMembers.withColumnRenamed("component", "oc")
-        .join(subStage.select(col("id"), col("component").as("nc")), Seq("id"))
-        .filter(col("oc") =!= col("nc"))
-        .select(col("id"), col("oc").as("component"))
-        .withColumn("pkey", pkeyOf(col("component")))
-        .withColumn(DelCol, lit(true))
-      live.unionByName(tombs)
+      upsertLayer("comp", subStage.select("id", "component"), oldMembers)
     }
 
     // 6 — clusters: recompute rows only for touched clusters + the delta;
     // append only those rows (+ tombstones for ids whose cluster moved)
     store.getOrComputePartitioned(s"inc_${batch}_cluster_state") {
       val touchedCl = touched.withColumnRenamed("component", "cluster_id")
-      val cols = Seq("url", "cluster_id", "is_representative", "id", "source", "lang")
-      val oldRows = resolveState(
-        stateView("cluster", applied, Some(touchedCompPk), appendOnly = false),
-        Seq("id"))
+      val oldRows = resolveState("cluster",
+        stateView("cluster", applied, Some(touchedCompPk)))
         .join(touchedCl, Seq("cluster_id"), "left_semi")
-        .select(cols.map(col): _*)
+        .select(ClusterCols.map(col): _*)
         .localCheckpoint(true)
       val affectedIds = oldRows.select("id").union(sigsNew.select("id")).distinct()
       val affectedSigs = allSigs.join(affectedIds, Seq("id"), "left_semi")
@@ -904,19 +863,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       // the full mapping
       val affectedComps = subStage.join(affectedIds, Seq("id"), "left_semi")
       val newRows = clustersPlan(affectedSigs, affectedComps)
-        .select(cols.map(col): _*).localCheckpoint(true)
-      val live = newRows
-        .withColumn("pkey", pkeyOf(col("cluster_id")))
-        .withColumn(DelCol, lit(false))
-      // tombstone payload = the superseded row (values are dead weight —
-      // resolution drops the row; only (id, old pkey, newest seq) matter)
-      val tombs = oldRows
-        .join(newRows.select(col("id"), col("cluster_id").as("_nc")), Seq("id"))
-        .filter(col("cluster_id") =!= col("_nc"))
-        .select(cols.map(col): _*)
-        .withColumn("pkey", pkeyOf(col("cluster_id")))
-        .withColumn(DelCol, lit(true))
-      live.unionByName(tombs)
+        .select(ClusterCols.map(col): _*).localCheckpoint(true)
+      upsertLayer("cluster", newRows, oldRows)
     }
     appendIncLog(batch)
     priorTouchedHash.unpersist(blocking = false)
@@ -937,10 +885,11 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
   def incrementalClusters(): DataFrame = {
     assertCheckpointConfig()
     val applied = incBatches
+    requireStateSource(applied)
     // a base-run-only store has a completed `clusters` stage but no adopted
-    // state tables yet — adopt lazily (same one-time migration incremental()
-    // performs) instead of failing on the missing base layer
-    ensureStateTables(applied, priorSignatures(applied))
+    // state tables yet — adopt them (as incremental() does) instead of
+    // failing on the missing base layer
+    ensureStateTables(applied)
     currentClusters(applied)
   }
 
@@ -948,9 +897,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * layer plus every applied batch's upsert layer.
     */
   private def currentClusters(appliedNow: Seq[String]): DataFrame =
-    resolveState(stateView("cluster", appliedNow, None, appendOnly = false),
-      Seq("id"))
-      .select("url", "cluster_id", "is_representative", "id", "source", "lang")
+    resolveState("cluster", stateView("cluster", appliedNow, None))
+      .select(ClusterCols.map(col): _*)
 
   /** Batches applied so far, in application order (append-only log). */
   private[graft] def incBatches: Seq[String] = {
@@ -984,20 +932,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
   private def readBaseSignatures(): DataFrame =
     signatureStages.map(store.read).reduce(_.unionByName(_, allowMissingColumns = true))
 
-  private def priorSignatures(applied: Seq[String]): DataFrame =
-    (readBaseSignatures() +: applied.map(b => store.read(s"inc_${b}_signatures")))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-
   // ──────────────── pkey-partitioned incremental state tables ────────────────
   //
   // Five state tables back the incremental mode, each a set of StageStore
-  // stages partitioned by `pkey = hash(state key) mod statePartitions`
-  // (production: Iceberg bucket-transform partitions):
-  //
-  //   band (append-only, key (band, bucket))  · sim (append-only,
-  //   key (table, key)) · hash_min / comp / cluster (UPSERT tables,
-  //   resolution keys content_hash / id / id, partitioned by
-  //   content_hash / component / cluster_id)
+  // stages partitioned by `pkey = hash(partition columns) mod
+  // statePartitions` (production: Iceberg bucket-transform partitions),
+  // declared by [[PartitionCols]]: band and sim are append-only, hash_min,
+  // comp and cluster are UPSERT tables ([[UpsertKeys]]).
   //
   // Append-only tables: each batch appends one layer of new rows; the
   // current view is the pruned union. Upsert tables are MERGE-ON-READ
@@ -1015,14 +956,55 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
   private val SeqCol = "_seq"
   private val DelCol = "_del"
 
+  /** The cluster table's columns, in the `clusters` stage's order. */
+  private val ClusterCols =
+    Seq("url", "cluster_id", "is_representative", "id", "source", "lang")
+
+  /** Each state table's partition columns. */
+  private val PartitionCols: Map[String, Seq[String]] = Map(
+    "band" -> Seq("band", "bucket"), "sim" -> Seq("table", "key"),
+    "hash_min" -> Seq("content_hash"), "comp" -> Seq("component"),
+    "cluster" -> Seq("cluster_id"))
+
   /** Upsert tables and their latest-wins resolution keys; absent = append-only. */
   private val UpsertKeys: Map[String, Seq[String]] = Map(
     "hash_min" -> Seq("content_hash"),
     "comp" -> Seq("id"),
     "cluster" -> Seq("id"))
 
-  private def pkeyOf(cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
-    pmod(xxhash64(cols: _*), lit(config.statePartitions)).cast("int")
+  /** The state partition of a row of table `name`. */
+  private def pkeyOf(name: String): org.apache.spark.sql.Column =
+    pmod(xxhash64(PartitionCols(name).map(col): _*), lit(config.statePartitions)).cast("int")
+
+  /** The distinct partitions of table `name` that `df`'s rows hash into —
+    * one small driver collect, the prune list of a [[stateView]] read.
+    */
+  private def touchedPkeys(name: String, df: DataFrame): Seq[Int] =
+    df.select(pkeyOf(name).as("pkey")).distinct().collect().map(_.getInt(0)).toSeq
+
+  /** `rows` as live rows of a layer of table `name`: `pkey` attached, and
+    * `_del = false` on an upsert table.
+    */
+  private def layerRows(name: String, rows: DataFrame): DataFrame = {
+    val keyed = rows.withColumn("pkey", pkeyOf(name))
+    if (UpsertKeys.contains(name)) keyed.withColumn(DelCol, lit(false)) else keyed
+  }
+
+  /** One layer of id-keyed upsert table `name`: the `fresh` rows live, plus
+    * a tombstone at the OLD partition for every id of `old` whose
+    * partition column changed. The tombstone payload is the superseded
+    * row: resolution drops it, so only (id, old pkey, newest seq) matter.
+    */
+  private def upsertLayer(name: String, fresh: DataFrame, old: DataFrame): DataFrame = {
+    val part = PartitionCols(name).head
+    val tombs = old
+      .join(fresh.select(col("id"), col(part).as("_nc")), Seq("id"))
+      .filter(col(part) =!= col("_nc"))
+      .select(old.columns.map(col): _*)
+      .withColumn("pkey", pkeyOf(name))
+      .withColumn(DelCol, lit(true))
+    layerRows(name, fresh).unionByName(tombs)
+  }
 
   /** (covers, version) of the `name` base layer: how many applied batches
     * it folds in, and which versioned stage holds it (0 = the adoption
@@ -1073,19 +1055,15 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * see the inline note).
     */
   private def maybeCompactState(appliedNow: Seq[String]): Unit = {
-    val names = Seq("band", "hash_min", "comp", "cluster") ++
-      (if (config.useSimHashCandidates) Seq("sim") else Nil)
-    names.foreach { name =>
+    PartitionCols.keys.filter(_ != "sim" || config.useSimHashCandidates).foreach { name =>
       val (covers, ver) = baseInfo(name)
       val cN = appliedNow.size
       if (cN - covers >= config.stateCompactEvery) {
         store.getOrComputePartitioned(baseStageName(name, cN)) {
-          val raw = stateView(name, appliedNow, None,
-            appendOnly = !UpsertKeys.contains(name))
-          UpsertKeys.get(name) match {
-            case Some(ks) => resolveState(raw, ks).withColumn(DelCol, lit(false))
-            case None => raw
-          }
+          val raw = stateView(name, appliedNow, None)
+          if (UpsertKeys.contains(name))
+            resolveState(name, raw).withColumn(DelCol, lit(false))
+          else raw
         }
         // snapshot-expiry grace (the Iceberg expire-snapshots analog): the
         // stages superseded by THIS fold are NOT deleted — lazy DataFrames
@@ -1119,18 +1097,19 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     }
   }
 
-  /** Latest-wins resolution of a layered upsert-table read: per key keep
-    * the newest layer's row (a live row beats its own batch's tombstone),
-    * then drop tombstoned keys. This is merge-on-read compaction at query
-    * time, over however many rows the caller's pruning left.
+  /** Latest-wins resolution of a layered read of upsert table `name`: per
+    * [[UpsertKeys]] key keep the newest layer's row (a live row beats its
+    * own batch's tombstone), then drop tombstoned keys. This is
+    * merge-on-read compaction at query time, over however many rows the
+    * caller's pruning left.
     */
-  private def resolveState(raw: DataFrame, keyCols: Seq[String]): DataFrame = {
+  private def resolveState(name: String, raw: DataFrame): DataFrame = {
     if (!raw.columns.contains(SeqCol)) // empty-table fallback frame
       return if (raw.columns.contains(DelCol))
         raw.filter(!col(DelCol)).drop(DelCol)
       else raw
     val live = when(col(DelCol), lit(0)).otherwise(lit(1))
-    raw.groupBy(keyCols.map(col): _*)
+    raw.groupBy(UpsertKeys(name).map(col): _*)
       .agg(max_by(struct(raw.columns.map(col): _*),
         struct(col(SeqCol), live)).as("_w"))
       .select(col("_w.*"))
@@ -1138,75 +1117,71 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       .drop(SeqCol, DelCol)
   }
 
-  /** Materialize the incremental state tables for this store's base run +
-    * applied batches, if absent. The production base job calls this as its
-    * FINAL step (writing the tables bucket-partitioned from day one), so
-    * the first delta apply pays no adoption cost; on a store whose base job
-    * didn't, the first `incremental()` runs it lazily — a one-time
+  /** Materialize the incremental state tables from this store's completed
+    * [[run]], if absent. The production base job calls this as its FINAL
+    * step (writing the tables bucket-partitioned from day one), so the
+    * first delta apply pays no adoption cost; on a store whose base job
+    * didn't, the first `incremental()` adopts them itself — a one-time
     * corpus-sized write, after which every batch is delta-proportional.
     */
   def materializeStateTables(): Unit = {
     assertCheckpointConfig()
     val applied = incBatches
-    ensureStateTables(applied, priorSignatures(applied))
+    requireStateSource(applied)
+    ensureStateTables(applied)
   }
 
-  /** Materialize every state table's base layer if absent — from the base
-    * run's stages on a fresh store, or from the LAST applied batch's full
-    * tables on a store written before the state-table layout (lazy
-    * migration; see [[materializeStateTables]]).
+  /** Incremental state is adopted from a completed [[run]]: refuse a store
+    * without one (before any state is written), and a store whose batches
+    * were applied under the layout that predates the state tables (it has
+    * applied batches but no cluster state table to resume from).
     */
-  private def ensureStateTables(applied: Seq[String], priorSigs: DataFrame): Unit = {
+  private def requireStateSource(applied: Seq[String]): Unit = {
+    require(store.has("clusters"),
+      s"checkpoint dir ${store.root} holds no completed run(): incremental " +
+        "state is adopted from the base run's stages — run() the base " +
+        "corpus on this store first")
+    require(applied.isEmpty || store.marked("cluster_state_covers"),
+      s"checkpoint dir ${store.root} has applied batches but no cluster " +
+        "state table: it predates the state-table layout and can no longer " +
+        "be resumed — rebuild it with run() on a fresh checkpoint dir")
+  }
+
+  /** Adopt every state table's base layer from the base run's stages, if
+    * absent (see [[materializeStateTables]]). [[requireStateSource]]
+    * guarantees that a store with applied batches already has them.
+    */
+  private def ensureStateTables(applied: Seq[String]): Unit = {
+    lazy val baseSigs = readBaseSignatures()
     ensureStateBase("band", applied) {
-      val base = bandRowsOf(readBaseSignatures(), store.read("exact_edges"))
-      val incs = applied.map(b => bandRowsOf(
-        store.read(s"inc_${b}_signatures"), store.read(s"inc_${b}_exact_edges")))
-      (base +: incs).reduce(_ union _)
-        .withColumn("pkey", pkeyOf(col("band"), col("bucket")))
+      layerRows("band", bandRowsOf(baseSigs, store.read("exact_edges")))
     }
     ensureStateBase("hash_min", applied) {
-      (if (applied.isEmpty)
-        priorSigs.groupBy("content_hash").agg(min("id").as("m"))
-      else store.read(s"inc_${applied.last}_hash_min"))
-        .select(col("content_hash"), col("m"))
-        .withColumn("pkey", pkeyOf(col("content_hash")))
-        .withColumn(DelCol, lit(false))
+      layerRows("hash_min", baseSigs.groupBy("content_hash").agg(min("id").as("m")))
     }
     ensureStateBase("comp", applied) {
-      (if (applied.isEmpty) store.read("components")
-      else store.read(s"inc_${applied.last}_components"))
-        .select(col("id"), col("component"))
-        .withColumn("pkey", pkeyOf(col("component")))
-        .withColumn(DelCol, lit(false))
+      layerRows("comp", store.read("components").select("id", "component"))
     }
     ensureStateBase("cluster", applied) {
-      (if (applied.isEmpty) store.read("clusters")
-      else store.read(s"inc_${applied.last}_clusters"))
-        .select(col("url"), col("cluster_id"), col("is_representative"),
-          col("id"), col("source"), col("lang"))
-        .withColumn("pkey", pkeyOf(col("cluster_id")))
-        .withColumn(DelCol, lit(false))
+      layerRows("cluster", store.read("clusters").select(ClusterCols.map(col): _*))
     }
     if (config.useSimHashCandidates)
       ensureStateBase("sim", applied) {
-        SimHashDedup.tableRows(
-          priorSigs.select("id", "simhash"), SimHashDedup.MaxHamming)
-          .withColumn("pkey", pkeyOf(col("table"), col("key")))
+        layerRows("sim",
+          SimHashDedup.tableRows(baseSigs.select("id", "simhash"), SimHashDedup.MaxHamming))
       }
   }
 
   /** RAW layered view of state table `name` as of `applied` batches.
     * `pkeys = Some(ks)` prunes every layer's scan to those partitions
     * (directory-level pruning — the delta-proportional read). Append-only
-    * tables are complete as-is; upsert tables come back with `_seq` (layer
-    * index) and `_del` attached and MUST go through [[resolveState]] —
-    * callers that only need a key subset semi-filter the raw rows first,
-    * so resolution runs on the survivors, not the corpus.
+    * tables are complete as-is; upsert tables ([[UpsertKeys]]) come back
+    * with `_seq` (layer index) and `_del` attached and MUST go through
+    * [[resolveState]] — callers that only need a key subset semi-filter the
+    * raw rows first, so resolution runs on the survivors, not the corpus.
     */
   private[graft] def stateView(name: String, applied: Seq[String],
-      pkeys: Option[Seq[Int]], appendOnly: Boolean): DataFrame = {
-    require(appendOnly == !UpsertKeys.contains(name),
-      s"state table '$name' appendOnly mismatch")
+      pkeys: Option[Seq[Int]]): DataFrame = {
     val stages = stateStageNames(name, applied)
     val keep = pkeys.map(_.toSet)
     val parts = stages.zipWithIndex.flatMap { case (s, i) =>
@@ -1217,8 +1192,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
           case Some(ks) if ks.isEmpty => None
           case Some(ks) => Some(store.read(s).filter(col("pkey").isin(ks.toSeq: _*)))
         }
-        if (appendOnly) pruned
-        else pruned.map(_.withColumn(SeqCol, lit(i)))
+        if (UpsertKeys.contains(name)) pruned.map(_.withColumn(SeqCol, lit(i)))
+        else pruned
       }
     }
     parts.reduceOption(_ unionByName _).getOrElse {

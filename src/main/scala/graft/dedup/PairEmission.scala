@@ -1,12 +1,21 @@
 package graft.dedup
 
-/** The single hot-bucket pair-emission policy, shared by the batch LSH
-  * pipeline ([[DedupPipeline.candidatePairs]]), the SimHash operator
-  * ([[SimHashDedup.nearDupPairs]]), and the query-level MinHash clustering
-  * formulation (SparkEntry `q_dedup_minhash_clusters`) — one implementation
-  * so the skew policy cannot drift between call sites.
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+
+/** The single hot-bucket pair-emission policy, in its two forms — one
+  * owner so the skew policy cannot drift between call sites.
   *
-  * Contract: `rows` is a partition iterator of (k1, k2, value) triples
+  * [[emit]], the within-bucket form over sorted partition rows, is shared
+  * by the batch LSH pipeline ([[DedupPipeline.candidatePairs]]), the
+  * SimHash operator ([[SimHashDedup.nearDupPairs]]), and the query-level
+  * MinHash clustering formulation (SparkEntry `q_dedup_minhash_clusters`).
+  * [[crossBucketPairs]], the DataFrame form for pairs ACROSS two sides of
+  * a bucket join, is shared by the incremental delta×prior LSH join
+  * ([[DedupPipeline.incremental]]) and [[CrossCorpus.nearDupPairs]].
+  *
+  * `emit` contract: `rows` is a partition iterator of (k1, k2, value) triples
   * already SORTED by bucket key (and by whatever within-bucket order adjacency
   * should follow — id order for MinHash buckets, (fingerprint, id) order
   * for SimHash buckets). For each bucket of n values:
@@ -29,6 +38,39 @@ package graft.dedup
   * so skew-policy activations are observable (no silent drops).
   */
 object PairEmission {
+
+  /** The cross-bucket skew ladder: pairs between `probe` and `build` rows
+    * that share a bucket (`keys`), both sides carrying `id` and `keys`.
+    * The build side's per-bucket stats (`count`, `min(id)`) are
+    * checkpointed, then per bucket of n build rows:
+    *   - n ≤ maxAllPairs          → every (probe, build) pair;
+    *   - n in (maxAllPairs, hugeCutoff] → each probe row chained to the
+    *     bucket's min build id (output linear in probe rows);
+    *   - n > hugeCutoff           → nothing, counted in `dropped` (one
+    *     small job over the stats, only when an accumulator is given).
+    * Returns (`id`, `oid`) = (probe id, build id), not deduplicated.
+    */
+  def crossBucketPairs(probe: DataFrame, build: DataFrame, keys: Seq[String],
+      maxAllPairs: Int, hugeCutoff: Long,
+      dropped: Option[LongAccumulator]): DataFrame = {
+    val stats = build.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), min("id").as("bmin"))
+      .localCheckpoint(true)
+    val small = probe
+      .join(stats.filter(col("n") <= maxAllPairs).select(keys.map(col): _*),
+        keys, "left_semi")
+      .join(build.withColumnRenamed("id", "oid"), keys)
+      .select("id", "oid")
+    val chained = probe
+      .join(stats.filter(col("n") > maxAllPairs && col("n") <= hugeCutoff)
+        .select((keys :+ "bmin").map(col): _*), keys)
+      .select(col("id"), col("bmin").as("oid"))
+    dropped.foreach { acc =>
+      val nHuge = stats.filter(col("n") > hugeCutoff).count()
+      if (nHuge > 0) acc.add(nHuge)
+    }
+    small.union(chained)
+  }
 
   def emit[T](
       rows: Iterator[(Long, Long, T)],

@@ -42,4 +42,10 @@ class DedupMainSpec extends AnyFunSuite {
     assert(refused().contains("usage"))
     assert(refused("--cores", "4").contains("usage"))
   }
+
+  test("parseArgs: --cores below 1 is refused") {
+    assert(refused("/tmp/c", "--cores", "0").contains("flag --cores must be >= 1, got '0'"))
+    assert(refused("/tmp/c", "--cores", "-2").contains("flag --cores must be >= 1, got '-2'"))
+    assert(DedupMain.parseArgs(Array("/tmp/c", "--cores", "1"))("cores") === "1")
+  }
 }

@@ -650,6 +650,75 @@ class DedupPipelineSpec extends AnyFunSuite {
     all.unpersist()
   }
 
+  test("incremental: a delta with a repeated (url, warc_ts) is refused, then the " +
+      "corrected delta applies and equals the batch run") {
+    import spark.implicits._
+    import scala.util.hashing.MurmurHash3
+    val all = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 40, seed = 17)).cache()
+    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
+    val aPages = all.filter(p => part(p) >= 1)
+    val bPages = all.filter(p => part(p) == 0)
+    def key(df: DataFrame) = df.select("url", "cluster_id", "is_representative")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    val full = key(new DedupPipeline(spark, DedupConfig(), freshStore())
+      .run(aPages.union(bPages)))
+
+    val store = freshStore()
+    val pipe = new DedupPipeline(spark, DedupConfig(), store)
+    pipe.run(aPages).count()
+    val dupDelta = bPages.union(bPages.limit(1))
+    // a marker left by an earlier attempt does not excuse a recomputed stage
+    store.mark("inc_b_idcheck")
+    val ex = intercept[IllegalArgumentException](pipe.incremental("b", dupDelta))
+    assert(ex.getMessage.contains("batch 'b' doc ids are not unique"))
+    assert(ex.getMessage.contains("idBits=128"))
+    assert(!store.has("inc_b_signatures"), "refused delta's signatures kept")
+    assert(!store.marked("inc_b_idcheck"))
+    assert(pipe.incBatches.isEmpty, "refused delta reached the batch log")
+    assert(key(pipe.incremental("b", bPages)) === full)
+    assert(store.marked("inc_b_idcheck") && pipe.incBatches === Seq("b"))
+    all.unpersist()
+  }
+
+  test("incremental state needs a completed run(): refused before any state is written") {
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 10, seed = 19))
+    def refusals(store: StageStore): Seq[String] = {
+      val pipe = new DedupPipeline(spark, DedupConfig(), store)
+      Seq(() => pipe.incremental("b", pages), () => pipe.incrementalClusters(),
+        () => pipe.materializeStateTables())
+        .map(f => intercept[IllegalArgumentException](f()).getMessage)
+    }
+    // an empty store, and one whose run() died after the signature stage
+    val empty = freshStore()
+    val partial = freshStore()
+    new DedupPipeline(spark, DedupConfig(), partial).run(pages).count()
+    Seq("exact_edges", "candidate_pairs", "verified_edges", "components", "clusters")
+      .foreach(partial.invalidate)
+    Seq(empty, partial).foreach { store =>
+      refusals(store).foreach(m => assert(m.contains("no completed run()"), m))
+      assert(store.stages("").forall(!_.contains("state")), store.stages(""))
+      assert(!store.marked("band_state_covers"))
+    }
+  }
+
+  test("incremental: a store from before the state-table layout is refused") {
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 10, seed = 19))
+    val store = freshStore()
+    val pipe = new DedupPipeline(spark, DedupConfig(), store)
+    val clusters = pipe.run(pages)
+    // the old layout: a logged batch that kept a full clusters stage and
+    // no state tables
+    store.write("inc_old_clusters", clusters)
+    Files.writeString(java.nio.file.Paths.get(store.root, "_INC_LOG"), "old\n")
+    Seq(() => pipe.incremental("old", pages), () => pipe.incremental("b", pages),
+      () => pipe.incrementalClusters(), () => pipe.materializeStateTables())
+      .foreach { f =>
+        val m = intercept[IllegalArgumentException](f()).getMessage
+        assert(m.contains("predates the state-table layout"), m)
+      }
+    assert(!store.marked("band_state_covers"))
+  }
+
   test("incremental over legacy n=80/n=256 sketch chunks equals batch") {
     import spark.implicits._
     import scala.util.hashing.MurmurHash3
@@ -719,14 +788,14 @@ class DedupPipelineSpec extends AnyFunSuite {
     // PRUNED scan — PartitionFilters on pkey in the executed plan, and no
     // Exchange (scan+filter+union only)
     val somePk = Seq(0, 1, 2)
-    val pruned = pipe.stateView("band", Seq("d1"), Some(somePk), appendOnly = true)
+    val pruned = pipe.stateView("band", Seq("d1"), Some(somePk))
     pruned.collect()
     val plan = pruned.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*pkey".r.findFirstIn(plan).isDefined,
       s"no partition filter on pkey:\n$plan")
     assert(!plan.contains("Exchange"), s"state view shuffled:\n$plan")
     // and it returns exactly the requested partitions' rows
-    val wantRows = pipe.stateView("band", Seq("d1"), None, appendOnly = true)
+    val wantRows = pipe.stateView("band", Seq("d1"), None)
       .filter(col("pkey").isin(somePk: _*)).count()
     assert(pruned.count() === wantRows && wantRows > 0)
 
@@ -749,8 +818,8 @@ class DedupPipelineSpec extends AnyFunSuite {
       s"hash-min layer wrote $hashRows rows for a $nDelta-page delta")
     // band state: the batch appended ONLY its own band rows
     assert(store.read("inc_d1_band_state").count() ===
-      pipe.stateView("band", Seq("d1"), None, appendOnly = true).count() -
-        pipe.stateView("band", Nil, None, appendOnly = true).count())
+      pipe.stateView("band", Seq("d1"), None).count() -
+        pipe.stateView("band", Nil, None).count())
     all.unpersist(); delta.unpersist()
   }
 
