@@ -993,11 +993,10 @@ object SparkEntry {
     // collision dies at verification) while each twin pair shares identical
     // shingles (Jaccard 1 ⇒ identical MinHash ⇒ guaranteed candidate).
     // Clusters therefore have the closed form {i, i+10⁶} → cluster i.
-    // Candidates go through the shared PairEmission chain policy — the same
-    // skew-safe path as DedupPipeline.candidatePairs, not a quadratic
-    // bucket self-join.
+    // Candidates go through PairEmission.bucketPairs — the same skew-safe
+    // path as DedupPipeline.candidatePairs, not a quadratic bucket
+    // self-join.
     "q_dedup_minhash_clusters" -> ((s, dir) => {
-      import s.implicits._
       val base = t(s, dir, "documents")
         .select(col("doc_id").cast("long").as("id"), saltedTokens.as("stext"))
       val doubled = base.union(
@@ -1007,14 +1006,9 @@ object SparkEntry {
         .withColumn("bands", minhash_bands(col("shingles"), 16, 4))
       val bandRows = sigs.filter(size(col("shingles")) > 0)
         .select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
-      val pairs = bandRows
-        .repartition(col("band"), col("bucket"))
-        .sortWithinPartitions("band", "bucket", "id")
-        .select(col("band").cast("long"), col("bucket"), col("id"))
-        .as[(Long, Long, Long)]
-        .mapPartitions(it => graft.dedup.PairEmission.emit[Long](
-          it, maxAllPairs = 64, chainHuge = true))
-        .toDF("a", "b").distinct()
+      val pairs = graft.dedup.PairEmission.bucketPairs(bandRows,
+        Seq("band", "bucket"), order = Seq("id"), value = col("id"),
+        maxAllPairs = 64, chainHuge = true).distinct()
       val sh = sigs.select(col("id"), col("shingles"))
       val verified = pairs
         .join(sh.withColumnsRenamed(Map("id" -> "a", "shingles" -> "sh_a")), "a")

@@ -478,9 +478,10 @@ object Ann {
     * the MinHash dedup candidate stage. No crossJoin anywhere:
     *   1. one narrow pass computes the ≤64-bit RHP signature and explodes
     *      `bands` band keys per row;
-    *   2. ONE shuffle (repartition by (band, key)) + in-partition sort +
-    *      streaming pair emission: all C(n,2) pairs for buckets up to
-    *      `maxBucketSize`, an id-ordered chain above (O(n) output, O(1)
+    *   2. one [[graft.dedup.PairEmission.bucketPairs]] pass (ONE shuffle
+    *      by (band, key), in-partition sort, streaming pair emission): all
+    *      C(n,2) pairs for buckets up to `maxBucketSize`, an id-ordered
+    *      chain above (O(n) output, O(1)
     *      memory; a hot bucket is near-parallel vectors, so the chain keeps
     *      the group connected for clustering consumers — activations are
     *      observable via `hotBucketAcc`);
@@ -496,26 +497,10 @@ object Ann {
       bands: Int = 8, rowsPerBand: Int = 8, seed: Long = 42L,
       maxBucketSize: Int = 4096,
       hotBucketAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
     val bandRows = bandExplode(corpus, "vec", Seq("id"), bands, rowsPerBand, seed)
-      .select(col("band"), col("key"), col("id"))
-
-    val maxAll = maxBucketSize
-    val hot = hotBucketAcc
-    val pairs = bandRows
-      .repartition(col("band"), col("key"))
-      .sortWithinPartitions("band", "key", "id")
-      .as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        graft.dedup.PairEmission.emit[Long](
-          it,
-          maxAllPairs = maxAll,
-          chainHuge = true,
-          onHot = () => hot.foreach(_.add(1L)))
-      }
-      .toDF("a", "b")
+    val pairs = graft.dedup.PairEmission.bucketPairs(bandRows, Seq("band", "key"),
+        order = Seq("id"), value = col("id"), maxAllPairs = maxBucketSize,
+        chainHuge = true, onHot = () => hotBucketAcc.foreach(_.add(1L)))
       .distinct()
 
     val vecs = corpus.select(col("id"), col("vec"))

@@ -92,8 +92,6 @@ object SemDeDup {
       maxCellSize: Int = 4096,
       bands: Int = 8, rowsPerBand: Int = 8, seed: Long = 42L,
       hotCellAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= 64)
 
     val slim = df.select(col("id"), col("vec"), col("cell"))
@@ -106,14 +104,10 @@ object SemDeDup {
 
     // tier 1: bounded cells — exact all-pairs per cell. maxAllPairs is the
     // tier bound itself, so emission never chains here.
-    val smallPairs = sized.filter(col("cell_n") <= maxCellSize)
-      .select(col("cell"), col("id"))
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "id")
-      .select(col("cell"), lit(0L), col("id")).as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        graft.dedup.PairEmission.emit[Long](it, maxAllPairs = maxCellSize)
-      }
+    val smallPairs = graft.dedup.PairEmission.bucketPairs(
+      sized.filter(col("cell_n") <= maxCellSize).withColumn("k2", lit(0L)),
+      Seq("cell", "k2"), order = Seq("id"), value = col("id"),
+      maxAllPairs = maxCellSize)
 
     // tier 2: oversized cells — sign-LSH sub-banding inside the cell.
     // Bucket key = (cell, key · bands + band). Cell ids may be ARBITRARY
@@ -122,23 +116,15 @@ object SemDeDup {
     // the (key, band) fold is safe by the band geometry: with bands ≥ 2,
     // key < 2^(64/bands) so key·bands+band < 2^38, and with bands == 1 the
     // fold is the identity.
-    val hot = hotCellAcc
-    val maxAll = maxCellSize
-    val bigPairs = Ann.bandExplode(
-        sized.filter(col("cell_n") > maxCellSize), "vec",
-        Seq("id", "cell"), bands, rowsPerBand, seed)
-      .select(col("cell").as("k1"),
-        (col("key") * bands + col("band")).as("key"), col("id"))
-      .repartition(col("k1"), col("key"))
-      .sortWithinPartitions("k1", "key", "id")
-      .as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        graft.dedup.PairEmission.emit[Long](
-          it, maxAllPairs = maxAll, chainHuge = true,
-          onHot = () => hot.foreach(_.add(1L)))
-      }
+    val bigPairs = graft.dedup.PairEmission.bucketPairs(
+      Ann.bandExplode(sized.filter(col("cell_n") > maxCellSize), "vec",
+          Seq("id", "cell"), bands, rowsPerBand, seed)
+        .withColumn("key", col("key") * bands + col("band")),
+      Seq("cell", "key"), order = Seq("id"), value = col("id"),
+      maxAllPairs = maxCellSize, chainHuge = true,
+      onHot = () => hotCellAcc.foreach(_.add(1L)))
 
-    val pairs = smallPairs.union(bigPairs).toDF("a", "b").distinct()
+    val pairs = smallPairs.union(bigPairs).distinct()
 
     // exact-cosine verification on the slim vector table (shuffled-hash:
     // both sides are large and hash-joinable; sort-merge would add two sorts)

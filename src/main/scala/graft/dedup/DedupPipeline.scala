@@ -64,10 +64,17 @@ final case class DedupConfig(
   * Every stage is a pure function of the previous checkpoint, so a killed
   * run resumes at the first incomplete stage (`StageStore.getOrCompute`).
   */
-final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: StageStore) {
+final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints: StageStore) {
 
   import spark.implicits._
   import DedupPipeline.{CcDurableInterval, HugeBucketCutoff, IdSeed2}
+
+  /** The checkpoint store, config-checked once per instance: the first
+    * stage read or write runs [[assertCheckpointConfig]] (a refusal re-runs
+    * on the next access), so a store built one stage method at a time is
+    * fingerprinted exactly as one built by [[run]].
+    */
+  private lazy val store: StageStore = { assertCheckpointConfig(); checkpoints }
 
   /** The stable doc id as a pure function of the row's natural key
     * (url, warc_ts) — identical across resume runs, partitionings, and
@@ -247,14 +254,16 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * Exact-dup groups are collapsed to their representative BEFORE banding
     * so a 10⁶-copy boilerplate family costs one row here, not 10⁶.
     *
-    * Physical shape: ONE shuffle (repartition by bucket key) + in-partition
-    * sort + `mapPartitions` run detection, then a distinct on the emitted
-    * pairs. Buffered state is one bucket's ids, capped at HugeBucketCutoff
-    * (8 MB at the default) — no hash-aggregate state. Earlier formulations
-    * (window counts + bucket self-join; groupBy + collect_list) both
-    * anti-scaled with cores: at n pages × b bands the bucket key space is
-    * ~n·b mostly-singleton groups, and a 10⁷-key hash aggregate per task
-    * thrashes memory, while this pass is a pure sequential scan.
+    * Physical shape ([[PairEmission.bucketPairs]], the id carried as-is
+    * at either width): ONE shuffle (repartition by bucket key) +
+    * in-partition sort + a streaming run detection, then a distinct on the
+    * emitted pairs. Buffered state is one bucket's ids, capped at
+    * HugeBucketCutoff (8 MB at the default) — no hash-aggregate state.
+    * Earlier formulations (window counts + bucket self-join; groupBy +
+    * collect_list) both anti-scaled with cores: at n pages × b bands the
+    * bucket key space is ~n·b mostly-singleton groups, and a 10⁷-key hash
+    * aggregate per task thrashes memory, while this pass is a pure
+    * sequential scan.
     */
   def candidatePairs(sigs: DataFrame, exact: DataFrame): DataFrame =
     store.getOrCompute("candidate_pairs")(candidatePairsPlan(sigs, exact))
@@ -273,54 +282,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
 
   private[graft] def candidatePairsPlan(sigs: DataFrame, exact: DataFrame): DataFrame = {
-      import spark.implicits._
-      val bandRows = bandRowsOf(sigs, exact)
-
-      val maxAll = config.maxBucketAllPairs
-      val (hot, droppedB, droppedR) = (hotBuckets, droppedBuckets, droppedBucketRows)
-      val sorted = bandRows
-        .repartition(col("band"), col("bucket"))
-        // struct ids sort lexicographically by (h1, h2) — the same order as
-        // the (Long, Long) tuples the wide branch feeds PairEmission, so
-        // chain adjacency is identical across widths
-        .sortWithinPartitions("band", "bucket", "id")
-      val pairs =
-        if (config.idBits == 64)
-          sorted.select(col("band").cast("long"), col("bucket"), col("id"))
-            .as[(Long, Long, Long)]
-            .mapPartitions { it =>
-              // the decoded (band, bucket, id) tuples feed emit() as-is — no
-              // per-row re-wrapping (143M band rows; extra allocations here
-              // measurably slow the stage)
-              PairEmission.emit[Long](
-                it,
-                maxAllPairs = maxAll,
-                hugeCutoff = HugeBucketCutoff,
-                chainHuge = false,
-                onHot = () => hot.add(1L),
-                onDropped = n => { droppedB.add(1L); droppedR.add(n) })
-            }
-            .toDF("a", "b")
-        else
-          sorted.select(col("band").cast("long"), col("bucket"),
-            col("id.h1"), col("id.h2"))
-            .as[(Long, Long, Long, Long)]
-            .mapPartitions { it =>
-              PairEmission.emit[(Long, Long)](
-                it.map { case (band, bucket, h1, h2) => (band, bucket, (h1, h2)) },
-                maxAllPairs = maxAll,
-                hugeCutoff = HugeBucketCutoff,
-                chainHuge = false,
-                onHot = () => hot.add(1L),
-                onDropped = n => { droppedB.add(1L); droppedR.add(n) })
-            }
-            .map { case ((a1, a2), (b1, b2)) => (a1, a2, b1, b2) }
-            .toDF("a1", "a2", "b1", "b2")
-            .select(
-              struct(col("a1").as("h1"), col("a2").as("h2")).as("a"),
-              struct(col("b1").as("h1"), col("b2").as("h2")).as("b"))
-
-      pairs.distinct()
+    val (hot, droppedB, droppedR) = (hotBuckets, droppedBuckets, droppedBucketRows)
+    PairEmission.bucketPairs(bandRowsOf(sigs, exact), Seq("band", "bucket"),
+      order = Seq("id"), value = col("id"),
+      maxAllPairs = config.maxBucketAllPairs, hugeCutoff = HugeBucketCutoff,
+      onHot = () => hot.add(1L),
+      onDropped = n => { droppedB.add(1L); droppedR.add(n) })
+      .distinct()
   }
 
   /** The LCS second chance's Jaccard floor and verbatim-run share. */
@@ -455,13 +423,14 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * widens recall only.
     */
   def simHashCandidates(sigs: DataFrame): DataFrame =
-    store.getOrCompute("simhash_pairs") {
-      SimHashDedup.nearDupPairs(
-        sigs.select("id", "simhash"), SimHashDedup.MaxHamming,
-        maxBucketSize = config.simHashMaxBucket,
-        hotBucketAcc = Some(hotBuckets))
-        .select("a", "b")
-    }
+    store.getOrCompute("simhash_pairs")(simHashCandidatesPlan(sigs))
+
+  private[graft] def simHashCandidatesPlan(sigs: DataFrame): DataFrame =
+    SimHashDedup.nearDupPairs(
+      sigs.select("id", "simhash"), SimHashDedup.MaxHamming,
+      maxBucketSize = config.simHashMaxBucket,
+      hotBucketAcc = Some(hotBuckets))
+      .select("a", "b")
 
   /** Optional pre-stage (`urlCanonicalPreDedup`): keep ONE capture per
     * CANONICAL url ([[graft.text.UrlOps.canonicalizeUrl]] — scheme/host
@@ -512,7 +481,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
 
   /** Run everything; returns the clusters DataFrame. */
   def run(pages: Dataset[Page]): DataFrame = {
-    assertCheckpointConfig()
     val input = urlPreDedup(pages)
     val sigs = signatures(input)
     val exact = exactEdges(sigs)
@@ -623,7 +591,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       allPages: Option[Dataset[Page]] = None): DataFrame = {
     require(batch.matches("[A-Za-z0-9-]+"),
       s"batch id '$batch' must match [A-Za-z0-9-]+ (stage names are '_'-delimited)")
-    assertCheckpointConfig()
     val applied = incBatches
     requireStateSource(applied)
     if (applied.contains(batch)) {
@@ -646,9 +613,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       s"checkpoint dir ${store.root} holds stages from unapplied batch(es) " +
         s"${stray.mkString(", ")} — finish or invalidate them before starting '$batch'")
 
-    val priorSigs = (readBaseSignatures() +: applied.map(b => store.read(s"inc_${b}_signatures")))
+    // one read of the base signatures serves both the prior-id anti-join
+    // and (on a store not yet adopted) the state tables' adoption
+    val baseSigs = readBaseSignatures()
+    ensureStateTables(applied, baseSigs)
+    val priorSigs = (baseSigs +: applied.map(b => store.read(s"inc_${b}_signatures")))
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    ensureStateTables(applied)
 
     // 1 — delta signatures (ids already present are the same capture:
     // drop); the optional canonical-url pre-dedup applies within the
@@ -748,10 +718,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         if (!config.useSimHashCandidates) lsh
         else {
           val k = SimHashDedup.MaxHamming
-          val simWithin = SimHashDedup.nearDupPairs(
-            sigsNew.select("id", "simhash"), k,
-            maxBucketSize = config.simHashMaxBucket,
-            hotBucketAcc = Some(hotBuckets)).select("a", "b")
+          val simWithin = simHashCandidatesPlan(sigsNew)
           // the delta's Manku-table rows, read back from their state stage;
           // the prior side is the pruned SimHash state (appended per batch
           // at ingest — never tableRows(corpus) re-derivation)
@@ -883,7 +850,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * layers.
     */
   def incrementalClusters(): DataFrame = {
-    assertCheckpointConfig()
     val applied = incBatches
     requireStateSource(applied)
     // a base-run-only store has a completed `clusters` stage but no adopted
@@ -1125,7 +1091,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * corpus-sized write, after which every batch is delta-proportional.
     */
   def materializeStateTables(): Unit = {
-    assertCheckpointConfig()
     val applied = incBatches
     requireStateSource(applied)
     ensureStateTables(applied)
@@ -1149,10 +1114,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
 
   /** Adopt every state table's base layer from the base run's stages, if
     * absent (see [[materializeStateTables]]). [[requireStateSource]]
-    * guarantees that a store with applied batches already has them.
+    * guarantees that a store with applied batches already has them. `sigs`
+    * (the base signatures) is read only if some base layer is missing.
     */
-  private def ensureStateTables(applied: Seq[String]): Unit = {
-    lazy val baseSigs = readBaseSignatures()
+  private def ensureStateTables(applied: Seq[String],
+      sigs: => DataFrame = readBaseSignatures()): Unit = {
+    lazy val baseSigs = sigs
     ensureStateBase("band", applied) {
       layerRows("band", bandRowsOf(baseSigs, store.read("exact_edges")))
     }
@@ -1211,8 +1178,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     * pipeline configuration: stage contents are pure functions of (input,
     * config), so mixing configs across a resume silently corrupts results
     * (e.g. chunk membership under a different `resumeChunks`, or edges
-    * from a different LSH geometry). First run records the config
-    * fingerprint; later runs must match or use a fresh directory.
+    * from a different LSH geometry). The first pipeline to touch a store
+    * records the config fingerprint; later ones must match or use a fresh
+    * directory. Runs once per instance, through [[store]].
     *
     * The fingerprint is per-field (`name=value` lines), compared with
     * default-compatibility: a field MISSING from the stored fingerprint
@@ -1228,7 +1196,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
     */
   private def assertCheckpointConfig(): Unit = {
     import java.nio.file.{Files, Paths}
-    val path = Paths.get(store.root, "_PIPELINE_CONFIG.json")
+    val path = Paths.get(checkpoints.root, "_PIPELINE_CONFIG.json")
     val fields: Seq[(String, String)] =
       config.productElementNames.zip(config.productIterator.map(_.toString)).toSeq
     val defaults: Map[String, String] = {
@@ -1242,7 +1210,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         .map { l => val i = l.indexOf('='); (l.take(i), l.drop(i + 1)) }.toMap
       val mismatch = new StringBuilder
       require(stored.contains('=') || stored == fingerprint,
-        s"checkpoint dir ${store.root} carries a pre-field-format config " +
+        s"checkpoint dir ${checkpoints.root} carries a pre-field-format config " +
           "fingerprint that cannot be verified against the current config; " +
           "use a fresh checkpoint dir.")
       fields.foreach { case (k, v) =>
@@ -1268,7 +1236,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
         }
       }
       require(mismatch.isEmpty,
-        s"checkpoint dir ${store.root} was written with a different pipeline " +
+        s"checkpoint dir ${checkpoints.root} was written with a different pipeline " +
           s"config:\n$mismatch" +
           "Resume with the original config or use a fresh checkpoint dir.")
     } else {
@@ -1276,13 +1244,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       // fingerprint guard (or lost it): its stages may have been computed
       // under ANY config, so stamping it now and resuming would silently mix
       // configs. Refuse instead of adopting it.
-      val root = Paths.get(store.root)
+      val root = Paths.get(checkpoints.root)
       val hasStages = Files.exists(root) &&
         scala.util.Using.resource(Files.list(root))(
           _.toArray.map(_.asInstanceOf[java.nio.file.Path])).exists(p =>
           Files.isDirectory(p) && Files.exists(p.resolve("_MANIFEST.json")))
       require(!hasStages,
-        s"checkpoint dir ${store.root} holds stage checkpoints but no " +
+        s"checkpoint dir ${checkpoints.root} holds stage checkpoints but no " +
           "_PIPELINE_CONFIG.json — cannot verify they match the current " +
           "config; use a fresh checkpoint dir.")
       Files.createDirectories(root)

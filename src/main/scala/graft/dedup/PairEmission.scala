@@ -1,24 +1,27 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.util.LongAccumulator
 
 /** The single hot-bucket pair-emission policy, in its two forms — one
   * owner so the skew policy cannot drift between call sites.
   *
-  * [[emit]], the within-bucket form over sorted partition rows, is shared
-  * by the batch LSH pipeline ([[DedupPipeline.candidatePairs]]), the
-  * SimHash operator ([[SimHashDedup.nearDupPairs]]), and the query-level
-  * MinHash clustering formulation (SparkEntry `q_dedup_minhash_clusters`).
-  * [[crossBucketPairs]], the DataFrame form for pairs ACROSS two sides of
-  * a bucket join, is shared by the incremental delta×prior LSH join
+  * [[bucketPairs]], the within-bucket form, owns the whole pass: the
+  * shuffle on the bucket key, the in-partition sort, the streaming
+  * emission and the output encoding, for a value of any type (a long id,
+  * the 128-bit struct id, a (fingerprint, id) struct). Its callers are the
+  * batch LSH pipeline ([[DedupPipeline.candidatePairs]]), the SimHash
+  * operator ([[SimHashDedup.nearDupPairs]]), the embedding LSH pairs
+  * ([[graft.ann.Ann.nearDupPairsLsh]], and both tiers of
+  * [[graft.ann.SemDeDup]]) and the query-level MinHash clustering
+  * formulation (SparkEntry `q_dedup_minhash_clusters`).
+  * [[crossBucketPairs]], the form for pairs ACROSS two sides of a bucket
+  * join, is shared by the incremental delta×prior LSH join
   * ([[DedupPipeline.incremental]]) and [[CrossCorpus.nearDupPairs]].
   *
-  * `emit` contract: `rows` is a partition iterator of (k1, k2, value) triples
-  * already SORTED by bucket key (and by whatever within-bucket order adjacency
-  * should follow — id order for MinHash buckets, (fingerprint, id) order
-  * for SimHash buckets). For each bucket of n values:
+  * Within-bucket policy, for each bucket of n values in sort order:
   *   - n < 2                      → nothing;
   *   - n ≤ maxAllPairs            → all C(n,2) pairs;
   *   - n > maxAllPairs, chainHuge → the adjacent chain (n-1 pairs),
@@ -72,29 +75,57 @@ object PairEmission {
     small.union(chained)
   }
 
-  def emit[T](
-      rows: Iterator[(Long, Long, T)],
+  /** Within-bucket pairs of `rows`: (`a`, `b`) with `value`'s data type,
+    * under the policy above, per bucket of equal `keys` (two columns, cast
+    * to long — a `posexplode` band is an int). Rows are shuffled on the
+    * keys and sorted by the keys, then by `order` — the within-bucket
+    * order chain adjacency follows (id order for MinHash buckets,
+    * (fingerprint, id) order for SimHash buckets). Not deduplicated: a pair
+    * sharing several buckets comes out once per bucket.
+    */
+  def bucketPairs(rows: DataFrame, keys: Seq[String], order: Seq[String],
+      value: Column, maxAllPairs: Int, hugeCutoff: Long = Long.MaxValue,
+      chainHuge: Boolean = false, onHot: () => Unit = () => (),
+      onDropped: Long => Unit = _ => ()): DataFrame = {
+    require(keys.size == 2, s"bucketPairs takes two key columns, got $keys")
+    val k = keys.map(c => col(c).cast("long"))
+    val sorted = rows.repartition(k: _*)
+      .sortWithinPartitions(k ++ order.map(col): _*)
+      .select(k :+ value.as("v"): _*)
+    val v = sorted.schema("v")
+    val out = StructType(Seq(StructField("a", v.dataType, v.nullable),
+      StructField("b", v.dataType, v.nullable)))
+    sorted.mapPartitions(it =>
+      emit(it, maxAllPairs, hugeCutoff, chainHuge, onHot, onDropped))(Encoders.row(out))
+  }
+
+  /** The streaming pass of [[bucketPairs]] over partition rows
+    * (k1: long, k2: long, value) already sorted by bucket key, then by the
+    * within-bucket order; yields Row(a, b) value pairs.
+    */
+  private[graft] def emit(
+      rows: Iterator[Row],
       maxAllPairs: Int,
       hugeCutoff: Long = Long.MaxValue,
       chainHuge: Boolean = false,
       onHot: () => Unit = () => (),
-      onDropped: Long => Unit = _ => ())(implicit ct: scala.reflect.ClassTag[T]): Iterator[(T, T)] =
-    new Iterator[(T, T)] {
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[T]
+      onDropped: Long => Unit = _ => ()): Iterator[Row] =
+    new Iterator[Row] {
+      private val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
       private var curK1 = Long.MinValue
       private var curK2 = Long.MinValue
       private var started = false
       private var chaining = false // this bucket switched to incremental chain
       private var bucketN = 0L     // true member count of the current bucket
-      private var prev: T = _
-      private var out: Iterator[(T, T)] = Iterator.empty
+      private var prev: Any = _
+      private var out: Iterator[Row] = Iterator.empty
       private var done = false
 
       /** Pairs owed for `v` joining the current bucket. */
-      private def push(v: T): Iterator[(T, T)] = {
+      private def push(v: Any): Iterator[Row] = {
         bucketN += 1
         if (chaining) {
-          val p = (prev, v)
+          val p = Row(prev, v)
           prev = v
           Iterator.single(p)
         } else if (bucketN <= maxAllPairs) {
@@ -109,7 +140,7 @@ object PairEmission {
           val vs = buf.toArray
           buf.clear()
           prev = v
-          Iterator.range(0, vs.length - 1).map(i => (vs(i), vs(i + 1)))
+          Iterator.range(0, vs.length - 1).map(i => Row(vs(i), vs(i + 1)))
         } else {
           // drop-mode caller: the all-pairs/chain/drop decision needs the
           // final size, so buffer (capped at hugeCutoff+1 — a bucket past
@@ -120,7 +151,7 @@ object PairEmission {
       }
 
       /** Pairs owed when the current bucket ends. */
-      private def endBucket(): Iterator[(T, T)] = {
+      private def endBucket(): Iterator[Row] = {
         val res =
           if (chaining || bucketN < 2) Iterator.empty // chain already streamed
           else if (bucketN <= maxAllPairs) {
@@ -129,12 +160,12 @@ object PairEmission {
             for {
               i <- Iterator.range(0, n)
               j <- Iterator.range(i + 1, n)
-            } yield (vs(i), vs(j))
+            } yield Row(vs(i), vs(j))
           } else if (bucketN <= hugeCutoff) {
             onHot()
             val n = buf.length
             val vs = buf.toArray
-            Iterator.range(0, n - 1).map(i => (vs(i), vs(i + 1)))
+            Iterator.range(0, n - 1).map(i => Row(vs(i), vs(i + 1)))
           } else {
             onDropped(bucketN)
             Iterator.empty
@@ -149,15 +180,17 @@ object PairEmission {
       private def advance(): Unit =
         if (!out.hasNext && !done) {
           if (rows.hasNext) {
-            val (k1, k2, v) = rows.next()
+            val r = rows.next()
+            val k1 = r.getLong(0)
+            val k2 = r.getLong(1)
             if (!started || k1 != curK1 || k2 != curK2) {
               out = endBucket()
               curK1 = k1
               curK2 = k2
               started = true
-              out = out ++ push(v)
+              out = out ++ push(r.get(2))
             } else {
-              out = push(v)
+              out = push(r.get(2))
             }
             advance()
           } else {
@@ -167,6 +200,6 @@ object PairEmission {
         }
 
       override def hasNext: Boolean = { advance(); out.hasNext }
-      override def next(): (T, T) = { advance(); out.next() }
+      override def next(): Row = { advance(); out.next() }
     }
 }

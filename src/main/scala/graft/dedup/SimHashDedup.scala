@@ -75,14 +75,15 @@ object SimHashDedup {
   }
 
   /** Candidate + verified pairs (a < b) with hamming(simhash_a, simhash_b)
-    * ≤ maxHamming, from a signature frame with (id, simhash: long) — id is
-    * either a long or the 128-bit two-long struct (h1, h2).
+    * ≤ maxHamming, from a signature frame with (id, simhash: long) — id of
+    * any orderable type (a long, or the pipeline's 128-bit struct id).
     *
     * Physical shape mirrors the main pipeline's candidate stage: explode
-    * C(maxHamming+3, 3) (table, key) rows per doc, ONE shuffle
-    * (repartition by table+key) + in-partition sort + streaming
-    * [[PairEmission]] pass (all pairs ≤ maxBucketSize, incremental chain
-    * above — O(1) memory per hot bucket), then Hamming-verify and distinct.
+    * C(maxHamming+3, 3) (table, key) rows per doc, then ONE
+    * [[PairEmission.bucketPairs]] pass over (simhash, id) values (one
+    * shuffle by table+key, in-partition sort, all pairs ≤ maxBucketSize,
+    * incremental chain above — O(1) memory per hot bucket), then
+    * Hamming-verify and distinct.
     *
     * `hotBucketAcc`: optional accumulator counting buckets that fell back
     * to chain emission (the skew-policy activation metric).
@@ -92,63 +93,22 @@ object SimHashDedup {
       hotBucketAcc: Option[LongAccumulator] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 4,
       "maxHamming in [0, 4] (table count C(maxHamming+3, 3) grows fast)")
-    val spark = sigs.sparkSession
-    import spark.implicits._
+    // sorted by (simhash, id) within the bucket: chain adjacency then runs
+    // inside identical-fingerprint families, whose pairs pass the Hamming
+    // filter — connectivity of a hot family is preserved
+    val pairs = PairEmission.bucketPairs(tableRows(sigs, maxHamming),
+      Seq("table", "key"), order = Seq("simhash", "id"),
+      value = struct(col("simhash"), col("id")),
+      maxAllPairs = maxBucketSize, chainHuge = true,
+      onHot = () => hotBucketAcc.foreach(_.add(1L)))
 
-    val banded = tableRows(sigs, maxHamming)
-
-    val maxAll = maxBucketSize
-    val hot = hotBucketAcc
-    val sorted = banded
-      .repartition(col("table"), col("key"))
-      // sort by (simhash, id) within the bucket: chain adjacency then runs
-      // inside identical-fingerprint families, whose pairs pass the
-      // Hamming filter — connectivity of a hot family is preserved
-      .sortWithinPartitions("table", "key", "simhash", "id")
-
-    // The id is either one long or the 128-bit two-long struct; the
-    // emission pass is identical, only the tuple decode differs.
-    val wideId = sigs.schema("id").dataType.isInstanceOf[org.apache.spark.sql.types.StructType]
-    val pairs =
-      if (!wideId)
-        sorted
-          .as[(Long, Long, Long, Long)]
-          .mapPartitions { it =>
-            PairEmission.emit[(Long, Long)](
-              it.map { case (t, k, sim, id) => (t, k, (sim, id)) },
-              maxAllPairs = maxAll,
-              chainHuge = true,
-              onHot = () => hot.foreach(_.add(1L)))
-          }
-          .map { case ((simX, idX), (simY, idY)) => (idX, simX, idY, simY) }
-          .toDF("id_x", "sim_x", "id_y", "sim_y")
-      else
-        sorted.select(col("table"), col("key"), col("simhash"),
-          col("id.h1"), col("id.h2"))
-          .as[(Long, Long, Long, Long, Long)]
-          .mapPartitions { it =>
-            PairEmission.emit[(Long, (Long, Long))](
-              it.map { case (t, k, sim, h1, h2) => (t, k, (sim, (h1, h2))) },
-              maxAllPairs = maxAll,
-              chainHuge = true,
-              onHot = () => hot.foreach(_.add(1L)))
-          }
-          .map { case ((simX, (ax1, ax2)), (simY, (bx1, bx2))) =>
-            (ax1, ax2, simX, bx1, bx2, simY)
-          }
-          .toDF("ax1", "ax2", "sim_x", "bx1", "bx2", "sim_y")
-          .select(
-            struct(col("ax1").as("h1"), col("ax2").as("h2")).as("id_x"),
-            col("sim_x"),
-            struct(col("bx1").as("h1"), col("bx2").as("h2")).as("id_y"),
-            col("sim_y"))
-
+    val hamming = hamming64(col("a.simhash"), col("b.simhash"))
     pairs
-      .filter(hamming64(col("sim_x"), col("sim_y")) <= maxHamming)
+      .filter(hamming <= maxHamming)
       .select(
-        least(col("id_x"), col("id_y")).as("a"),
-        greatest(col("id_x"), col("id_y")).as("b"),
-        hamming64(col("sim_x"), col("sim_y")).as("hamming"))
+        least(col("a.id"), col("b.id")).as("a"),
+        greatest(col("a.id"), col("b.id")).as("b"),
+        hamming.as("hamming"))
       .distinct()
   }
 }

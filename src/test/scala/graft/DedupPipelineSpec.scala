@@ -343,6 +343,18 @@ class DedupPipelineSpec extends AnyFunSuite {
 
     val pairs = pipe.candidatePairsPlan(sigs, exact).localCheckpoint(true)
 
+    // SimHash candidates: the same PairEmission.bucketPairs pass. Exactly
+    // one shuffle on (table, key), and it feeds the in-partition sort by
+    // (table, key, simhash, id); the other Exchange is the final distinct.
+    val simPlan = finalPlan(pipe.simHashCandidatesPlan(sigs))
+    assert(!simPlan.contains("Window") && !simPlan.contains("CartesianProduct"), simPlan)
+    val bucketShuffle = raw"Exchange hashpartitioning\(table#\d+L, key#\d+L, \d+\)"
+    assert(bucketShuffle.r.findAllIn(simPlan).length === 1, simPlan)
+    val sortOverShuffle = (raw"Sort \[table#\d+L ASC NULLS FIRST, key#\d+L ASC NULLS FIRST, " +
+      raw"simhash#\d+L ASC NULLS FIRST, id#\d+L ASC NULLS FIRST\], false, 0\n" +
+      raw"(\s*\+- (AQEShuffleRead|ShuffleQueryStage)[^\n]*\n)*\s*\+- " + bucketShuffle).r
+    assert(sortOverShuffle.findFirstIn(simPlan).nonEmpty, simPlan)
+
     // Stage 4: both joins back to the signature table must be shuffled
     // hash joins (co-partition on the id, build on the slim pair side) —
     // never sort-merge (pointless sort of shingle arrays) and never a
@@ -421,6 +433,8 @@ class DedupPipelineSpec extends AnyFunSuite {
     val crashCfg = DedupConfig(resumeChunks = 1)
     val crashStore = freshStore()
     val crashPipe = new DedupPipeline(spark, crashCfg, crashStore)
+    // the crashed run had fingerprinted the store before its first stage
+    assert(crashPipe.incBatches.isEmpty)
     crashStore.write("signatures", crashPipe.signaturesChunkPlan(dupPages.toDF()))
     assert(!crashStore.marked("signatures_idcheck"))
     val ex3 = intercept[IllegalArgumentException] {
@@ -603,6 +617,38 @@ class DedupPipelineSpec extends AnyFunSuite {
       new DedupPipeline(spark, DedupConfig(), store).run(pages).count()
     }
     assert(exLegacy.getMessage.contains("pre-field-format"))
+  }
+
+  test("stage methods fingerprint the store: built one stage at a time, it takes " +
+      "a delta; a stage call under another config is refused") {
+    import scala.util.hashing.MurmurHash3
+    val all = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 40, seed = 29)).cache()
+    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
+    val aPages = all.filter(p => part(p) >= 1)
+    val bPages = all.filter(p => part(p) == 0)
+    def key(df: DataFrame) = df.select("url", "cluster_id", "is_representative")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    val full = key(new DedupPipeline(spark, DedupConfig(), freshStore())
+      .run(aPages.union(bPages)))
+
+    // the six stage methods one by one, as a traced benchmark pass calls them
+    val store = freshStore()
+    val staged = new DedupPipeline(spark, DedupConfig(), store)
+    val sigs = staged.signatures(aPages)
+    val exact = staged.exactEdges(sigs)
+    val pairs = staged.candidatePairs(sigs, exact)
+    val verified = staged.verifiedEdges(sigs, pairs, Some(aPages))
+    staged.clusters(sigs, staged.components(exact, verified)).count()
+    val pipe = new DedupPipeline(spark, DedupConfig(), store)
+    pipe.materializeStateTables()
+    assert(key(pipe.incremental("b", bPages)) === full)
+
+    val ex = intercept[IllegalArgumentException] {
+      new DedupPipeline(spark, DedupConfig(maxBucketAllPairs = 32), store)
+        .candidatePairs(sigs, exact)
+    }
+    assert(ex.getMessage.contains("maxBucketAllPairs: stored=64 current=32"), ex.getMessage)
+    all.unpersist()
   }
 
   test("incremental batches: run(A)+inc(B)+inc(C) equals run(A∪B∪C) bit-identically") {

@@ -105,37 +105,80 @@ class ExprSpec extends AnyFunSuite {
   }
 
   test("PairEmission: all-pairs below cap, chain above, drop/chain past huge cutoff") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.functions.struct
     import graft.dedup.PairEmission
-    def rows(buckets: (Long, Seq[Long])*): Iterator[(Long, Long, Long)] =
-      buckets.iterator.flatMap { case (k, ids) => ids.map(id => (0L, k, id)) }
+    val s = onceRegistered()
+    import s.implicits._
+    def rows(buckets: (Long, Seq[Long])*): Iterator[Row] =
+      buckets.iterator.flatMap { case (k, ids) => ids.map(id => Row(0L, k, id)) }
+    def longPairs(out: Iterator[Row]): Vector[(Long, Long)] =
+      out.map(r => (r.getLong(0), r.getLong(1))).toVector
+
+    // bucketPairs over the same buckets (an int band key, as posexplode
+    // gives), the id carried as a long, as an (h1 = id, h2 = 0) struct and
+    // as a (fingerprint, id) struct: each must give the iterator's pairs
+    // and fire onHot / onDropped as often, with the same dropped sizes
+    def viaFrames(buckets: Seq[(Long, Seq[Long])], maxAllPairs: Int,
+        hugeCutoff: Long, chainHuge: Boolean,
+        pairs: Vector[(Long, Long)], hot: Long, dropped: Seq[Long]): Unit = {
+      val df = buckets.flatMap { case (k, ids) => ids.map(id => (0, k, id)) }
+        .toDF("band", "bucket", "id").withColumn("fp", c("bucket") * 1000L)
+        .repartition(3)
+      val values = Seq[(String, Column, Seq[String], Any => Long)](
+        ("long", c("id"), Seq("id"), _.asInstanceOf[Long]),
+        ("(h1, h2)", struct(c("id").as("h1"), lit(0L).as("h2")), Seq("id"),
+          _.asInstanceOf[Row].getLong(0)),
+        ("(fp, id)", struct(c("fp"), c("id")), Seq("fp", "id"),
+          _.asInstanceOf[Row].getLong(1)))
+      values.foreach { case (what, value, order, idOf) =>
+        val hotAcc = s.sparkContext.longAccumulator
+        val droppedAcc = s.sparkContext.longAccumulator
+        val droppedRows = s.sparkContext.longAccumulator
+        val out = PairEmission.bucketPairs(df, Seq("band", "bucket"), order, value,
+            maxAllPairs, hugeCutoff, chainHuge, onHot = () => hotAcc.add(1L),
+            onDropped = n => { droppedAcc.add(1L); droppedRows.add(n) })
+          .collect().map(r => (idOf(r.get(0)), idOf(r.get(1)))).toVector
+        assert(out.sorted === pairs.sorted, what)
+        assert((hotAcc.sum, droppedAcc.sum, droppedRows.sum) ===
+          ((hot, dropped.size.toLong, dropped.sum)), what)
+      }
+    }
 
     // all-pairs ≤ cap; chain above; <2 members → nothing
-    val basic = PairEmission.emit[Long](
-      rows(1L -> Seq(10L, 20L, 30L), 2L -> Seq(1L, 2L, 3L, 4L, 5L),
-        3L -> Seq(7L), 4L -> Seq.empty),
-      maxAllPairs = 3, hugeCutoff = 100L).toVector
+    val basicIn = Seq(1L -> Seq(10L, 20L, 30L), 2L -> Seq(1L, 2L, 3L, 4L, 5L),
+      3L -> Seq(7L), 4L -> Seq.empty[Long])
+    var basicHot = 0
+    val basic = longPairs(PairEmission.emit(
+      rows(basicIn: _*),
+      maxAllPairs = 3, hugeCutoff = 100L, onHot = () => basicHot += 1))
     assert(basic.filter(_._1 >= 10L).toSet ===
       Set((10L, 20L), (10L, 30L), (20L, 30L)))
     assert(basic.filterNot(_._1 >= 10L).toSet ===
       Set((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
+    viaFrames(basicIn, 3, 100L, chainHuge = false, basic, basicHot, Nil)
 
     // drop-mode: bucket past hugeCutoff emits nothing, onDropped sees size
+    val droppedIn = Seq(1L -> (1L to 10L), 2L -> Seq(100L, 101L))
     var dropped = List.empty[Long]
-    val droppedOut = PairEmission.emit[Long](
-      rows(1L -> (1L to 10L), 2L -> Seq(100L, 101L)),
+    val droppedOut = longPairs(PairEmission.emit(
+      rows(droppedIn: _*),
       maxAllPairs = 2, hugeCutoff = 5L, chainHuge = false,
-      onDropped = n => dropped ::= n).toVector
+      onDropped = n => dropped ::= n))
     assert(droppedOut === Vector((100L, 101L)))
     assert(dropped === List(10L))
+    viaFrames(droppedIn, 2, 5L, chainHuge = false, droppedOut, 0L, dropped)
 
     // chainHuge: same bucket chains incrementally instead, onHot fires once
+    val chainedIn = Seq(1L -> (1L to 10L))
     var hot = 0
-    val chained = PairEmission.emit[Long](
-      rows(1L -> (1L to 10L)),
+    val chained = longPairs(PairEmission.emit(
+      rows(chainedIn: _*),
       maxAllPairs = 2, hugeCutoff = 5L, chainHuge = true,
-      onHot = () => hot += 1).toVector
+      onHot = () => hot += 1))
     assert(chained === (1L to 9L).map(i => (i, i + 1)).toVector)
     assert(hot === 1)
+    viaFrames(chainedIn, 2, 5L, chainHuge = true, chained, hot, Nil)
   }
 
   test("minhash_jaccard: exact on identical sets, tracks true jaccard on overlap") {
