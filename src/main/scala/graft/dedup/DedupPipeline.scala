@@ -118,30 +118,25 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
   def signatures(pages: Dataset[Page]): DataFrame =
     withUniqueIds("input", "signatures_idcheck", signatureStages) { missing =>
       val c = config.resumeChunks
-      if (c == 1) store.getOrCompute("signatures")(signaturesChunkPlan(pages.toDF()))
-      else {
-        // one input scan for all chunk computations: cache the pages only if
-        // some chunk actually needs computing (on clean resume: zero reads).
-        // In production the chunk key is the Iceberg ingest partition and
-        // each chunk's scan prunes to its own files — no cache needed.
-        // The signature projection never touches the raw html payload — keep
-        // it out of the cache (it is the corpus's largest column)
-        val slimPages = pages.toDF().drop("html")
-        val cached =
-          if (missing.size > 1)
-            Some(slimPages.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          else None
-        val input = cached.getOrElse(slimPages)
-        val parts = signatureStages.zipWithIndex.map { case (st, i) =>
-          store.getOrCompute(st) {
-            signaturesChunkPlan(input.filter(
-              pmod(xxhash64(col("url"), col("warc_ts")), lit(c)) === i))
-          }
-        }
-        cached.foreach(_.unpersist(blocking = false))
-        // by name: chunks written by an older build may carry extra columns
-        parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      }
+      // one input scan for all chunk computations: cache the pages only if
+      // more than one chunk needs computing (on clean resume: zero reads).
+      // In production the chunk key is the Iceberg ingest partition and
+      // each chunk's scan prunes to its own files — no cache needed.
+      // The signature projection never touches the raw html payload — keep
+      // it out of the cache (it is the corpus's largest column)
+      val slimPages = pages.toDF().drop("html")
+      val cached =
+        if (missing.size > 1)
+          Some(slimPages.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        else None
+      val input = cached.getOrElse(slimPages)
+      try signatureStages.zipWithIndex.filter(si => missing.contains(si._1)).foreach {
+        case (st, i) =>
+          store.write(st, signaturesChunkPlan(
+            if (c == 1) input
+            else input.filter(pmod(xxhash64(col("url"), col("warc_ts")), lit(c)) === i)))
+      } finally cached.foreach(_.unpersist(blocking = false))
+      store.read(signatureStages)
     }
 
   /** `compute(missing)` — `missing` being the `stages` not yet
@@ -613,12 +608,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       s"checkpoint dir ${store.root} holds stages from unapplied batch(es) " +
         s"${stray.mkString(", ")} — finish or invalidate them before starting '$batch'")
 
-    // one read of the base signatures serves both the prior-id anti-join
-    // and (on a store not yet adopted) the state tables' adoption
-    val baseSigs = readBaseSignatures()
-    ensureStateTables(applied, baseSigs)
-    val priorSigs = (baseSigs +: applied.map(b => store.read(s"inc_${b}_signatures")))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    ensureStateTables(applied)
+    val priorSigStages = signatureStages ++ applied.map(b => s"inc_${b}_signatures")
+    val priorSigs = store.read(priorSigStages)
 
     // 1 — delta signatures (ids already present are the same capture:
     // drop); the optional canonical-url pre-dedup applies within the
@@ -632,210 +624,215 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       }
     }
 
-    // 2 — exact path via the (content_hash → min id) state: a pruned
-    // latest-wins read of the delta's hash partitions, then a layer append
-    // of ONLY the changed/new keys (merge-on-read upsert; the state key is
-    // also the partition key, so a newer layer shadows the same key in
-    // place and tombstones are never needed here). priorTouchedHash/
-    // deltaMin each feed two consumers (layer write + edge derivation):
-    // persist so the pruned read runs once, not per consumer.
-    val deltaMin = sigsNew.groupBy("content_hash").agg(min("id").as("dm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touchedHashPk = touchedPkeys("hash_min", deltaMin)
-    val priorTouchedHash = resolveState("hash_min",
-      stateView("hash_min", applied, Some(touchedHashPk)))
-      .select("content_hash", "m")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the batch's current min per delta hash — prior min if smaller
-    val curMin = deltaMin.join(priorTouchedHash, Seq("content_hash"), "left")
-      .select(col("content_hash"),
-        least(col("dm"), coalesce(col("m"), col("dm"))).as("cm"),
-        col("m").as("pm"), col("dm"))
-    store.getOrComputePartitioned(s"inc_${batch}_hash_min_state") {
-      layerRows("hash_min", curMin.filter(col("pm").isNull || col("cm") < col("pm"))
-        .select(col("content_hash"), col("cm").as("m")))
+    // frames persisted for this batch, released however it ends: a stage
+    // that throws must not leave them pinned for the rest of the session
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      pinned += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
     }
-    val exactInc = store.getOrCompute(s"inc_${batch}_exact_edges") {
-      // delta docs to their (possibly old) group min …
-      val newDoc = sigsNew.select("id", "content_hash")
-        .join(curMin.select("content_hash", "cm"), "content_hash")
-        .filter(col("id") =!= col("cm"))
-        .select(col("cm").as("a"), col("id").as("b"))
-      // … and the demoted old min when the delta brings a smaller id
-      val repChange = curMin
-        .filter(col("pm").isNotNull && col("dm") < col("pm"))
-        .select(col("dm").as("a"), col("pm").as("b"))
-      newDoc.union(repChange).distinct()
-    }
+    try {
+      // 2 — exact path via the (content_hash → min id) state: a pruned
+      // latest-wins read of the delta's hash partitions, then a layer append
+      // of ONLY the changed/new keys (merge-on-read upsert; the state key is
+      // also the partition key, so a newer layer shadows the same key in
+      // place and tombstones are never needed here). priorTouchedHash/
+      // deltaMin each feed two consumers (layer write + edge derivation):
+      // persist so the pruned read runs once, not per consumer.
+      val deltaMin = pin(sigsNew.groupBy("content_hash").agg(min("id").as("dm")))
+      val touchedHashPk = touchedPkeys("hash_min", deltaMin)
+      val priorTouchedHash = pin(resolveState("hash_min",
+        stateView("hash_min", applied, Some(touchedHashPk)))
+        .select("content_hash", "m"))
+      // the batch's current min per delta hash — prior min if smaller
+      val curMin = deltaMin.join(priorTouchedHash, Seq("content_hash"), "left")
+        .select(col("content_hash"),
+          least(col("dm"), coalesce(col("m"), col("dm"))).as("cm"),
+          col("m").as("pm"), col("dm"))
+      store.getOrComputePartitioned(s"inc_${batch}_hash_min_state") {
+        layerRows("hash_min", curMin.filter(col("pm").isNull || col("cm") < col("pm"))
+          .select(col("content_hash"), col("cm").as("m")))
+      }
+      val exactInc = store.getOrCompute(s"inc_${batch}_exact_edges") {
+        // delta docs to their (possibly old) group min …
+        val newDoc = sigsNew.select("id", "content_hash")
+          .join(curMin.select("content_hash", "cm"), "content_hash")
+          .filter(col("id") =!= col("cm"))
+          .select(col("cm").as("a"), col("id").as("b"))
+        // … and the demoted old min when the delta brings a smaller id
+        val repChange = curMin
+          .filter(col("pm").isNotNull && col("dm") < col("pm"))
+          .select(col("dm").as("a"), col("pm").as("b"))
+        newDoc.union(repChange).distinct()
+      }
 
-    // 3 — LSH candidates: delta×delta via the batch plan, delta×prior via
-    //     the pkey-partitioned band STATE (appended per batch at ingest,
-    //     never re-derived from the corpus), pruned to delta-touched
-    //     partitions, under the shared cross-bucket skew ladder.
-    // The delta's band rows are APPENDED to the state table as their own
-    // stage FIRST — outside the candidate thunk, so a resume that skips
-    // the (complete) candidate stage still guarantees the append exists
-    // for every later batch.
-    val bandStateStage = store.getOrComputePartitioned(s"inc_${batch}_band_state") {
-      layerRows("band", bandRowsOf(sigsNew, exactInc))
-    }
-    val deltaSimStage =
-      if (!config.useSimHashCandidates) None
-      else Some(store.getOrComputePartitioned(s"inc_${batch}_sim_state") {
-        layerRows("sim",
-          SimHashDedup.tableRows(sigsNew.select("id", "simhash"), SimHashDedup.MaxHamming))
-      })
-    val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
-      val within = candidatePairsPlan(sigsNew, exactInc)
-      // the delta's band rows read back from their materialized state stage
-      // (delta-sized), replacing the old eager localCheckpoint
-      val deltaBand = bandStateStage.select("id", "band", "bucket")
-      // no broadcast hint: for a small delta AQE broadcasts the bucket set
-      // (prior band rows never shuffle); a corpus-sized delta would OOM the
-      // driver under a forced broadcast, and shuffling is then correct
-      val touchedBuckets = deltaBand.select("band", "bucket").distinct()
-      val touchedBandPk = touchedPkeys("band", deltaBand)
-      val oldBand = stateView("band", applied, Some(touchedBandPk))
-        .join(touchedBuckets, Seq("band", "bucket"), "left_semi")
-        .select("id", "band", "bucket")
+      // 3 — LSH candidates: delta×delta via the batch plan, delta×prior via
+      //     the pkey-partitioned band STATE (appended per batch at ingest,
+      //     never re-derived from the corpus), pruned to delta-touched
+      //     partitions, under the shared cross-bucket skew ladder.
+      // The delta's band rows are APPENDED to the state table as their own
+      // stage FIRST — outside the candidate thunk, so a resume that skips
+      // the (complete) candidate stage still guarantees the append exists
+      // for every later batch.
+      val bandStateStage = store.getOrComputePartitioned(s"inc_${batch}_band_state") {
+        layerRows("band", bandRowsOf(sigsNew, exactInc))
+      }
+      val deltaSimStage =
+        if (!config.useSimHashCandidates) None
+        else Some(store.getOrComputePartitioned(s"inc_${batch}_sim_state") {
+          layerRows("sim",
+            SimHashDedup.tableRows(sigsNew.select("id", "simhash"), SimHashDedup.MaxHamming))
+        })
+      val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
+        val within = candidatePairsPlan(sigsNew, exactInc)
+        // the delta's band rows read back from their materialized state stage
+        // (delta-sized), replacing the old eager localCheckpoint
+        val deltaBand = bandStateStage.select("id", "band", "bucket")
+        // no broadcast hint: for a small delta AQE broadcasts the bucket set
+        // (prior band rows never shuffle); a corpus-sized delta would OOM the
+        // driver under a forced broadcast, and shuffling is then correct
+        val touchedBuckets = deltaBand.select("band", "bucket").distinct()
+        val touchedBandPk = touchedPkeys("band", deltaBand)
+        val oldBand = stateView("band", applied, Some(touchedBandPk))
+          .join(touchedBuckets, Seq("band", "bucket"), "left_semi")
+          .select("id", "band", "bucket")
+          .localCheckpoint(true)
+        val cross = PairEmission.crossBucketPairs(deltaBand, oldBand,
+          Seq("band", "bucket"), config.maxBucketAllPairs, HugeBucketCutoff,
+          Some(droppedBuckets))
+          .select(least(col("id"), col("oid")).as("a"),
+            greatest(col("id"), col("oid")).as("b"))
+          .filter(col("a") =!= col("b"))
+        val lsh = within.union(cross)
+
+        // optional SimHash candidate source, mirrored incrementally:
+        // delta×delta via the batch operator, delta×prior via a Manku-table
+        // cross join (prior rows restricted to delta-touched table keys).
+        // Hot identical-fingerprint floods chain each delta doc to the
+        // flood's min id (hamming 0 — always verified); pairs between
+        // DISTINCT fingerprints in a hot bucket degrade exactly like the
+        // batch operator's run-boundary probing.
+        val all =
+          if (!config.useSimHashCandidates) lsh
+          else {
+            val k = SimHashDedup.MaxHamming
+            val simWithin = simHashCandidatesPlan(sigsNew)
+            // the delta's Manku-table rows, read back from their state stage;
+            // the prior side is the pruned SimHash state (appended per batch
+            // at ingest — never tableRows(corpus) re-derivation)
+            val deltaSim = deltaSimStage.get
+              .select("table", "key", "simhash", "id").localCheckpoint(true)
+            val touchedSimPk = touchedPkeys("sim", deltaSim)
+            val priorSim = stateView("sim", applied, Some(touchedSimPk))
+              .select("table", "key", "simhash", "id")
+              .join(deltaSim.select("table", "key").distinct(),
+                Seq("table", "key"), "left_semi")
+              .localCheckpoint(true)
+            val sStats = priorSim.groupBy("table", "key")
+              .agg(count(lit(1)).as("n")).localCheckpoint(true)
+            val simSmall = deltaSim
+              .join(sStats.filter(col("n") <= config.simHashMaxBucket)
+                .select("table", "key"), Seq("table", "key"), "left_semi")
+              .join(priorSim
+                .withColumnsRenamed(Map("id" -> "oid", "simhash" -> "osim")),
+                Seq("table", "key"))
+              .filter(hamming64(col("simhash"), col("osim")) <= k)
+              .select(least(col("id"), col("oid")).as("a"),
+                greatest(col("id"), col("oid")).as("b"))
+            val simHot = deltaSim
+              .join(sStats.filter(col("n") > config.simHashMaxBucket)
+                .select("table", "key"), Seq("table", "key"), "left_semi")
+              .join(priorSim.groupBy("table", "key", "simhash")
+                .agg(min("id").as("oid")), Seq("table", "key", "simhash"))
+              .select(least(col("id"), col("oid")).as("a"),
+                greatest(col("id"), col("oid")).as("b"))
+              .filter(col("a") =!= col("b"))
+            // skew-policy observability, as in the batch operator: hot sim
+            // buckets are counted, never silent (this probe reuses the tiny
+            // aggregated sStats checkpoint)
+            val nSimHot = sStats.filter(col("n") > config.simHashMaxBucket).count()
+            if (nSimHot > 0) hotBuckets.add(nSimHot)
+            lsh.union(simWithin).union(simSmall).union(simHot)
+          }
+        all.distinct()
+      }
+
+      // 4 — verification: same plan as batch, but the shingle side is
+      //     semi-filtered to pair-touched ids FIRST — the batch plan shuffles
+      //     the whole signature table (necessary there), which for a 5% delta
+      //     would make verification cost corpus-sized instead of delta-sized.
+      val allSigs = store.read(priorSigStages :+ sigsStage)
+      val verifiedInc = store.getOrCompute(s"inc_${batch}_verified_edges") {
+        val pairIds = candInc.select(col("a").as("id"))
+          .union(candInc.select(col("b").as("id"))).distinct()
+        verifiedEdgesPlan(allSigs.join(pairIds, Seq("id"), "left_semi"),
+          candInc, allPages)
+      }
+
+      // 5 — incremental connected components: re-solve ONLY touched
+      // components, append ONLY the re-solved rows (+ tombstones for moves)
+      val newEdges = exactInc.select("a", "b").union(verifiedInc.select("a", "b"))
+      val edgeIds = newEdges.select(col("a").as("id"))
+        .union(newEdges.select(col("b").as("id"))).distinct()
+      // prior component of every edge-touched node (prior singletons = own
+      // id). The id probe semi-filters the slim RAW layer rows map-side
+      // (edgeIds is delta-small ⇒ broadcast semi, no corpus shuffle), and
+      // latest-wins resolution runs on the delta-sized survivors only. The
+      // component-hash layout cannot prune an id lookup; production puts a
+      // bloom/id index on the state files.
+      val priorOfEdge = resolveState("comp",
+        stateView("comp", applied, None).join(edgeIds, Seq("id"), "left_semi"))
+      val touched = edgeIds
+        .join(priorOfEdge.select("id", "component"), Seq("id"), "left")
+        .select(coalesce(col("component"), col("id")).as("component")).distinct()
         .localCheckpoint(true)
-      val cross = PairEmission.crossBucketPairs(deltaBand, oldBand,
-        Seq("band", "bucket"), config.maxBucketAllPairs, HugeBucketCutoff,
-        Some(droppedBuckets))
-        .select(least(col("id"), col("oid")).as("a"),
-          greatest(col("id"), col("oid")).as("b"))
-        .filter(col("a") =!= col("b"))
-      val lsh = within.union(cross)
-
-      // optional SimHash candidate source, mirrored incrementally:
-      // delta×delta via the batch operator, delta×prior via a Manku-table
-      // cross join (prior rows restricted to delta-touched table keys).
-      // Hot identical-fingerprint floods chain each delta doc to the
-      // flood's min id (hamming 0 — always verified); pairs between
-      // DISTINCT fingerprints in a hot bucket degrade exactly like the
-      // batch operator's run-boundary probing.
-      val all =
-        if (!config.useSimHashCandidates) lsh
-        else {
-          val k = SimHashDedup.MaxHamming
-          val simWithin = simHashCandidatesPlan(sigsNew)
-          // the delta's Manku-table rows, read back from their state stage;
-          // the prior side is the pruned SimHash state (appended per batch
-          // at ingest — never tableRows(corpus) re-derivation)
-          val deltaSim = deltaSimStage.get
-            .select("table", "key", "simhash", "id").localCheckpoint(true)
-          val touchedSimPk = touchedPkeys("sim", deltaSim)
-          val priorSim = stateView("sim", applied, Some(touchedSimPk))
-            .select("table", "key", "simhash", "id")
-            .join(deltaSim.select("table", "key").distinct(),
-              Seq("table", "key"), "left_semi")
-            .localCheckpoint(true)
-          val sStats = priorSim.groupBy("table", "key")
-            .agg(count(lit(1)).as("n")).localCheckpoint(true)
-          val simSmall = deltaSim
-            .join(sStats.filter(col("n") <= config.simHashMaxBucket)
-              .select("table", "key"), Seq("table", "key"), "left_semi")
-            .join(priorSim
-              .withColumnsRenamed(Map("id" -> "oid", "simhash" -> "osim")),
-              Seq("table", "key"))
-            .filter(hamming64(col("simhash"), col("osim")) <= k)
-            .select(least(col("id"), col("oid")).as("a"),
-              greatest(col("id"), col("oid")).as("b"))
-          val simHot = deltaSim
-            .join(sStats.filter(col("n") > config.simHashMaxBucket)
-              .select("table", "key"), Seq("table", "key"), "left_semi")
-            .join(priorSim.groupBy("table", "key", "simhash")
-              .agg(min("id").as("oid")), Seq("table", "key", "simhash"))
-            .select(least(col("id"), col("oid")).as("a"),
-              greatest(col("id"), col("oid")).as("b"))
-            .filter(col("a") =!= col("b"))
-          // skew-policy observability, as in the batch operator: hot sim
-          // buckets are counted, never silent (this probe reuses the tiny
-          // aggregated sStats checkpoint)
-          val nSimHot = sStats.filter(col("n") > config.simHashMaxBucket).count()
-          if (nSimHot > 0) hotBuckets.add(nSimHot)
-          lsh.union(simWithin).union(simSmall).union(simHot)
-        }
-      all.distinct()
-    }
-
-    // 4 — verification: same plan as batch, but the shingle side is
-    //     semi-filtered to pair-touched ids FIRST — the batch plan shuffles
-    //     the whole signature table (necessary there), which for a 5% delta
-    //     would make verification cost corpus-sized instead of delta-sized.
-    val allSigs = priorSigs.unionByName(sigsNew, allowMissingColumns = true)
-    val verifiedInc = store.getOrCompute(s"inc_${batch}_verified_edges") {
-      val pairIds = candInc.select(col("a").as("id"))
-        .union(candInc.select(col("b").as("id"))).distinct()
-      verifiedEdgesPlan(allSigs.join(pairIds, Seq("id"), "left_semi"),
-        candInc, allPages)
-    }
-
-    // 5 — incremental connected components: re-solve ONLY touched
-    // components, append ONLY the re-solved rows (+ tombstones for moves)
-    val newEdges = exactInc.select("a", "b").union(verifiedInc.select("a", "b"))
-    val edgeIds = newEdges.select(col("a").as("id"))
-      .union(newEdges.select(col("b").as("id"))).distinct()
-    // prior component of every edge-touched node (prior singletons = own
-    // id). The id probe semi-filters the slim RAW layer rows map-side
-    // (edgeIds is delta-small ⇒ broadcast semi, no corpus shuffle), and
-    // latest-wins resolution runs on the delta-sized survivors only. The
-    // component-hash layout cannot prune an id lookup; production puts a
-    // bloom/id index on the state files.
-    val priorOfEdge = resolveState("comp",
-      stateView("comp", applied, None).join(edgeIds, Seq("id"), "left_semi"))
-    val touched = edgeIds
-      .join(priorOfEdge.select("id", "component"), Seq("id"), "left")
-      .select(coalesce(col("component"), col("id")).as("component")).distinct()
-      .localCheckpoint(true)
-    val touchedCompPk = touchedPkeys("comp", touched)
-    // the touched components' CURRENT member rows: a partition-pruned scan
-    // + latest-wins resolve over the pruned rows (stale rows from earlier
-    // moves lose to their tombstones, see resolveState)
-    val oldMembers = resolveState("comp",
-      stateView("comp", applied, Some(touchedCompPk)))
-      .join(touched, Seq("component"), "left_semi")
-      .select("id", "component")
-      .localCheckpoint(true)
-    val subStage = store.getOrCompute(s"inc_${batch}_comp_delta") {
-      val subOld = oldMembers
-        .select(col("component").as("a"), col("id").as("b"))
-        .filter(col("a") =!= col("b"))
-      ConnectedComponents.run(subOld.union(newEdges),
-        durable = Some((store, CcDurableInterval)), durablePrefix = s"inc_${batch}_cc")
+      val touchedCompPk = touchedPkeys("comp", touched)
+      // the touched components' CURRENT member rows: a partition-pruned scan
+      // + latest-wins resolve over the pruned rows (stale rows from earlier
+      // moves lose to their tombstones, see resolveState)
+      val oldMembers = resolveState("comp",
+        stateView("comp", applied, Some(touchedCompPk)))
+        .join(touched, Seq("component"), "left_semi")
         .select("id", "component")
-    }
-    // layer append (merge-on-read upsert): the re-solved rows, plus a
-    // tombstone at the OLD partition for every member whose component —
-    // hence state partition — changed. Write volume is O(touched members
-    // + delta); untouched rows are never read or copied.
-    store.getOrComputePartitioned(s"inc_${batch}_comp_state") {
-      upsertLayer("comp", subStage.select("id", "component"), oldMembers)
-    }
-
-    // 6 — clusters: recompute rows only for touched clusters + the delta;
-    // append only those rows (+ tombstones for ids whose cluster moved)
-    store.getOrComputePartitioned(s"inc_${batch}_cluster_state") {
-      val touchedCl = touched.withColumnRenamed("component", "cluster_id")
-      val oldRows = resolveState("cluster",
-        stateView("cluster", applied, Some(touchedCompPk)))
-        .join(touchedCl, Seq("cluster_id"), "left_semi")
-        .select(ClusterCols.map(col): _*)
         .localCheckpoint(true)
-      val affectedIds = oldRows.select("id").union(sigsNew.select("id")).distinct()
-      val affectedSigs = allSigs.join(affectedIds, Seq("id"), "left_semi")
-      // every affected id's component was re-solved (members of touched
-      // components and delta ids all enter the sub-solve), so the
-      // delta-sized comp_delta stage IS the component lookup — no scan of
-      // the full mapping
-      val affectedComps = subStage.join(affectedIds, Seq("id"), "left_semi")
-      val newRows = clustersPlan(affectedSigs, affectedComps)
-        .select(ClusterCols.map(col): _*).localCheckpoint(true)
-      upsertLayer("cluster", newRows, oldRows)
-    }
-    appendIncLog(batch)
-    priorTouchedHash.unpersist(blocking = false)
-    deltaMin.unpersist(blocking = false)
+      val subStage = store.getOrCompute(s"inc_${batch}_comp_delta") {
+        val subOld = oldMembers
+          .select(col("component").as("a"), col("id").as("b"))
+          .filter(col("a") =!= col("b"))
+        ConnectedComponents.run(subOld.union(newEdges),
+          durable = Some((store, CcDurableInterval)), durablePrefix = s"inc_${batch}_cc")
+          .select("id", "component")
+      }
+      // layer append (merge-on-read upsert): the re-solved rows, plus a
+      // tombstone at the OLD partition for every member whose component —
+      // hence state partition — changed. Write volume is O(touched members
+      // + delta); untouched rows are never read or copied.
+      store.getOrComputePartitioned(s"inc_${batch}_comp_state") {
+        upsertLayer("comp", subStage.select("id", "component"), oldMembers)
+      }
+
+      // 6 — clusters: recompute rows only for touched clusters + the delta;
+      // append only those rows (+ tombstones for ids whose cluster moved)
+      store.getOrComputePartitioned(s"inc_${batch}_cluster_state") {
+        val touchedCl = touched.withColumnRenamed("component", "cluster_id")
+        val oldRows = resolveState("cluster",
+          stateView("cluster", applied, Some(touchedCompPk)))
+          .join(touchedCl, Seq("cluster_id"), "left_semi")
+          .select(ClusterCols.map(col): _*)
+          .localCheckpoint(true)
+        val affectedIds = oldRows.select("id").union(sigsNew.select("id")).distinct()
+        val affectedSigs = allSigs.join(affectedIds, Seq("id"), "left_semi")
+        // every affected id's component was re-solved (members of touched
+        // components and delta ids all enter the sub-solve), so the
+        // delta-sized comp_delta stage IS the component lookup — no scan of
+        // the full mapping
+        val affectedComps = subStage.join(affectedIds, Seq("id"), "left_semi")
+        val newRows = clustersPlan(affectedSigs, affectedComps)
+          .select(ClusterCols.map(col): _*).localCheckpoint(true)
+        upsertLayer("cluster", newRows, oldRows)
+      }
+      appendIncLog(batch)
+    } finally pinned.foreach(_.unpersist(blocking = false))
     // fold layers back into a single base once enough batches piled up
     maybeCompactState(applied :+ batch)
     // the full updated table is the layered view — no corpus-sized write
@@ -891,12 +888,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-
-  // unionByName + allowMissingColumns: signature checkpoints written by
-  // older builds differ in their columns (some carry a `sketch` column no
-  // reader selects), so layers are matched by name, never by position
-  private def readBaseSignatures(): DataFrame =
-    signatureStages.map(store.read).reduce(_.unionByName(_, allowMissingColumns = true))
 
   // ──────────────── pkey-partitioned incremental state tables ────────────────
   //
@@ -1114,12 +1105,10 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
 
   /** Adopt every state table's base layer from the base run's stages, if
     * absent (see [[materializeStateTables]]). [[requireStateSource]]
-    * guarantees that a store with applied batches already has them. `sigs`
-    * (the base signatures) is read only if some base layer is missing.
+    * guarantees that a store with applied batches already has them.
     */
-  private def ensureStateTables(applied: Seq[String],
-      sigs: => DataFrame = readBaseSignatures()): Unit = {
-    lazy val baseSigs = sigs
+  private def ensureStateTables(applied: Seq[String]): Unit = {
+    lazy val baseSigs = store.read(signatureStages)
     ensureStateBase("band", applied) {
       layerRows("band", bandRowsOf(baseSigs, store.read("exact_edges")))
     }
@@ -1167,7 +1156,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       // nothing matched the requested partitions — or every layer is
       // legitimately empty (e.g. a base corpus with no duplicate edges has
       // an empty component state): a typed empty frame from the schema
-      // sidecar of any completed layer
+      // record of any completed layer
       val completed = stages.find(store.has).getOrElse(throw new
           IllegalStateException(s"state table '$name' has no completed layer"))
       store.emptyLike(completed)

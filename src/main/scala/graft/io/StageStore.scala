@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Checkpointed stage storage with per-partition lineage + metrics
   * (SURVEY.md §7.3; resumability requirement in BASELINE.json.north_rule).
@@ -19,10 +20,21 @@ import org.apache.spark.sql.functions._
   * ships in this sandbox (verified, SURVEY.md §7.5), hence the parquet-dir
   * emulation behind the same interface.
   *
-  * Lineage: after the data write we read the files back (metadata-only
-  * count per file) and record (stage, file, rows, bytes, wall_ms, status) in
-  * the manifest. `lineage()` exposes them as a DataFrame for the metrics
-  * suite.
+  * Schema record: every commit also writes the stage's schema as
+  * `_SCHEMA.json` (the Iceberg table-schema analog), and every read opens
+  * the stage under it, so reading a stage back — including the re-read
+  * `write` returns — submits no Spark job: Spark infers a parquet schema
+  * with a one-task footer-reading job per read. A file source treats a
+  * given schema as nullable, so the read-back schema is the one inference
+  * would return. Stages written before the record existed have none and
+  * fall back to inference. `read(stages)` opens several stages as ONE
+  * parquet relation under their schemas merged by name (the columns of
+  * `unionByName(allowMissingColumns = true)`), so Spark packs their small
+  * files into shared splits instead of scanning each stage separately.
+  *
+  * Lineage: the manifest records (stage, file, rows, bytes, wall_ms,
+  * status), rows from each file's parquet footer. `lineage()` exposes them
+  * as a DataFrame for the metrics suite.
   */
 final class StageStore(spark: SparkSession, val root: String) {
 
@@ -31,14 +43,32 @@ final class StageStore(spark: SparkSession, val root: String) {
 
   def has(stage: String): Boolean = Files.exists(manifestPath(stage))
 
-  def read(stage: String): DataFrame = {
-    require(has(stage), s"stage '$stage' has no complete checkpoint under $root")
-    spark.read.parquet(stageDir(stage).toString)
+  def read(stage: String): DataFrame = read(Seq(stage))
+
+  /** Completed `stages` as one parquet relation, under their schemas merged
+    * by name: a column missing from some stage reads as null there.
+    */
+  def read(stages: Seq[String]): DataFrame = {
+    stages.foreach(st =>
+      require(has(st), s"stage '$st' has no complete checkpoint under $root"))
+    val merged = stages.map(schemaOf).reduce((a, b) =>
+      StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name))))
+    spark.read.schema(merged).parquet(stages.map(stageDir(_).toString): _*)
+  }
+
+  /** A completed stage's recorded schema; a stage written before the
+    * record existed falls back to parquet schema inference.
+    */
+  private def schemaOf(stage: String): StructType = {
+    val p = stageDir(stage).resolve("_SCHEMA.json")
+    if (Files.exists(p)) DataType.fromJson(Files.readString(p)).asInstanceOf[StructType]
+    else spark.read.parquet(stageDir(stage).toString).schema
   }
 
   /** Write `df` as the checkpoint for `stage` and return the re-read (so
     * downstream plans read the materialized table instead of recomputing
-    * the producing plan — this is also what cuts union-find lineage).
+    * the producing plan — this is also what cuts union-find lineage; the
+    * re-read is under the recorded schema, so it submits no job).
     */
   def write(stage: String, df: DataFrame): DataFrame = {
     val t0 = System.nanoTime()
@@ -46,8 +76,8 @@ final class StageStore(spark: SparkSession, val root: String) {
     // clean partial output from a previous killed run (no manifest ⇒ junk)
     if (Files.exists(dir) && !has(stage)) deleteRecursively(dir)
     df.write.mode("overwrite").parquet(dir.toString)
-    commit(stage, (System.nanoTime() - t0) / 1000000, parquetFilesUnder(dir))
-    spark.read.parquet(dir.toString)
+    commit(stage, (System.nanoTime() - t0) / 1000000, parquetFilesUnder(dir), df.schema)
+    read(stage)
   }
 
   /** Compute-or-read: the resume primitive. A completed stage is never
@@ -86,27 +116,26 @@ final class StageStore(spark: SparkSession, val root: String) {
     // partition directory.
     df.repartition(col("pkey"))
       .write.mode("overwrite").partitionBy("pkey").parquet(dir.toString)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val files = parquetFilesUnder(dir)
-    // schema sidecar: a partitioned stage whose every owned partition came
-    // out EMPTY (legitimate — e.g. a base corpus with no duplicate edges
-    // leaves the component state empty) has no parquet file to infer a
-    // schema from, yet layered-state readers still need a typed empty frame
-    Files.writeString(dir.resolve("_SCHEMA.json"), df.schema.json)
-    commit(stage, wallMs, files,
+    // the record puts pkey last, where partition discovery puts it, so a
+    // stage whose every owned partition came out EMPTY (legitimate — e.g. a
+    // base corpus with no duplicate edges leaves the component state empty)
+    // has no pkey=N directory to discover, yet reads back the same columns
+    commit(stage, (System.nanoTime() - t0) / 1000000, parquetFilesUnder(dir),
+      StructType(df.schema.filterNot(_.name == "pkey") :+ df.schema("pkey")),
       s""""pkeys":[${pkeyDirs(dir).distinct.sorted.mkString(",")}]""")
-    if (files.isEmpty) df.limit(0) // all-empty write: nothing to discover
-    else spark.read.parquet(dir.toString)
+    read(stage)
   }
 
-  /** Mark `stage` complete: a manifest recording each data file's rows
-    * (from its parquet footer — metadata only, no second scan of the stage
-    * data) and bytes, written to a temp file and atomically renamed into
-    * place. `wallMs` is the data write's time; `extra` adds JSON fields.
+  /** Mark `stage` complete: its `schema` record, then a manifest recording
+    * each data file's rows (from its parquet footer — metadata only, no
+    * second scan of the stage data) and bytes, written to a temp file and
+    * atomically renamed into place. `wallMs` is the data write's time;
+    * `extra` adds JSON fields.
     */
   private def commit(stage: String, wallMs: Long, files: Seq[Path],
-                     extra: String*): Unit = {
+                     schema: StructType, extra: String*): Unit = {
     val dir = stageDir(stage)
+    Files.writeString(dir.resolve("_SCHEMA.json"), schema.json)
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val entries = files.map { f =>
       val rows =
@@ -126,29 +155,15 @@ final class StageStore(spark: SparkSession, val root: String) {
   }
 
   def getOrComputePartitioned(stage: String)(thunk: => DataFrame): DataFrame =
-    if (has(stage)) readOrEmpty(stage)
+    if (has(stage)) read(stage)
     else writePartitioned(stage, thunk)
 
-  /** Read a completed partitioned stage, or — when every owned partition is
-    * empty — a typed empty frame from its schema sidecar.
-    */
-  def readOrEmpty(stage: String): DataFrame =
-    if (hasData(stage)) read(stage) else emptyLike(stage)
-
-  /** A zero-row frame with a completed partitioned stage's schema. */
-  def emptyLike(stage: String): DataFrame = {
-    val p = stageDir(stage).resolve("_SCHEMA.json")
-    require(Files.exists(p), s"stage '$stage' has no schema sidecar")
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(Files.readString(p))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** A zero-row frame with a completed stage's schema. */
+  def emptyLike(stage: String): DataFrame = read(stage).limit(0)
 
   /** Whether the stage wrote at least one data file — a partitioned stage
-    * whose every owned partition came out empty has only its manifest, and
-    * `spark.read` on it would fail schema inference.
+    * whose every owned partition came out empty has only its manifest and
+    * schema record.
     */
   def hasData(stage: String): Boolean =
     has(stage) && pkeyDirs(stageDir(stage)).nonEmpty
@@ -175,7 +190,7 @@ final class StageStore(spark: SparkSession, val root: String) {
   def lineage(stage: String): DataFrame = {
     val json = Files.readString(manifestPath(stage))
     import spark.implicits._
-    spark.read.json(Seq(json).toDS)
+    spark.read.schema(StageStore.ManifestSchema).json(Seq(json).toDS)
       .select(col("stage"), col("status"), col("wall_ms"),
         explode(col("partitions")).as("p"))
       .select(col("stage"), col("status"), col("wall_ms"),
@@ -236,4 +251,10 @@ final class StageStore(spark: SparkSession, val root: String) {
         _.toArray.map(_.asInstanceOf[Path])).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
+}
+
+object StageStore {
+  /** The manifest fields `lineage` reads — given, so the read infers nothing. */
+  private val ManifestSchema = "stage STRING, status STRING, wall_ms BIGINT, " +
+    "partitions ARRAY<STRUCT<file: STRING, rows: BIGINT, bytes: BIGINT>>"
 }

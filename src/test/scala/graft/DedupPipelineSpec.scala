@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +28,51 @@ class DedupPipelineSpec extends AnyFunSuite {
 
   private def freshStore(): StageStore =
     new StageStore(spark, Files.createTempDirectory("graft-stages-").toString)
+
+  /** Spark jobs submitted while `body` runs. A marker job submitted after
+    * `body` bounds the count: the listener bus delivers job starts in
+    * submission order, so every job of `body` arrives before the marker's.
+    */
+  private def jobsSubmitted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "jobsSubmitted-marker"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      Iterator.continually {
+        val d = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(d != null, "listener saw no marker job within 60 s")
+        d
+      }.takeWhile(_ != marker).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every completed stage of `store` reads back under its recorded schema
+    * with the columns parquet inference gives; a stage with no data file
+    * (an all-empty partitioned layer) has nothing to infer from and is
+    * left to the caller.
+    */
+  private def assertRecordedSchemas(store: StageStore): Unit = {
+    val stages = store.stages("")
+    assert(stages.nonEmpty)
+    stages.foreach { st =>
+      val dir = java.nio.file.Paths.get(store.root, st)
+      assert(Files.exists(dir.resolve("_SCHEMA.json")), s"stage $st has no schema record")
+      val hasFile = scala.util.Using.resource(Files.walk(dir))(
+        _.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet")))
+      if (hasFile)
+        assert(store.read(st).schema === spark.read.parquet(dir.toString).schema,
+          s"stage $st reads back other columns than inference gives")
+    }
+  }
 
   test("corpus: extraction is byte-identical and deterministic") {
     import spark.implicits._
@@ -161,7 +208,8 @@ class DedupPipelineSpec extends AnyFunSuite {
     // all optional candidate/verify branches on, so the wide id is pushed
     // through LSH emission, SimHash tables, LCS rescue, CC, and rep select
     val cfgWide = DedupConfig(idBits = 128, useSimHashCandidates = true, useLcsCheck = true)
-    val pipeWide = new DedupPipeline(spark, cfgWide, freshStore())
+    val wideStore = freshStore()
+    val pipeWide = new DedupPipeline(spark, cfgWide, wideStore)
     val wide = pipeWide.run(pages)
     assert(wide.schema("cluster_id").dataType
       .isInstanceOf[org.apache.spark.sql.types.StructType])
@@ -194,6 +242,9 @@ class DedupPipelineSpec extends AnyFunSuite {
       .run(pages.union(delta))
     assert(partition(incWide) === partition(fullWide),
       "wide-id incremental must partition urls identically to the batch run")
+    // every stage — struct ids, SimHash and LCS on, state layers with pkey
+    // and _del — reads back under its record with the inferred columns
+    assertRecordedSchemas(wideStore)
     corpus.unpersist()
   }
 
@@ -259,6 +310,13 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(sigsBefore.sameElements(sigsAfter), "chunk ids must be byte-stable")
     assert(store.has("signatures_chunk2"), "killed chunk must be recomputed")
     assert(full.sameElements(resumed), "resumed output must equal full run")
+    // every completed stage reads back under its schema record: no job
+    val completed = store.stages("")
+    assert(completed.size >= 9)
+    assert(jobsSubmitted(completed.foreach(store.read)) === 0,
+      "reading a completed stage back must not submit a job")
+    assert(jobsSubmitted(completed.foreach(store.lineage)) === 0,
+      "a stage's lineage rows are read under the manifest's fixed schema")
 
     // lineage rows exist for a completed stage
     val lin = store.lineage("clusters").collect()
@@ -282,6 +340,9 @@ class DedupPipelineSpec extends AnyFunSuite {
       .withColumn("retired", array(col("content_hash"))).localCheckpoint(true)
     store.invalidate("signatures_chunk0")
     store.write("signatures_chunk0", legacy)
+    // … and, as an older build, recorded no schema: the chunk's columns
+    // come from parquet inference
+    Files.delete(java.nio.file.Paths.get(store.root, "signatures_chunk0", "_SCHEMA.json"))
     Seq("exact_edges", "candidate_pairs", "verified_edges", "components",
       "clusters").foreach(store.invalidate)
     assert(key(new DedupPipeline(spark, DedupConfig(), store).run(pages)) === fresh)
@@ -295,7 +356,30 @@ class DedupPipelineSpec extends AnyFunSuite {
       pipe.run(pages).count()
       assert(store.stages("signatures").sorted === pipe.signatureStages.sorted)
       assert(pipe.signatureStages.size === c)
+      // every chunk is read back as ONE parquet relation, not a union
+      val sigs = pipe.signatures(pages)
+      sigs.collect()
+      val plan = sigs.queryExecution.executedPlan.toString
+      assert("FileScan parquet".r.findAllIn(plan).size === 1, plan)
+      assert(!plan.contains("Union"), plan)
     }
+  }
+
+  test("a failed signature stage releases its cached input") {
+    import spark.implicits._
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 40, seed = 3))
+    val bad = pages.first().url
+    val failing = pages
+      .withColumn("text", when(col("url") === bad, raise_error(lit("unreadable page")))
+        .otherwise(col("text")))
+      .as[graft.schema.Page]
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[Exception](
+      new DedupPipeline(spark, DedupConfig(), freshStore()).run(failing))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unreadable page")), e)
+    assert(spark.sparkContext.getPersistentRDDs.size === before,
+      "the cached pages must be released when a chunk write fails")
   }
 
   test("signatures plan: narrow (no Exchange), one MinHash pass") {
@@ -866,6 +950,18 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(store.read("inc_d1_band_state").count() ===
       pipe.stateView("band", Seq("d1"), None).count() -
         pipe.stateView("band", Nil, None).count())
+
+    // schema records: every stage reads back the inferred columns; a layer
+    // whose every partition is empty has no file to infer from, and reads
+    // back — and `emptyLike`s — the columns of a data-bearing layer
+    store.writePartitioned("empty_cluster_layer",
+      store.read("inc_d1_cluster_state").limit(0))
+    assert(!store.hasData("empty_cluster_layer"))
+    assertRecordedSchemas(store)
+    val inferred = spark.read.parquet(
+      java.nio.file.Paths.get(store.root, "inc_d1_cluster_state").toString).schema
+    assert(store.read("empty_cluster_layer").schema === inferred)
+    assert(store.emptyLike("empty_cluster_layer").schema === inferred)
     all.unpersist(); delta.unpersist()
   }
 
