@@ -5,7 +5,9 @@ included). A line that closes a block comment counts only if code follows
 the `*/`.
 
 Usage: python3 scripts/code_lines.py [REPO_ROOT]
-Prints one `count path` line per file, then `total N`.
+Prints one `count path` line per main file, then `total N`, then
+`test_total N`: the same count over src/test/scala, so lines moved from
+main into tests show up on both sides.
 """
 import pathlib
 import sys
@@ -45,6 +47,8 @@ def main():
         total += n
         print(f"{n:6d} {f.relative_to(root)}")
     print(f"total {total}")
+    tests = (root / "src" / "test" / "scala").rglob("*.scala")
+    print(f"test_total {sum(code_lines(f.read_text(encoding='utf-8')) for f in tests)}")
 
 
 if __name__ == "__main__":

@@ -108,11 +108,6 @@ object Burn {
     Probe(Map(2 -> r2 / r1, 4 -> r4 / r1, 8 -> r8 / r1), spread, stable)
   }
 
-  /** effective_cores at 2/4/8 workers — kept for callers that only need the
-    * ratios; prefer [[probe]] where the stability verdict matters.
-    */
-  def effectiveCores(): Map[Int, Double] = probe().eff
-
   /** Sequential-write throughput probe (MB/s, fsync'd): the box's OTHER
     * drifting ceiling. The CPU burn reads clean while checkpoint-heavy
     * bench entries run 1.5-2× slow whenever the single local disk is

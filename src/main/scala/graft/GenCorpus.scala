@@ -10,13 +10,31 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   * parallelism levels (BASELINE.md evidence protocol).
   *
   * Usage: GenCorpus <outDir> [nFamilies] [hotFamilySize] [seed]
+  *
+  * A missing `<outDir>`, a flag, a non-integer count and a fifth argument
+  * are refused, naming the argument, before Spark starts.
   */
 object GenCorpus {
+  private val Usage = "usage: GenCorpus <outDir> [nFamilies] [hotFamilySize] [seed]"
+
+  /** `(outDir, spec)`; an omitted count keeps the default below. */
+  private[graft] def parseArgs(args: Array[String]): (String, CorpusSpec) = {
+    args.find(_.startsWith("--")).foreach(f =>
+      throw new IllegalArgumentException(s"unknown flag $f; $Usage"))
+    require(args.nonEmpty, s"missing <outDir>; $Usage")
+    require(args.length <= 4, s"unexpected argument '${args(4)}'; $Usage")
+    def count[T](i: Int, name: String, parse: String => Option[T], default: T): T =
+      if (args.length <= i) default
+      else parse(args(i)).getOrElse(throw new IllegalArgumentException(
+        s"<$name> must be an integer, got '${args(i)}'; $Usage"))
+    (args(0), CorpusSpec(
+      nFamilies = count(1, "nFamilies", _.toLongOption, 100000L),
+      hotFamilySize = count(2, "hotFamilySize", _.toIntOption, 0),
+      seed = count(3, "seed", _.toLongOption, 42L)))
+  }
+
   def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val nFamilies = if (args.length > 1) args(1).toLong else 100000L
-    val hot = if (args.length > 2) args(2).toInt else 0
-    val seed = if (args.length > 3) args(3).toLong else 42L
+    val (outDir, spec) = parseArgs(args)
     val cpus = EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", 32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -24,11 +42,10 @@ object GenCorpus {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val pages = DeterministicCorpus.pages(spark,
-      CorpusSpec(nFamilies = nFamilies, hotFamilySize = hot, seed = seed))
+    val pages = DeterministicCorpus.pages(spark, spec)
     pages.write.mode(SaveMode.Overwrite).parquet(outDir)
     val n = spark.read.parquet(outDir).count()
-    println(s"""{"corpus":"$outDir","pages":$n,"families":$nFamilies,"hot":$hot}""")
+    println(s"""{"corpus":"$outDir","pages":$n,"families":${spec.nFamilies},"hot":${spec.hotFamilySize}}""")
     spark.stop()
   }
 }

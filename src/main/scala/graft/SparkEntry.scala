@@ -202,7 +202,7 @@ object SparkEntry {
 
   /** Lazy DSIR-weights plan + the model table it pins: the queries entry
     * materializes the plan (localCheckpoint) and releases the model; this
-    * pre-checkpoint form is what PlanAudit inspects (a checkpointed frame
+    * pre-checkpoint form is what PlanAuditSpec inspects (a checkpointed frame
     * degenerates to `Scan ExistingRDD`, hiding the join shape).
     */
   private[graft] def dsirWeightsPlan(

@@ -2,16 +2,45 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (scripts/check_oracle.py).
+  *
+  * Usage: Verify <sfDir> <outDir> [--only q1,q2]  (the filter is a local
+  * iteration aid; the oracle compare needs the full sweep)
+  *
+  * A missing positional, an unknown flag, `--only` without names and an
+  * `--only` name that is no query are refused, naming the argument,
+  * before Spark starts.
+  */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    // Verify <sfDir> <outDir> [--only q1,q2]  (filter = local iteration aid;
-    // the driver always runs the full sweep)
-    val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] = args.toSeq match {
-      case Seq(_, _, "--only", names) => Some(names.split(",").toSet)
-      case _ => None
+  private val Usage = "usage: Verify <sfDir> <outDir> [--only q1,q2]"
+
+  /** `(sfDir, outDir, only)`, where `only` is the `--only` query subset. */
+  private[graft] def parseArgs(args: Array[String]): (String, String, Option[Set[String]]) = {
+    val (positional, flags) = args.toSeq.span(!_.startsWith("--"))
+    require(positional.nonEmpty, s"missing <sfDir>; $Usage")
+    require(positional.length >= 2, s"missing <outDir>; $Usage")
+    require(positional.length == 2, s"unexpected argument '${positional(2)}'; $Usage")
+    val only = flags match {
+      case Seq() => None
+      case Seq("--only", names, rest @ _*) if !names.startsWith("--") =>
+        require(rest.isEmpty, s"unexpected argument '${rest.head}'; $Usage")
+        val asked = names.split(",").filter(_.nonEmpty).toSet
+        require(asked.nonEmpty, s"flag --only needs query names; $Usage")
+        val unknown = asked -- SparkEntry.queries.keySet
+        require(unknown.isEmpty,
+          s"flag --only names no query: ${unknown.toSeq.sorted.mkString(", ")}")
+        Some(asked)
+      case Seq("--only", _*) => throw new IllegalArgumentException(
+        s"flag --only needs query names; $Usage")
+      case Seq(flag, _*) => throw new IllegalArgumentException(
+        s"unknown flag $flag; $Usage")
     }
+    (positional(0), positional(1), only)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir, only) = parseArgs(args)
     val cpus = EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -74,7 +74,7 @@ object SemDeDup {
 
     // skew-safe representative: partial-agg min_by + join-back (a window
     // over `component` would funnel a 10⁶-member duplicate flood through
-    // one task — the anti-scaling shape PlanAudit guards against)
+    // one task — the anti-scaling shape PlanAuditSpec guards against)
     val keepers = members.groupBy("component")
       .agg(min_by(col("id"), struct(col("rank"), col("id"))).as("keeper"))
     members

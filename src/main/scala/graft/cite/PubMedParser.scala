@@ -130,9 +130,6 @@ object PubMedParser {
       .filter(_.nonEmpty)
       .map(_.toSeq)
 
-  private[graft] def blankLineSplit(text: String, lineBreak: String): Seq[String] =
-    blankLineSplitIdx(text, lineBreak).map(_.map(_._2).mkString("\n"))
-
   /** Join continuation lines (leading space) into whole key-value lines;
     * pieces joined with a space except after a trailing hyphen
     * (/root/reference/src/pubmed/whole_lines.rs:23-80). Each joined line
@@ -161,9 +158,6 @@ object PubMedParser {
     flush()
     out.toSeq
   }
-
-  private[graft] def wholeLines(lines: Seq[String]): Seq[String] =
-    wholeLinesIdx(lines.zipWithIndex.map { case (l, i) => (i + 1, l) }).map(_._2)
 
   /** Split on first '-', trimming around it; tag must be known. */
   private[graft] def parseEntry(line: String): Option[(String, String)] = {

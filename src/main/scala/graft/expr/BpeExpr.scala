@@ -1,7 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,21 +16,6 @@ case class CharSymbols(child: Expression)
       Bpe.charSymbols(input.asInstanceOf[UTF8String].toString)
         .map(UTF8String.fromString(_): Any))
   override protected def withNewChildInternal(c: Expression): CharSymbols =
-    copy(child = c)
-}
-
-/** Merge every adjacent (a, b) occurrence in a symbol array — one BPE
-  * training round's transform, applied distributively to the word table.
-  */
-case class MergePair(child: Expression, a: String, b: String)
-    extends UnaryExpression with SimpleCodegen {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val syms = Array.tabulate(arr.numElements())(i => arr.getUTF8String(i).toString)
-    new GenericArrayData(Bpe.mergeOnce(syms, a, b).map(UTF8String.fromString(_): Any))
-  }
-  override protected def withNewChildInternal(c: Expression): MergePair =
     copy(child = c)
 }
 

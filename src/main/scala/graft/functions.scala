@@ -198,7 +198,6 @@ object functions {
 
   // ---- BPE subword tokenization (kernel/Bpe.scala) ----
   def char_symbols(c: Column): Column = col(CharSymbols(ex(c)))
-  def merge_pair(c: Column, a: String, b: String): Column = col(MergePair(ex(c), a, b))
   /** Subword-tokenize with a learned merge list — see [[graft.expr.BpeEncode]]. */
   def bpe_encode(c: Column, merges: Seq[(String, String)]): Column =
     col(BpeEncode(ex(c), merges))

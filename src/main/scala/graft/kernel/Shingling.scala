@@ -465,39 +465,6 @@ object Shingling {
     best
   }
 
-  /** b-bit MinHash sketch (Li & König 2010, "b-Bit Minwise Hashing"): the
-    * low `b` bits of each of `numHashes` MinHash values, bit-packed —
-    * `numHashes * b / 64` longs instead of `numHashes` longs, a `64/b`×
-    * smaller per-document verification state. Uses the SAME affine
-    * permutation family (and signed-min convention) as
-    * [[graft.expr.MinHashSignature]], so the sketch is exactly the
-    * truncation of the full signature (parity is test-pinned). Cell `i`
-    * occupies bits `[i*b, (i+1)*b)` little-endian across the long array;
-    * `b` must divide 64 so no cell spans words.
-    */
-  def bbitSketch(shingles: Array[Long], numHashes: Int, b: Int,
-                 seed: Long): Array[Long] = {
-    require(b > 0 && 64 % b == 0, s"b must divide 64, got $b")
-    // coefficients derived once per call (the expression form caches them
-    // per instance), never inside the per-shingle loop
-    val coeffA = Array.tabulate(numHashes)(i => splitmix64(seed + 2L * i) | 1L)
-    val coeffB = Array.tabulate(numHashes)(i => splitmix64(seed + 2L * i + 1L))
-    val sig = new Array[Long](numHashes)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val x = shingles(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = coeffA(i) * x + coeffB(i)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      s += 1
-    }
-    packLowBits(sig, b)
-  }
-
   /** Pack the low `b` bits of each value into a little-endian long array. */
   def packLowBits(values: Array[Long], b: Int): Array[Long] = {
     require(b > 0 && 64 % b == 0, s"b must divide 64, got $b")

@@ -22,8 +22,11 @@ import graft.functions._
 object StreamingOps {
 
   /** Stateless signature projection — valid on batch and streaming frames
-    * alike (no shuffle, no state). Columns match the batch pipeline's
-    * signature stage minus the monotonic id (streams key by content_hash).
+    * alike (no shuffle, no state). Its url, warc_ts, lang, content_hash,
+    * simhash, n_shingles and bands are the batch pipeline's signature
+    * columns, computed by the same expressions; the stage's id
+    * (`xxhash64(url, warc_ts)`), source, text_len and stored shingles are
+    * left out (streams key by content_hash).
     * `sketchBits = Some(b)` additionally emits the packed b-bit MinHash
     * `sketch` column, so a streaming candidate feed can be sketch-verified
     * (`SketchVerify.verifyPairs`) against the stream's own signatures

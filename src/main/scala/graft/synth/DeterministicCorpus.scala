@@ -123,11 +123,6 @@ object DeterministicCorpus {
     html.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Page title participates in extraction; fold it into the text invariant:
-    * extracted text == s"$title $text".
-    */
-  def expectedExtract(text: String, title: String): String = s"$title $text"
-
   /** `familyOffset` shifts the family id range (urls are pure functions of
     * the family id), so two specs with disjoint ranges generate DISJOINT
     * url spaces — the way to synthesize an incremental crawl delta that

@@ -63,8 +63,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed("u1")._1 === streamed("u2")._1) // exact dups share hash
     assert(streamed("u1")._1 !== streamed("u3")._1)
 
-    // sketchBits emits the packed b-bit sketch, identical to the batch
-    // pipeline's column (same expression, same seed) — exact dups share it
+    // sketchBits emits the packed b-bit sketch (`bbit_minhash`, the
+    // expression q_sketch_verify verifies with) — exact dups share it
     val sk = StreamingOps.signatures(rows.toDF(), sketchBits = Some(4))
       .select("url", "sketch").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1).toList).toMap
