@@ -14,7 +14,7 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   * Usage:
   *   DedupMain <checkpointDir> [--families N] [--hot N] [--cores N]
   *             [--input <parquet pages dir>] [--seed N] [--idbits 64|128]
-  *             [--simhash true] [--urldedup true] [--adopt-state true]
+  *             [--urldedup true] [--adopt-state true]
   *             [--inc-batch NAME [--inc-input dir | --inc-families N]
   *              [--inc-offset N]] [--probe RATE]
   *
@@ -92,13 +92,9 @@ object DedupMain {
     val store = new StageStore(spark, checkpointDir)
     // --idbits 128 switches to the two-long struct id (10^12-doc scale;
     // see DedupPipeline.idCol). countDistinct below works on either width.
-    // --simhash true adds the SimHash candidate source (batch AND the
-    // incremental mirror — a checkpoint dir is config-fingerprinted, so
-    // base run and deltas must agree on it).
     // --urldedup true collapses capture spellings per canonical url
     // within each batch before signatures (UrlOps.canonicalizeUrl).
     val cfg = DedupConfig(idBits = opts.getOrElse("idbits", "64").toInt,
-      useSimHashCandidates = opts.get("simhash").exists(_.toBoolean),
       urlCanonicalPreDedup = opts.get("urldedup").exists(_.toBoolean))
     val pipeline = new DedupPipeline(spark, cfg, store)
 
@@ -182,7 +178,7 @@ object DedupMain {
   private val Flags: Map[String, (String, String => Boolean)] = Map(
     "families" -> LongFlag, "hot" -> IntFlag, "cores" -> IntFlag,
     "input" -> TextFlag, "seed" -> LongFlag, "idbits" -> IntFlag,
-    "simhash" -> BoolFlag, "urldedup" -> BoolFlag, "adopt-state" -> BoolFlag,
+    "urldedup" -> BoolFlag, "adopt-state" -> BoolFlag,
     "inc-batch" -> TextFlag, "inc-input" -> TextFlag,
     "inc-families" -> LongFlag, "inc-offset" -> LongFlag,
     "probe" -> ("a number", (v: String) => v.toDoubleOption.isDefined))

@@ -1028,8 +1028,10 @@ object SparkEntry {
     // every twin with its original, with the EARLIER capture as
     // representative (rep chain: text_len tie → earlier warc_ts), and
     // (b) be bit-identical to run(base ∪ delta) — the equivalence
-    // contract. SimHash candidates are ON, so the delta×prior Manku-table
-    // mirror (identical twin fingerprints) runs under the driver gate too.
+    // contract. Twins share a content hash, so the hash-min state links
+    // them; a twin whose id undercuts its original's takes the group min and
+    // enters the band state, so the delta×prior LSH cross join runs under
+    // the driver gate too.
     "q_dedup_incremental" -> ((s, dir) => {
       // capped input: this row buys the equivalence CONTRACT (a fixed-size
       // correctness surface, dominated by per-stage job latency, not data);
@@ -1053,12 +1055,11 @@ object SparkEntry {
       val tmpDirs = Seq.fill(2)(
         java.nio.file.Files.createTempDirectory("graft-q-inc-"))
       // lean checkpointing (single chunk, state partitions sized to the
-      // 1,000-doc cap — 32 dirs × 5 tables of fixed write/list cost would
+      // 1,000-doc cap — 32 dirs × 4 tables of fixed write/list cost would
       // dominate this latency-bound row): resume durability is pinned by
       // its own suite; this query buys the equivalence contract at the
       // smallest stage-write cost
-      val cfg = graft.dedup.DedupConfig(useSimHashCandidates = true,
-        resumeChunks = 1, statePartitions = 4)
+      val cfg = graft.dedup.DedupConfig(resumeChunks = 1, statePartitions = 4)
       try {
         val batchRun = new graft.dedup.DedupPipeline(s, cfg,
           new graft.io.StageStore(s, tmpDirs(0).toString))

@@ -30,8 +30,11 @@ import graft.schema.Page
   * duplicates the exact-hash path already links.
   *
   * Fixed, not configurable: the MinHash count is `bands * rows`; the
-  * doc-id uniqueness check always runs; the LCS band, SimHash distance and
-  * union-find durability are the named constants beside their code.
+  * doc-id uniqueness check always runs; the LCS band and union-find
+  * durability are the named constants beside their code. LSH banding is
+  * the one candidate source: SimHash at Hamming ≤ 3 over the same distinct
+  * shingle sets is a stricter set-similarity filter whose pairs the bands
+  * already catch ([[SimHashDedup]] is a standalone operator).
   */
 final case class DedupConfig(
     shingleK: Int = 5,
@@ -43,8 +46,6 @@ final case class DedupConfig(
     maxBucketAllPairs: Int = 64,
     sourcePreferences: Seq[String] = Nil,
     resumeChunks: Int = 4,
-    useSimHashCandidates: Boolean = false,
-    simHashMaxBucket: Int = 10000,
     urlCanonicalPreDedup: Boolean = false,
     idBits: Int = 64,
     statePartitions: Int = 32,
@@ -93,7 +94,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       xxhash64_seeded(IdSeed2, col("url"), col("warc_ts")).as("h2"))
 
   /** Stage 1 — signatures: extract+normalize text, shingle, MinHash→LSH
-    * band keys, SimHash, exact-content hash; assign the stable numeric id.
+    * band keys, exact-content hash; assign the stable numeric id.
     * Narrow (no shuffle).
     *
     * The doc id is a pure function of the row's natural key (url, warc_ts)
@@ -197,10 +198,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       col("source"),
       length(col("text")).as("text_len"),
       xxhash64(col("norm_text")).as("content_hash"),
-      simhash64(col("shingles")).as("simhash"),
       size(col("shingles")).as("n_shingles"),
-      // stored/verified representation: low 32 bits (half the bytes;
-      // MinHash/SimHash above mix from the full 64-bit hashes)
+      // stored/verified representation: low 32 bits (half the bytes; the
+      // MinHash below mixes from the full 64-bit hashes)
       truncate_hashes32(col("shingles")).as("shingles"),
       minhash_bands(col("shingles"), config.bands, config.rows, config.seed).as("bands"))
   }
@@ -229,9 +229,11 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       .select(col("m").as("a"), col("id").as("b"))
   }
 
-  /** Skew-policy observability (SURVEY.md §4.2 "no silent caps"): buckets
-    * that fell back to chain emission, and buckets/rows dropped past
-    * [[DedupPipeline.HugeBucketCutoff]]. Populated by the candidate stage's job.
+  /** Skew-policy observability (SURVEY.md §4.2 "no silent caps"): band
+    * buckets that fell back to chain emission, and buckets/rows dropped
+    * past [[DedupPipeline.HugeBucketCutoff]]. Populated by the candidate
+    * stage's job — in an incremental batch, hot buckets by its delta×delta
+    * half only (the delta×prior ladder counts drops, not chains).
     */
   val hotBuckets = spark.sparkContext.longAccumulator("graft.dedup.hotBuckets")
   val droppedBuckets = spark.sparkContext.longAccumulator("graft.dedup.droppedBuckets")
@@ -409,24 +411,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
         col("id"), col("source"), col("lang"))
   }
 
-  /** Optional extra candidate source: SimHash near-dup pairs (Manku
-    * block-permuted tables over the `simhash` column the signature stage
-    * already persists). SimHash weights REPEATED shingles, so it surfaces
-    * "same content, small edits" pairs whose set-Jaccard sits at the LSH
-    * miss margin; every extra candidate still passes through the same
-    * exact-Jaccard (+LCS) verification, so precision is unchanged — this
-    * widens recall only.
-    */
-  def simHashCandidates(sigs: DataFrame): DataFrame =
-    store.getOrCompute("simhash_pairs")(simHashCandidatesPlan(sigs))
-
-  private[graft] def simHashCandidatesPlan(sigs: DataFrame): DataFrame =
-    SimHashDedup.nearDupPairs(
-      sigs.select("id", "simhash"), SimHashDedup.MaxHamming,
-      maxBucketSize = config.simHashMaxBucket,
-      hotBucketAcc = Some(hotBuckets))
-      .select("a", "b")
-
   /** Optional pre-stage (`urlCanonicalPreDedup`): keep ONE capture per
     * CANONICAL url ([[graft.text.UrlOps.canonicalizeUrl]] — scheme/host
     * case, `www.`, default ports, tracking params, param order, trailing
@@ -479,11 +463,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     val input = urlPreDedup(pages)
     val sigs = signatures(input)
     val exact = exactEdges(sigs)
-    val lshPairs = candidatePairs(sigs, exact)
-    val pairs =
-      if (config.useSimHashCandidates)
-        lshPairs.union(simHashCandidates(sigs)).distinct()
-      else lshPairs
+    val pairs = candidatePairs(sigs, exact)
     // LCS texts come from the ORIGINAL pages, not the pre-dedup'd plan:
     // the lookup is keyed by doc id (hash(url, warc_ts)), dropped captures'
     // ids never appear in borderline pairs, and driving the (tiny) text
@@ -511,9 +491,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     *     `statePartitions`; production: an Iceberg bucket-transform
     *     partition spec), adopted ONCE from the base run's stages and then
     *     maintained per batch:
-    *       · band rows (key (band, bucket)) and SimHash table rows (key
-    *         (table, key)) are APPEND-ONLY — each batch appends its delta's
-    *         rows; prior rows are never re-derived from the corpus;
+    *       · band rows (key (band, bucket)) are APPEND-ONLY — each batch
+    *         appends its delta's rows; prior rows are never re-derived from
+    *         the corpus;
     *       · hash-min (content_hash → min id), components, and clusters
     *         are MERGE-ON-READ UPSERT tables — each batch appends a layer
     *         holding only the rows it CHANGED (plus tombstones where a
@@ -527,10 +507,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     *     ladder [[PairEmission.crossBucketPairs]] (shared with
     *     [[CrossCorpus]]): full cross pairs for small buckets,
     *     chain-to-bucket-min above `maxBucketAllPairs` (O(delta) output),
-    *     drop + metric above [[HugeBucketCutoff]]; with
-    *     `useSimHashCandidates`, the SimHash source is mirrored the same
-    *     way (delta×delta via the batch operator, delta×prior via the
-    *     pruned SimHash state);
+    *     drop + metric above [[HugeBucketCutoff]];
     *   - connected components are updated INCREMENTALLY: only components
     *     touched by a new edge are re-solved (prior assignments re-enter as
     *     (component, member) star edges — component ids are component
@@ -556,10 +533,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * slim projections, not rewrites.
     *
     * EQUIVALENCE CONTRACT: while any band bucket stays within
-    * `maxBucketAllPairs` (and, with `useSimHashCandidates`, any SimHash
-    * table bucket within `simHashMaxBucket` — both paths threshold on the
-    * same config value) (the all-pairs regime — everything but pathological
-    * boilerplate, which the exact path absorbs first), run(A) +
+    * `maxBucketAllPairs` (the all-pairs regime — everything but
+    * pathological boilerplate, which the exact path absorbs first), run(A) +
     * incremental(B) produces clusters BIT-IDENTICAL to run(A ∪ B) —
     * pinned by DedupPipelineSpec. In the chain/drop regimes both paths
     * degrade under the same documented policy but not edge-identically.
@@ -580,7 +555,10 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * a different half-applied batch are refused rather than silently
     * ignored. A store with no completed [[run]] is refused before any
     * state is written, as is one whose batches were applied under the
-    * layout that predates the state tables.
+    * layout that predates the state tables. A store whose signature chunks
+    * still carry the retired `simhash` column takes deltas as is: the
+    * signature reads merge schemas by name (the delta's rows read the
+    * column as null) and no stage reads it.
     */
   def incremental(batch: String, newPages: Dataset[Page],
       allPages: Option[Dataset[Page]] = None): DataFrame = {
@@ -677,12 +655,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       val bandStateStage = store.getOrComputePartitioned(s"inc_${batch}_band_state") {
         layerRows("band", bandRowsOf(sigsNew, exactInc))
       }
-      val deltaSimStage =
-        if (!config.useSimHashCandidates) None
-        else Some(store.getOrComputePartitioned(s"inc_${batch}_sim_state") {
-          layerRows("sim",
-            SimHashDedup.tableRows(sigsNew.select("id", "simhash"), SimHashDedup.MaxHamming))
-        })
       val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
         val within = candidatePairsPlan(sigsNew, exactInc)
         // the delta's band rows read back from their materialized state stage
@@ -703,58 +675,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
           .select(least(col("id"), col("oid")).as("a"),
             greatest(col("id"), col("oid")).as("b"))
           .filter(col("a") =!= col("b"))
-        val lsh = within.union(cross)
-
-        // optional SimHash candidate source, mirrored incrementally:
-        // delta×delta via the batch operator, delta×prior via a Manku-table
-        // cross join (prior rows restricted to delta-touched table keys).
-        // Hot identical-fingerprint floods chain each delta doc to the
-        // flood's min id (hamming 0 — always verified); pairs between
-        // DISTINCT fingerprints in a hot bucket degrade exactly like the
-        // batch operator's run-boundary probing.
-        val all =
-          if (!config.useSimHashCandidates) lsh
-          else {
-            val k = SimHashDedup.MaxHamming
-            val simWithin = simHashCandidatesPlan(sigsNew)
-            // the delta's Manku-table rows, read back from their state stage;
-            // the prior side is the pruned SimHash state (appended per batch
-            // at ingest — never tableRows(corpus) re-derivation)
-            val deltaSim = deltaSimStage.get
-              .select("table", "key", "simhash", "id").localCheckpoint(true)
-            val touchedSimPk = touchedPkeys("sim", deltaSim)
-            val priorSim = stateView("sim", applied, Some(touchedSimPk))
-              .select("table", "key", "simhash", "id")
-              .join(deltaSim.select("table", "key").distinct(),
-                Seq("table", "key"), "left_semi")
-              .localCheckpoint(true)
-            val sStats = priorSim.groupBy("table", "key")
-              .agg(count(lit(1)).as("n")).localCheckpoint(true)
-            val simSmall = deltaSim
-              .join(sStats.filter(col("n") <= config.simHashMaxBucket)
-                .select("table", "key"), Seq("table", "key"), "left_semi")
-              .join(priorSim
-                .withColumnsRenamed(Map("id" -> "oid", "simhash" -> "osim")),
-                Seq("table", "key"))
-              .filter(hamming64(col("simhash"), col("osim")) <= k)
-              .select(least(col("id"), col("oid")).as("a"),
-                greatest(col("id"), col("oid")).as("b"))
-            val simHot = deltaSim
-              .join(sStats.filter(col("n") > config.simHashMaxBucket)
-                .select("table", "key"), Seq("table", "key"), "left_semi")
-              .join(priorSim.groupBy("table", "key", "simhash")
-                .agg(min("id").as("oid")), Seq("table", "key", "simhash"))
-              .select(least(col("id"), col("oid")).as("a"),
-                greatest(col("id"), col("oid")).as("b"))
-              .filter(col("a") =!= col("b"))
-            // skew-policy observability, as in the batch operator: hot sim
-            // buckets are counted, never silent (this probe reuses the tiny
-            // aggregated sStats checkpoint)
-            val nSimHot = sStats.filter(col("n") > config.simHashMaxBucket).count()
-            if (nSimHot > 0) hotBuckets.add(nSimHot)
-            lsh.union(simWithin).union(simSmall).union(simHot)
-          }
-        all.distinct()
+        within.union(cross).distinct()
       }
 
       // 4 — verification: same plan as batch, but the shingle side is
@@ -891,13 +812,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
 
   // ──────────────── pkey-partitioned incremental state tables ────────────────
   //
-  // Five state tables back the incremental mode, each a set of StageStore
+  // Four state tables back the incremental mode, each a set of StageStore
   // stages partitioned by `pkey = hash(partition columns) mod
   // statePartitions` (production: Iceberg bucket-transform partitions),
-  // declared by [[PartitionCols]]: band and sim are append-only, hash_min,
-  // comp and cluster are UPSERT tables ([[UpsertKeys]]).
+  // declared by [[PartitionCols]]: band is append-only, hash_min, comp and
+  // cluster are UPSERT tables ([[UpsertKeys]]).
   //
-  // Append-only tables: each batch appends one layer of new rows; the
+  // The append-only table: each batch appends one layer of new rows; the
   // current view is the pruned union. Upsert tables are MERGE-ON-READ
   // (the Iceberg MOR / LSM analog): each batch appends a layer holding
   // ONLY the rows it changed, plus tombstones at the OLD partition for
@@ -919,9 +840,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
 
   /** Each state table's partition columns. */
   private val PartitionCols: Map[String, Seq[String]] = Map(
-    "band" -> Seq("band", "bucket"), "sim" -> Seq("table", "key"),
-    "hash_min" -> Seq("content_hash"), "comp" -> Seq("component"),
-    "cluster" -> Seq("cluster_id"))
+    "band" -> Seq("band", "bucket"), "hash_min" -> Seq("content_hash"),
+    "comp" -> Seq("component"), "cluster" -> Seq("cluster_id"))
 
   /** Upsert tables and their latest-wins resolution keys; absent = append-only. */
   private val UpsertKeys: Map[String, Seq[String]] = Map(
@@ -1012,7 +932,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * see the inline note).
     */
   private def maybeCompactState(appliedNow: Seq[String]): Unit = {
-    PartitionCols.keys.filter(_ != "sim" || config.useSimHashCandidates).foreach { name =>
+    PartitionCols.keys.foreach { name =>
       val (covers, ver) = baseInfo(name)
       val cN = appliedNow.size
       if (cN - covers >= config.stateCompactEvery) {
@@ -1061,10 +981,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * caller's pruning left.
     */
   private def resolveState(name: String, raw: DataFrame): DataFrame = {
-    if (!raw.columns.contains(SeqCol)) // empty-table fallback frame
-      return if (raw.columns.contains(DelCol))
-        raw.filter(!col(DelCol)).drop(DelCol)
-      else raw
     val live = when(col(DelCol), lit(0)).otherwise(lit(1))
     raw.groupBy(UpsertKeys(name).map(col): _*)
       .agg(max_by(struct(raw.columns.map(col): _*),
@@ -1121,47 +1037,25 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     ensureStateBase("cluster", applied) {
       layerRows("cluster", store.read("clusters").select(ClusterCols.map(col): _*))
     }
-    if (config.useSimHashCandidates)
-      ensureStateBase("sim", applied) {
-        layerRows("sim",
-          SimHashDedup.tableRows(baseSigs.select("id", "simhash"), SimHashDedup.MaxHamming))
-      }
   }
 
   /** RAW layered view of state table `name` as of `applied` batches.
     * `pkeys = Some(ks)` prunes every layer's scan to those partitions
-    * (directory-level pruning — the delta-proportional read). Append-only
-    * tables are complete as-is; upsert tables ([[UpsertKeys]]) come back
-    * with `_seq` (layer index) and `_del` attached and MUST go through
-    * [[resolveState]] — callers that only need a key subset semi-filter the
-    * raw rows first, so resolution runs on the survivors, not the corpus.
+    * (directory-level pruning — the delta-proportional read; an empty `ks`
+    * prunes everything). Every layer reads under its schema record, so an
+    * all-empty layer (e.g. the component state of a base corpus with no
+    * duplicate edges) reads as zero typed rows. Append-only tables are
+    * complete as-is; upsert tables ([[UpsertKeys]]) come back with `_seq`
+    * (layer index) and `_del` attached and MUST go through [[resolveState]]
+    * — callers that only need a key subset semi-filter the raw rows first,
+    * so resolution runs on the survivors, not the corpus.
     */
   private[graft] def stateView(name: String, applied: Seq[String],
-      pkeys: Option[Seq[Int]]): DataFrame = {
-    val stages = stateStageNames(name, applied)
-    val keep = pkeys.map(_.toSet)
-    val parts = stages.zipWithIndex.flatMap { case (s, i) =>
-      if (!store.hasData(s)) None
-      else {
-        val pruned = keep match {
-          case None => Some(store.read(s))
-          case Some(ks) if ks.isEmpty => None
-          case Some(ks) => Some(store.read(s).filter(col("pkey").isin(ks.toSeq: _*)))
-        }
-        if (UpsertKeys.contains(name)) pruned.map(_.withColumn(SeqCol, lit(i)))
-        else pruned
-      }
-    }
-    parts.reduceOption(_ unionByName _).getOrElse {
-      // nothing matched the requested partitions — or every layer is
-      // legitimately empty (e.g. a base corpus with no duplicate edges has
-      // an empty component state): a typed empty frame from the schema
-      // record of any completed layer
-      val completed = stages.find(store.has).getOrElse(throw new
-          IllegalStateException(s"state table '$name' has no completed layer"))
-      store.emptyLike(completed)
-    }
-  }
+      pkeys: Option[Seq[Int]]): DataFrame =
+    stateStageNames(name, applied).zipWithIndex.map { case (s, i) =>
+      val layer = pkeys.fold(store.read(s))(ks => store.read(s).filter(col("pkey").isin(ks: _*)))
+      if (UpsertKeys.contains(name)) layer.withColumn(SeqCol, lit(i)) else layer
+    }.reduce(_ unionByName _)
 
   /** Guard against resuming a checkpoint dir written under a different
     * pipeline configuration: stage contents are pure functions of (input,
@@ -1285,5 +1179,7 @@ object DedupPipeline {
     "lcsLowJaccard" -> "0.4",
     "lcsMinFraction" -> "0.5",
     "simHashMaxHamming" -> "3",
-    "hugeBucketCutoff" -> "1000000")
+    "hugeBucketCutoff" -> "1000000",
+    "useSimHashCandidates" -> "false",
+    "simHashMaxBucket" -> "10000")
 }

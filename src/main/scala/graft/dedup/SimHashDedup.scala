@@ -29,14 +29,17 @@ import graft.functions.hamming64
   * degradation: pairs BETWEEN two distinct fingerprints that share a hot
   * bucket are only probed at run boundaries (counted via `hotBucketAcc`).
   *
-  * Complements the MinHash/Jaccard path in [[DedupPipeline]]: SimHash
-  * weights repeated shingles and catches "same content, small edits" at a
-  * fixed 64-bit cost per doc; this operator reuses the `simhash` column the
-  * signature stage already persists.
+  * A standalone operator over any (id, simhash) frame: the
+  * `q_dedup_simhash_pairs` query and the image dHash near-dup path
+  * ([[graft.multimodal.Multimodal.imageDHashes]]). [[DedupPipeline]] does
+  * not use it: over a distinct shingle set (what `word_shingles` returns)
+  * every shingle casts one vote, so SimHash at Hamming ≤ 3 is a stricter
+  * set-similarity filter whose pairs the pipeline's MinHash LSH bands
+  * already catch.
   */
 object SimHashDedup {
 
-  /** The pipeline's SimHash near-dup distance: Hamming ≤ 3 of 64 bits. */
+  /** The default SimHash near-dup distance: Hamming ≤ 3 of 64 bits. */
   val MaxHamming: Int = 3
 
   /** The C(B,3) block-combination tables for 64-bit fingerprints split into
@@ -61,11 +64,8 @@ object SimHashDedup {
     }
   }
 
-  /** (table, key, simhash, id) rows — C(maxHamming+3, 3) per doc. Shared
-    * by [[nearDupPairs]] and [[DedupPipeline.incremental]]'s delta×prior
-    * cross join, so the table geometry cannot diverge between them.
-    */
-  private[dedup] def tableRows(sigs: DataFrame, maxHamming: Int): DataFrame = {
+  /** (table, key, simhash, id) rows — C(maxHamming+3, 3) per doc. */
+  private def tableRows(sigs: DataFrame, maxHamming: Int): DataFrame = {
     val keyCols = tableKeys(col("simhash"), maxHamming).map { case (t, key) =>
       struct(lit(t.toLong).as("table"), key.as("key"))
     }

@@ -199,27 +199,10 @@ case class CharShingleHashes(child: Expression, k: Int, seed: Long)
   */
 case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
     extends UnaryExpression with SimpleCodegen {
-  @transient private lazy val coeffA: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i) | 1L)
-  @transient private lazy val coeffB: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i + 1L))
+  @transient private lazy val coeffs = Shingling.coefficients(numHashes, seed)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData].toLongArray()
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val x = shingles(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = coeffA(i) * x + coeffB(i)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(Shingling.minHash(input.asInstanceOf[ArrayData].toLongArray(), coeffs))
   override protected def withNewChildInternal(c: Expression): MinHashSignature = copy(child = c)
 }
 
@@ -250,26 +233,10 @@ case class BandKeys(child: Expression, bands: Int, rows: Int, seed: Long)
 case class MinHashBands(child: Expression, bands: Int, rows: Int, seed: Long)
     extends UnaryExpression with SimpleCodegen {
   private val numHashes = bands * rows
-  @transient private lazy val coeffA: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i) | 1L)
-  @transient private lazy val coeffB: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i + 1L))
+  @transient private lazy val coeffs = Shingling.coefficients(numHashes, seed)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(input: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData].toLongArray()
-    val sig = new Array[Long](numHashes)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val x = shingles(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = coeffA(i) * x + coeffB(i)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      s += 1
-    }
+    val sig = Shingling.minHash(input.asInstanceOf[ArrayData].toLongArray(), coeffs)
     new GenericArrayData(Shingling.bandKeys(sig, bands, rows, seed))
   }
   override protected def withNewChildInternal(c: Expression): MinHashBands = copy(child = c)
@@ -293,28 +260,12 @@ case class MinHashBandsSketch(child: Expression, bands: Int, rows: Int,
     extends UnaryExpression with SimpleCodegen {
   require(b > 0 && 64 % b == 0, s"b must divide 64, got $b")
   private val numHashes = bands * rows
-  @transient private lazy val coeffA: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i) | 1L)
-  @transient private lazy val coeffB: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i + 1L))
+  @transient private lazy val coeffs = Shingling.coefficients(numHashes, seed)
   override def dataType: DataType = StructType(Seq(
     StructField("bands", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("sketch", ArrayType(LongType, containsNull = false), nullable = false)))
   override def nullSafeEval(input: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData].toLongArray()
-    val sig = new Array[Long](numHashes)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val x = shingles(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = coeffA(i) * x + coeffB(i)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      s += 1
-    }
+    val sig = Shingling.minHash(input.asInstanceOf[ArrayData].toLongArray(), coeffs)
     org.apache.spark.sql.catalyst.InternalRow(
       new GenericArrayData(Shingling.bandKeys(sig, bands, rows, seed)),
       new GenericArrayData(Shingling.packLowBits(sig, b)))
@@ -379,26 +330,10 @@ case class MinHashJaccard(left: Expression, right: Expression)
 case class BBitMinHash(child: Expression, numHashes: Int, b: Int, seed: Long)
     extends UnaryExpression with SimpleCodegen {
   require(b > 0 && 64 % b == 0, s"b must divide 64, got $b")
-  @transient private lazy val coeffA: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i) | 1L)
-  @transient private lazy val coeffB: Array[Long] =
-    Array.tabulate(numHashes)(i => Shingling.splitmix64(seed + 2L * i + 1L))
+  @transient private lazy val coeffs = Shingling.coefficients(numHashes, seed)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(input: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData].toLongArray()
-    val sig = new Array[Long](numHashes)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val x = shingles(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = coeffA(i) * x + coeffB(i)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      s += 1
-    }
+    val sig = Shingling.minHash(input.asInstanceOf[ArrayData].toLongArray(), coeffs)
     new GenericArrayData(Shingling.packLowBits(sig, b))
   }
   override protected def withNewChildInternal(c: Expression): BBitMinHash = copy(child = c)

@@ -158,16 +158,6 @@ final class StageStore(spark: SparkSession, val root: String) {
     if (has(stage)) read(stage)
     else writePartitioned(stage, thunk)
 
-  /** A zero-row frame with a completed stage's schema. */
-  def emptyLike(stage: String): DataFrame = read(stage).limit(0)
-
-  /** Whether the stage wrote at least one data file — a partitioned stage
-    * whose every owned partition came out empty has only its manifest and
-    * schema record.
-    */
-  def hasData(stage: String): Boolean =
-    has(stage) && pkeyDirs(stageDir(stage)).nonEmpty
-
   private def pkeyDirs(dir: Path): Seq[Int] =
     if (!Files.exists(dir)) Nil
     else scala.util.Using.resource(Files.list(dir))(

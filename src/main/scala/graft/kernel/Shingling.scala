@@ -276,19 +276,15 @@ object Shingling {
     sortedDistinct(hashes, n)
   }
 
-  /** MinHash signature: n independent affine permutations h_i(x)=a_i*x+b_i
-    * over the 64-bit shingle-hash space; signature[i] = min over shingles.
-    * Empty shingle set → signature of Long.MaxValue (never collides with a
-    * real signature's bands because band hashing includes the band values).
-    */
-  /** Per-(numHashes, seed) affine coefficients, computed once per JVM —
+  /** Per-(numHashes, seed) affine coefficients (a, b) of the MinHash
+    * permutations h_i(x) = a(i)*x + b(i), computed once per JVM —
     * regenerating them per row was the dominant fixed cost of the signature
     * stage at 10⁵ rows/executor.
     */
   private val coeffCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Long), (Array[Long], Array[Long])]()
 
-  private def coefficients(numHashes: Int, seed: Long): (Array[Long], Array[Long]) =
+  private[graft] def coefficients(numHashes: Int, seed: Long): (Array[Long], Array[Long]) =
     coeffCache.computeIfAbsent((numHashes, seed), { key =>
       val (n, s) = key
       val a = new Array[Long](n)
@@ -302,16 +298,30 @@ object Shingling {
       (a, b)
     })
 
+  /** MinHash signature: n independent affine permutations h_i(x)=a_i*x+b_i
+    * over the 64-bit shingle-hash space; signature[i] = min over shingles.
+    * Empty shingle set → signature of Long.MaxValue (never collides with a
+    * real signature's bands because band hashing includes the band values).
+    */
   def minHash(shingleHashes: Array[Long], numHashes: Int,
-              seed: Long = DefaultSeed): Array[Long] = {
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    if (shingleHashes == null || shingleHashes.isEmpty) return sig
-    val (a, b) = coefficients(numHashes, seed)
-    var i = 0
+              seed: Long = DefaultSeed): Array[Long] =
+    minHash(shingleHashes, coefficients(numHashes, seed))
+
+  /** [[minHash]] under `coeffs` from [[coefficients]] — the one signature
+    * loop; the Catalyst MinHash expressions take their coefficients once
+    * per instance and call it per row.
+    */
+  def minHash(shingleHashes: Array[Long], coeffs: (Array[Long], Array[Long])): Array[Long] = {
+    val a = coeffs._1 // not `val (a, b) = …`, which allocates a tuple per call
+    val b = coeffs._2
+    val numHashes = a.length
+    val sig = new Array[Long](numHashes)
+    java.util.Arrays.fill(sig, Long.MaxValue)
+    if (shingleHashes == null) return sig
     var s = 0
     while (s < shingleHashes.length) {
       val x = shingleHashes(s)
-      i = 0
+      var i = 0
       while (i < numHashes) {
         val v = a(i) * x + b(i)
         if (v < sig(i)) sig(i) = v

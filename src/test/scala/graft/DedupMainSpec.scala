@@ -11,14 +11,14 @@ class DedupMainSpec extends AnyFunSuite {
   private def refused(args: String*): String =
     intercept[IllegalArgumentException](DedupMain.parseArgs(args.toArray)).getMessage
 
-  test("parseArgs: all 14 usage flags parse into a map keyed by flag name") {
+  test("parseArgs: all 13 usage flags parse into a map keyed by flag name") {
     val opts = DedupMain.parseArgs(Array("/tmp/ckpt",
       "--families", "10", "--hot", "2", "--cores", "4", "--input", "/data/pages",
-      "--seed", "7", "--idbits", "128", "--simhash", "true", "--urldedup", "false",
+      "--seed", "7", "--idbits", "128", "--urldedup", "false",
       "--adopt-state", "TRUE", "--inc-batch", "b1", "--inc-input", "/data/delta",
       "--inc-families", "5", "--inc-offset", "1000000000", "--probe", "0.01"))
     assert(opts("checkpoint") === "/tmp/ckpt")
-    assert(opts.size === 15)
+    assert(opts.size === 14)
     assert(opts("inc-families") === "5" && opts("probe") === "0.01")
     assert(DedupMain.parseArgs(Array("/tmp/ckpt")) === Map("checkpoint" -> "/tmp/ckpt"))
   }
@@ -35,7 +35,9 @@ class DedupMainSpec extends AnyFunSuite {
     assert(refused("/tmp/c", "--hot", "1e3").contains("flag --hot expects an integer"))
     assert(refused("/tmp/c", "--families", "99999999999999999999")
       .contains("flag --families expects an integer"))
-    assert(refused("/tmp/c", "--simhash", "yes").contains("flag --simhash expects true or false"))
+    assert(refused("/tmp/c", "--urldedup", "yes").contains("flag --urldedup expects true or false"))
+    // the retired SimHash candidate source's flag is no flag any more
+    assert(refused("/tmp/c", "--simhash", "true").contains("unknown flag --simhash"))
     assert(refused("/tmp/c", "--probe", "half").contains("flag --probe expects a number"))
     assert(refused("/tmp/c", "--seed", "1", "--seed", "2").contains("flag --seed given twice"))
     assert(refused("/tmp/c", "stray").contains("unexpected argument 'stray'"))

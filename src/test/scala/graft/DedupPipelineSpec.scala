@@ -205,9 +205,9 @@ class DedupPipelineSpec extends AnyFunSuite {
     val pages = corpus.map(_._1)
     val truth = corpus.map(_._2).toDF()
 
-    // all optional candidate/verify branches on, so the wide id is pushed
-    // through LSH emission, SimHash tables, LCS rescue, CC, and rep select
-    val cfgWide = DedupConfig(idBits = 128, useSimHashCandidates = true, useLcsCheck = true)
+    // the optional verify branch on, so the wide id is pushed through LSH
+    // emission, LCS rescue, CC, and rep select
+    val cfgWide = DedupConfig(idBits = 128, useLcsCheck = true)
     val wideStore = freshStore()
     val pipeWide = new DedupPipeline(spark, cfgWide, wideStore)
     val wide = pipeWide.run(pages)
@@ -242,7 +242,7 @@ class DedupPipelineSpec extends AnyFunSuite {
       .run(pages.union(delta))
     assert(partition(incWide) === partition(fullWide),
       "wide-id incremental must partition urls identically to the batch run")
-    // every stage — struct ids, SimHash and LCS on, state layers with pkey
+    // every stage — struct ids, LCS on, state layers with pkey
     // and _del — reads back under its record with the inferred columns
     assertRecordedSchemas(wideStore)
     corpus.unpersist()
@@ -393,6 +393,8 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), plan)
     // the MinHash pass is evaluated once, not inlined into several consumers
     assert("minhashbands".r.findAllIn(plan.toLowerCase).length === 1, plan)
+    // LSH bands are the one candidate source: no SimHash is computed
+    assert(!df.columns.contains("simhash") && !plan.toLowerCase.contains("simhash"), plan)
   }
 
   test("stage plans: no Window or cartesian, 2 candidate shuffles, shuffled-hash verify") {
@@ -427,18 +429,6 @@ class DedupPipelineSpec extends AnyFunSuite {
 
     val pairs = pipe.candidatePairsPlan(sigs, exact).localCheckpoint(true)
 
-    // SimHash candidates: the same PairEmission.bucketPairs pass. Exactly
-    // one shuffle on (table, key), and it feeds the in-partition sort by
-    // (table, key, simhash, id); the other Exchange is the final distinct.
-    val simPlan = finalPlan(pipe.simHashCandidatesPlan(sigs))
-    assert(!simPlan.contains("Window") && !simPlan.contains("CartesianProduct"), simPlan)
-    val bucketShuffle = raw"Exchange hashpartitioning\(table#\d+L, key#\d+L, \d+\)"
-    assert(bucketShuffle.r.findAllIn(simPlan).length === 1, simPlan)
-    val sortOverShuffle = (raw"Sort \[table#\d+L ASC NULLS FIRST, key#\d+L ASC NULLS FIRST, " +
-      raw"simhash#\d+L ASC NULLS FIRST, id#\d+L ASC NULLS FIRST\], false, 0\n" +
-      raw"(\s*\+- (AQEShuffleRead|ShuffleQueryStage)[^\n]*\n)*\s*\+- " + bucketShuffle).r
-    assert(sortOverShuffle.findFirstIn(simPlan).nonEmpty, simPlan)
-
     // Stage 4: both joins back to the signature table must be shuffled
     // hash joins (co-partition on the id, build on the slim pair side) —
     // never sort-merge (pointless sort of shingle arrays) and never a
@@ -465,24 +455,6 @@ class DedupPipelineSpec extends AnyFunSuite {
       sigs.join(pairIds, Seq("id"), "left_semi"), pairs))
     assert("ShuffledHashJoin".r.findAllIn(verIncPlan).length == 2 &&
       !verIncPlan.contains("SortMergeJoin"), verIncPlan)
-  }
-
-  test("simhash candidate source: planted families still recovered; precision holds") {
-    import spark.implicits._
-    val spec = CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 7)
-    val corpus = DeterministicCorpus.generate(spark, spec).cache()
-    val pages = corpus.map(_._1)
-    val truth = corpus.map(_._2).toDF()
-    val pipeline = new DedupPipeline(spark,
-      DedupConfig(useSimHashCandidates = true), freshStore())
-    val clusters = pipeline.run(pages)
-    assert(clusters.count() === pages.count())
-    val (recall, precision, nTruth) = pairMetrics(clusters, truth)
-    assert(nTruth > 10)
-    assert(recall >= 0.99, s"recall $recall with simhash candidates on")
-    assert(precision >= 0.99,
-      s"precision $precision — simhash candidates must not bypass verification")
-    corpus.unpersist()
   }
 
   test("guards: unfingerprinted checkpoint dir refused; duplicate doc ids fail fast") {
@@ -629,30 +601,32 @@ class DedupPipelineSpec extends AnyFunSuite {
     val fp = java.nio.file.Paths.get(store.root, "_PIPELINE_CONFIG.json")
     val full = java.nio.file.Files.readString(fp)
 
-    // simulate a store written BEFORE simHashMaxBucket existed
+    // simulate a store written BEFORE stateCompactEvery existed
     java.nio.file.Files.writeString(fp, full.linesIterator
-      .filterNot(_.startsWith("simHashMaxBucket=")).mkString("\n"))
+      .filterNot(_.startsWith("stateCompactEvery=")).mkString("\n"))
     // current value == default → stages are still valid, resume accepted
     assert(new DedupPipeline(spark, DedupConfig(), store)
       .run(pages).count() === 2L)
     // off-default → stage contents would differ, refused
     val exOff = intercept[IllegalArgumentException] {
-      new DedupPipeline(spark, DedupConfig(simHashMaxBucket = 7), store)
+      new DedupPipeline(spark, DedupConfig(stateCompactEvery = 7), store)
         .run(pages).count()
     }
-    assert(exOff.getMessage.contains("simHashMaxBucket"))
+    assert(exOff.getMessage.contains("stateCompactEvery"))
 
     // retired fields (the sketch-decide mode's, the incremental sketch
     // prefilter's, and the knobs folded into constants — a fingerprint as
-    // the 23-field config wrote it) stored at their old defaults: those
-    // stages were computed exactly as today, so the store resumes AND
-    // takes a delta
+    // the 23-field config wrote it — plus the SimHash candidate source's
+    // two, as the 15-field config wrote them) stored at their old defaults:
+    // those stages were computed exactly as today, so the store resumes
+    // AND takes a delta
     val retiredAtDefault = full + "\nverifySketchBits=None\nsketchNumHashes=256" +
       "\nsketchEps=0.08\nemitSketch=true\nincSketchPrefilter=true" +
       "\nincPrefilterMargin=0.35\nincPrefilterProbePairs=4096\nincPrefilterMinDrop=0.15" +
       "\nnumHashes=80\nverifyIdUniqueness=true\nmaxCcIterations=50" +
       "\nccDurableInterval=5\nlcsLowJaccard=0.4\nlcsMinFraction=0.5" +
-      "\nsimHashMaxHamming=3\nhugeBucketCutoff=1000000"
+      "\nsimHashMaxHamming=3\nhugeBucketCutoff=1000000" +
+      "\nuseSimHashCandidates=false\nsimHashMaxBucket=10000"
     java.nio.file.Files.writeString(fp, retiredAtDefault)
     assert(new DedupPipeline(spark, DedupConfig(), store)
       .run(pages).count() === 2L)
@@ -677,9 +651,13 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(exMargin.getMessage.contains("incPrefilterMargin") &&
       exMargin.getMessage.contains("retired"))
     // … and so is a folded knob off its old default: an unchecked store
-    // may hold duplicate ids, a small cutoff drops buckets today's code keeps
+    // may hold duplicate ids, a small cutoff drops buckets today's code
+    // keeps; a store written with SimHash candidates on holds edges LSH
+    // alone would not have proposed
     Seq("verifyIdUniqueness=true" -> "verifyIdUniqueness=false",
-        "hugeBucketCutoff=1000000" -> "hugeBucketCutoff=10").foreach { case (from, to) =>
+        "hugeBucketCutoff=1000000" -> "hugeBucketCutoff=10",
+        "useSimHashCandidates=false" -> "useSimHashCandidates=true",
+        "simHashMaxBucket=10000" -> "simHashMaxBucket=7").foreach { case (from, to) =>
       java.nio.file.Files.writeString(fp, retiredAtDefault.replace(from, to))
       val ex = intercept[IllegalArgumentException] {
         new DedupPipeline(spark, DedupConfig(), store).run(pages).count()
@@ -889,6 +867,52 @@ class DedupPipelineSpec extends AnyFunSuite {
     all.unpersist()
   }
 
+  test("incremental over signature chunks that carry a simhash column equals batch") {
+    import scala.util.hashing.MurmurHash3
+    import graft.functions.{normalize_tokens, simhash64, word_shingles}
+    val all = DeterministicCorpus.pages(spark,
+      CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 31)).cache()
+    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
+    val aPages = all.filter(p => part(p) >= 1)
+    val bPages = all.filter(p => part(p) == 0)
+    def key(df: DataFrame) = df.select("url", "cluster_id", "is_representative")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    val cfg = DedupConfig()
+    val full = key(new DedupPipeline(spark, cfg, freshStore()).run(aPages.union(bPages)))
+
+    val store = freshStore()
+    new DedupPipeline(spark, cfg, store).run(aPages).count()
+    // rewrite the base as a build with the SimHash candidate source (off)
+    // wrote it: every signature chunk carries `simhash` between
+    // content_hash and n_shingles, and the fingerprint holds the source's
+    // two fields at their defaults
+    val simhash = aPages.toDF().select(
+      xxhash64(col("url"), col("warc_ts")).as("id"),
+      simhash64(word_shingles(normalize_tokens(col("text")), cfg.shingleK, cfg.seed))
+        .as("simhash"))
+    (0 until cfg.resumeChunks).foreach { i =>
+      val st = s"signatures_chunk$i"
+      val chunk = store.read(st)
+      val (head, tail) = chunk.columns.splitAt(chunk.columns.indexOf("n_shingles"))
+      val legacy = chunk.join(simhash, Seq("id"))
+        .select((head.toSeq ++ ("simhash" +: tail.toSeq)).map(col): _*)
+        .localCheckpoint(true)
+      store.invalidate(st)
+      store.write(st, legacy)
+    }
+    val fp = java.nio.file.Paths.get(store.root, "_PIPELINE_CONFIG.json")
+    java.nio.file.Files.writeString(fp, java.nio.file.Files.readString(fp) +
+      "\nuseSimHashCandidates=false\nsimHashMaxBucket=10000")
+    assert(store.read("signatures_chunk0").columns.contains("simhash"))
+
+    val pipe = new DedupPipeline(spark, cfg, store)
+    assert(key(pipe.incremental("b", bPages)) === full,
+      "a simhash-carrying base + simhash-free delta must match the batch run")
+    // the delta's signatures are written without the column
+    assert(!store.read("inc_b_signatures").columns.contains("simhash"))
+    all.unpersist()
+  }
+
   test("incremental state tables: partition-pruned reads, delta-proportional rewrites") {
     import spark.implicits._
     val all = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 600, seed = 5)).cache()
@@ -953,15 +977,13 @@ class DedupPipelineSpec extends AnyFunSuite {
 
     // schema records: every stage reads back the inferred columns; a layer
     // whose every partition is empty has no file to infer from, and reads
-    // back — and `emptyLike`s — the columns of a data-bearing layer
+    // back the columns of a data-bearing layer
     store.writePartitioned("empty_cluster_layer",
       store.read("inc_d1_cluster_state").limit(0))
-    assert(!store.hasData("empty_cluster_layer"))
     assertRecordedSchemas(store)
     val inferred = spark.read.parquet(
       java.nio.file.Paths.get(store.root, "inc_d1_cluster_state").toString).schema
     assert(store.read("empty_cluster_layer").schema === inferred)
-    assert(store.emptyLike("empty_cluster_layer").schema === inferred)
     all.unpersist(); delta.unpersist()
   }
 
@@ -1042,63 +1064,6 @@ class DedupPipelineSpec extends AnyFunSuite {
       .select("cluster_id").distinct().count()
     assert(hotClusters === 1L,
       s"hot family split across $hotClusters clusters — chain path broken")
-    all.unpersist()
-  }
-
-  test("incremental with simhash candidates: bit-identical to the batch run") {
-    import spark.implicits._
-    import scala.util.hashing.MurmurHash3
-    // families split across base and delta: cross-batch near-dup pairs must
-    // come out of the delta×prior SimHash mirror exactly as the batch
-    // operator would emit them (both threshold on simHashMaxBucket)
-    val spec = CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 13)
-    val all = DeterministicCorpus.generate(spark, spec).map(_._1).cache()
-    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
-    val basePages = all.filter(p => part(p) != 0)
-    val deltaPages = all.filter(p => part(p) == 0)
-    assert(basePages.count() > 0 && deltaPages.count() > 0)
-
-    def key(df: DataFrame) =
-      df.select("url", "cluster_id", "is_representative")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
-
-    val cfg = DedupConfig(useSimHashCandidates = true)
-    val full = key(new DedupPipeline(spark, cfg, freshStore()).run(all))
-    val pipe = new DedupPipeline(spark, cfg, freshStore())
-    pipe.run(basePages).count()
-    val incr = key(pipe.incremental("delta", deltaPages))
-    assert(incr === full,
-      "incremental clusters with simhash candidates must equal the batch run")
-    all.unpersist()
-  }
-
-  test("incremental hot SIM bucket: delta chains into an oversized prior " +
-      "simhash family; policy observable") {
-    import spark.implicits._
-    // the 210-member near-identical family floods its simhash table buckets
-    // far past simHashMaxBucket=8: the delta×prior mirror must take the
-    // identical-fingerprint min-id chain (O(delta) output), count the hot
-    // buckets, and still land every member in one cluster
-    val all = DeterministicCorpus.pages(spark,
-      CorpusSpec(nFamilies = 30, hotFamilySize = 210, seed = 3)).cache()
-    def copyIdx(u: String): Int = u.substring(u.lastIndexOf('c') + 1).toInt
-    val basePages = all.filter(p => !p.url.contains("/f-1/") || copyIdx(p.url) < 200)
-    val deltaPages = all.filter(p => p.url.contains("/f-1/") && copyIdx(p.url) >= 200)
-    assert(deltaPages.count() === 10L)
-
-    val pipe = new DedupPipeline(spark,
-      DedupConfig(useSimHashCandidates = true, simHashMaxBucket = 8,
-        maxBucketAllPairs = 16), freshStore())
-    pipe.run(basePages).count()
-    pipe.hotBuckets.reset()
-    val clusters = pipe.incremental("hot", deltaPages)
-    assert(clusters.count() === all.count())
-    val hotClusters = clusters.filter(col("url").contains("/f-1/"))
-      .select("cluster_id").distinct().count()
-    assert(hotClusters === 1L,
-      s"hot family split across $hotClusters clusters — sim chain path broken")
-    assert(pipe.hotBuckets.value > 0L,
-      "oversized prior sim buckets must be counted, not silently chained")
     all.unpersist()
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col => c, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions._
+import graft.kernel.Shingling
 
 /** Spark-side tests for the Catalyst expression layer: null propagation,
   * Column API, SQL registration, and agreement with the pure kernel.
@@ -102,6 +103,28 @@ class ExprSpec extends AnyFunSuite {
     assert(pairs((1L, 2L))._1 === 1.0)
     assert(pairs((1L, 2L))._2 === 0)
     assert(pairs((1L, 3L))._1 === 0.0)
+
+    // the four MinHash expressions are wrappers of Shingling.minHash: equal
+    // to the kernel on random and empty shingle arrays
+    val rng = new scala.util.Random(7)
+    val arrays = Seq.fill(20)(Array.fill(rng.nextInt(40))(rng.nextLong()).distinct.sorted) :+
+      Array.empty[Long]
+    val (n, bands, rws, b, seed) = (80, 16, 5, 4, 99L)
+    val out = arrays.toDF("sh").select(
+      minhash($"sh", n, seed), minhash_bands($"sh", bands, rws, seed),
+      minhash_bands_sketch($"sh", bands, rws, b, seed), bbit_minhash($"sh", n, b, seed))
+      .collect()
+    arrays.zip(out).foreach { case (sh, r) =>
+      val sig = Shingling.minHash(sh, n, seed)
+      val bandKeys = Shingling.bandKeys(sig, bands, rws, seed).toSeq
+      val sketch = Shingling.packLowBits(sig, b).toSeq
+      assert(r.getSeq[Long](0) === sig.toSeq)
+      assert(r.getSeq[Long](1) === bandKeys)
+      assert(r.getStruct(2).getSeq[Long](0) === bandKeys)
+      assert(r.getStruct(2).getSeq[Long](1) === sketch)
+      assert(r.getSeq[Long](3) === sketch)
+    }
+    assert(Shingling.minHash(Array.empty[Long], n, seed).forall(_ == Long.MaxValue))
   }
 
   test("PairEmission: all-pairs below cap, chain above, drop/chain past huge cutoff") {
