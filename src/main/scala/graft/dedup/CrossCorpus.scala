@@ -76,7 +76,7 @@ object CrossCorpus {
     // the pipeline's skew ladder, priced off the right side's bucket stats
     // BEFORE any pair is emitted
     val cand = PairEmission.crossBucketPairs(lb, rb, Seq("band", "bucket"),
-      cfg.maxBucketAllPairs, cfg.hugeBucketCutoff, droppedBuckets)
+      cfg.maxBucketAllPairs, cfg.hugeBucketCutoff, None, droppedBuckets)
       .select(col("id").as("a"), col("oid").as("b"))
       .distinct()
 

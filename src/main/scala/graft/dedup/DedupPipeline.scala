@@ -232,8 +232,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
   /** Skew-policy observability (SURVEY.md §4.2 "no silent caps"): band
     * buckets that fell back to chain emission, and buckets/rows dropped
     * past [[DedupPipeline.HugeBucketCutoff]]. Populated by the candidate
-    * stage's job — in an incremental batch, hot buckets by its delta×delta
-    * half only (the delta×prior ladder counts drops, not chains).
+    * stage's job — in an incremental batch by both halves: the delta×delta
+    * emission counts its chained and dropped buckets (and dropped rows),
+    * the delta×prior ladder the prior buckets it chains to or drops.
     */
   val hotBuckets = spark.sparkContext.longAccumulator("graft.dedup.hotBuckets")
   val droppedBuckets = spark.sparkContext.longAccumulator("graft.dedup.droppedBuckets")
@@ -278,9 +279,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       .filter(col("n_shingles") > 0)
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
 
-  private[graft] def candidatePairsPlan(sigs: DataFrame, exact: DataFrame): DataFrame = {
+  private[graft] def candidatePairsPlan(sigs: DataFrame, exact: DataFrame): DataFrame =
+    bandPairs(bandRowsOf(sigs, exact))
+
+  /** Within-bucket candidate pairs of (band, bucket, id) `bandRows`. */
+  private def bandPairs(bandRows: DataFrame): DataFrame = {
     val (hot, droppedB, droppedR) = (hotBuckets, droppedBuckets, droppedBucketRows)
-    PairEmission.bucketPairs(bandRowsOf(sigs, exact), Seq("band", "bucket"),
+    PairEmission.bucketPairs(bandRows, Seq("band", "bucket"),
       order = Seq("id"), value = col("id"),
       maxAllPairs = config.maxBucketAllPairs, hugeCutoff = HugeBucketCutoff,
       onHot = () => hot.add(1L),
@@ -494,8 +499,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     *       · band rows (key (band, bucket)) are APPEND-ONLY — each batch
     *         appends its delta's rows; prior rows are never re-derived from
     *         the corpus;
-    *       · hash-min (content_hash → min id), components, and clusters
-    *         are MERGE-ON-READ UPSERT tables — each batch appends a layer
+    *       · hash-min (content_hash → min id) and clusters are
+    *         MERGE-ON-READ UPSERT tables — each batch appends a layer
     *         holding only the rows it CHANGED (plus tombstones where a
     *         key's partition moved); reads resolve latest-wins per key and
     *         layers fold back into one base every `stateCompactEvery`
@@ -509,10 +514,12 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     *     chain-to-bucket-min above `maxBucketAllPairs` (O(delta) output),
     *     drop + metric above [[HugeBucketCutoff]];
     *   - connected components are updated INCREMENTALLY: only components
-    *     touched by a new edge are re-solved (prior assignments re-enter as
-    *     (component, member) star edges — component ids are component
-    *     minima, so merged components keep batch-identical ids); untouched
-    *     partitions are never read or rewritten;
+    *     touched by a new edge are re-solved. The cluster table is the one
+    *     stored component mapping (a doc's `cluster_id` is its component,
+    *     or its own id when no edge touches it), so prior assignments
+    *     re-enter as (cluster_id, member) star edges — component ids are
+    *     component minima, so merged components keep batch-identical ids;
+    *     untouched partitions are never read or rewritten;
     *   - cluster rows (representative selection) are recomputed only for
     *     touched clusters and the delta; the returned full table is the
     *     latest-wins view over base + per-batch upsert layers.
@@ -527,10 +534,13 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * Remaining corpus-sized terms, stated honestly: (a) the already-present
     * id anti-join and the verification shingle fetch scan the signature
     * table (column-pruned, semi-filtered map-side — no corpus shuffle);
-    * (b) the touched-component probe scans the slim (id, component) state
-    * once per batch (the component-hash layout cannot prune an id lookup;
-    * production puts a bloom/id-index on that probe). Both are reads of
-    * slim projections, not rewrites.
+    * (b) the touched-component probe scans the slim (id, cluster_id)
+    * projection of the cluster state once per batch — every doc's row,
+    * singletons included, where a separate (id, component) table would
+    * hold linked docs only: the price of storing the mapping once (the
+    * cluster-hash layout cannot prune an id lookup; production puts a
+    * bloom/id-index on that probe). Both are reads of slim projections,
+    * not rewrites.
     *
     * EQUIVALENCE CONTRACT: while any band bucket stays within
     * `maxBucketAllPairs` (the all-pairs regime — everything but
@@ -656,10 +666,11 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
         layerRows("band", bandRowsOf(sigsNew, exactInc))
       }
       val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
-        val within = candidatePairsPlan(sigsNew, exactInc)
         // the delta's band rows read back from their materialized state stage
-        // (delta-sized), replacing the old eager localCheckpoint
+        // (delta-sized) feed both halves: delta×delta through the batch
+        // emission, delta×prior through the ladder
         val deltaBand = bandStateStage.select("id", "band", "bucket")
+        val within = bandPairs(deltaBand)
         // no broadcast hint: for a small delta AQE broadcasts the bucket set
         // (prior band rows never shuffle); a corpus-sized delta would OOM the
         // driver under a forced broadcast, and shuffling is then correct
@@ -671,7 +682,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
           .localCheckpoint(true)
         val cross = PairEmission.crossBucketPairs(deltaBand, oldBand,
           Seq("band", "bucket"), config.maxBucketAllPairs, HugeBucketCutoff,
-          Some(droppedBuckets))
+          Some(hotBuckets), Some(droppedBuckets))
           .select(least(col("id"), col("oid")).as("a"),
             greatest(col("id"), col("oid")).as("b"))
           .filter(col("a") =!= col("b"))
@@ -691,56 +702,48 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       }
 
       // 5 — incremental connected components: re-solve ONLY touched
-      // components, append ONLY the re-solved rows (+ tombstones for moves)
+      // components; the re-solved rows are the batch's comp_delta stage
       val newEdges = exactInc.select("a", "b").union(verifiedInc.select("a", "b"))
       val edgeIds = newEdges.select(col("a").as("id"))
         .union(newEdges.select(col("b").as("id"))).distinct()
-      // prior component of every edge-touched node (prior singletons = own
-      // id). The id probe semi-filters the slim RAW layer rows map-side
+      // prior component of every edge-touched node, read from the cluster
+      // state (a doc's cluster_id is its component, or its own id when no
+      // edge touches it; ids new in this batch = own id). The id probe
+      // semi-filters the slim (id, cluster_id) RAW layer rows map-side
       // (edgeIds is delta-small ⇒ broadcast semi, no corpus shuffle), and
       // latest-wins resolution runs on the delta-sized survivors only. The
-      // component-hash layout cannot prune an id lookup; production puts a
+      // cluster-hash layout cannot prune an id lookup; production puts a
       // bloom/id index on the state files.
-      val priorOfEdge = resolveState("comp",
-        stateView("comp", applied, None).join(edgeIds, Seq("id"), "left_semi"))
-      val touched = edgeIds
-        .join(priorOfEdge.select("id", "component"), Seq("id"), "left")
-        .select(coalesce(col("component"), col("id")).as("component")).distinct()
+      val priorOfEdge = resolveState("cluster",
+        stateView("cluster", applied, None).select("id", "cluster_id", SeqCol, DelCol)
+          .join(edgeIds, Seq("id"), "left_semi"))
+      val touched = edgeIds.join(priorOfEdge, Seq("id"), "left")
+        .select(coalesce(col("cluster_id"), col("id")).as("cluster_id")).distinct()
         .localCheckpoint(true)
-      val touchedCompPk = touchedPkeys("comp", touched)
-      // the touched components' CURRENT member rows: a partition-pruned scan
-      // + latest-wins resolve over the pruned rows (stale rows from earlier
-      // moves lose to their tombstones, see resolveState)
-      val oldMembers = resolveState("comp",
-        stateView("comp", applied, Some(touchedCompPk)))
-        .join(touched, Seq("component"), "left_semi")
-        .select("id", "component")
+      // the touched clusters' CURRENT rows: a partition-pruned scan +
+      // latest-wins resolve over the pruned rows (stale rows from earlier
+      // moves lose to their tombstones, see resolveState). They feed the
+      // re-solve as star edges and the cluster layer as the rows it
+      // supersedes.
+      val oldRows = resolveState("cluster",
+        stateView("cluster", applied, Some(touchedPkeys("cluster", touched))))
+        .join(touched, Seq("cluster_id"), "left_semi")
+        .select(ClusterCols.map(col): _*)
         .localCheckpoint(true)
       val subStage = store.getOrCompute(s"inc_${batch}_comp_delta") {
-        val subOld = oldMembers
-          .select(col("component").as("a"), col("id").as("b"))
+        val subOld = oldRows
+          .select(col("cluster_id").as("a"), col("id").as("b"))
           .filter(col("a") =!= col("b"))
         ConnectedComponents.run(subOld.union(newEdges),
           durable = Some((store, CcDurableInterval)), durablePrefix = s"inc_${batch}_cc")
           .select("id", "component")
       }
-      // layer append (merge-on-read upsert): the re-solved rows, plus a
-      // tombstone at the OLD partition for every member whose component —
-      // hence state partition — changed. Write volume is O(touched members
-      // + delta); untouched rows are never read or copied.
-      store.getOrComputePartitioned(s"inc_${batch}_comp_state") {
-        upsertLayer("comp", subStage.select("id", "component"), oldMembers)
-      }
 
       // 6 — clusters: recompute rows only for touched clusters + the delta;
-      // append only those rows (+ tombstones for ids whose cluster moved)
+      // append only those rows (+ tombstones for ids whose cluster — hence
+      // state partition — moved). Write volume is O(touched members +
+      // delta); untouched rows are never read or copied.
       store.getOrComputePartitioned(s"inc_${batch}_cluster_state") {
-        val touchedCl = touched.withColumnRenamed("component", "cluster_id")
-        val oldRows = resolveState("cluster",
-          stateView("cluster", applied, Some(touchedCompPk)))
-          .join(touchedCl, Seq("cluster_id"), "left_semi")
-          .select(ClusterCols.map(col): _*)
-          .localCheckpoint(true)
         val affectedIds = oldRows.select("id").union(sigsNew.select("id")).distinct()
         val affectedSigs = allSigs.join(affectedIds, Seq("id"), "left_semi")
         // every affected id's component was re-solved (members of touched
@@ -812,11 +815,14 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
 
   // ──────────────── pkey-partitioned incremental state tables ────────────────
   //
-  // Four state tables back the incremental mode, each a set of StageStore
+  // Three state tables back the incremental mode, each a set of StageStore
   // stages partitioned by `pkey = hash(partition columns) mod
   // statePartitions` (production: Iceberg bucket-transform partitions),
-  // declared by [[PartitionCols]]: band is append-only, hash_min, comp and
-  // cluster are UPSERT tables ([[UpsertKeys]]).
+  // declared by [[PartitionCols]]: band is append-only, hash_min and
+  // cluster are UPSERT tables ([[UpsertKeys]]). The cluster table doubles
+  // as the component mapping of the incremental re-solve; stores written
+  // when components had a state table of their own keep its `comp_state*`
+  // stages, which nothing reads.
   //
   // The append-only table: each batch appends one layer of new rows; the
   // current view is the pruned union. Upsert tables are MERGE-ON-READ
@@ -841,12 +847,11 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
   /** Each state table's partition columns. */
   private val PartitionCols: Map[String, Seq[String]] = Map(
     "band" -> Seq("band", "bucket"), "hash_min" -> Seq("content_hash"),
-    "comp" -> Seq("component"), "cluster" -> Seq("cluster_id"))
+    "cluster" -> Seq("cluster_id"))
 
   /** Upsert tables and their latest-wins resolution keys; absent = append-only. */
   private val UpsertKeys: Map[String, Seq[String]] = Map(
     "hash_min" -> Seq("content_hash"),
-    "comp" -> Seq("id"),
     "cluster" -> Seq("id"))
 
   /** The state partition of a row of table `name`. */
@@ -1031,9 +1036,6 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     ensureStateBase("hash_min", applied) {
       layerRows("hash_min", baseSigs.groupBy("content_hash").agg(min("id").as("m")))
     }
-    ensureStateBase("comp", applied) {
-      layerRows("comp", store.read("components").select("id", "component"))
-    }
     ensureStateBase("cluster", applied) {
       layerRows("cluster", store.read("clusters").select(ClusterCols.map(col): _*))
     }
@@ -1043,8 +1045,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * `pkeys = Some(ks)` prunes every layer's scan to those partitions
     * (directory-level pruning — the delta-proportional read; an empty `ks`
     * prunes everything). Every layer reads under its schema record, so an
-    * all-empty layer (e.g. the component state of a base corpus with no
-    * duplicate edges) reads as zero typed rows. Append-only tables are
+    * all-empty layer (e.g. the hash-min layer of a batch that lowered no
+    * group minimum) reads as zero typed rows. Append-only tables are
     * complete as-is; upsert tables ([[UpsertKeys]]) come back with `_seq`
     * (layer index) and `_del` attached and MUST go through [[resolveState]]
     * — callers that only need a key subset semi-filter the raw rows first,

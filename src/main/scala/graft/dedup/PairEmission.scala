@@ -48,14 +48,16 @@ object PairEmission {
     * checkpointed, then per bucket of n build rows:
     *   - n ≤ maxAllPairs          → every (probe, build) pair;
     *   - n in (maxAllPairs, hugeCutoff] → each probe row chained to the
-    *     bucket's min build id (output linear in probe rows);
-    *   - n > hugeCutoff           → nothing, counted in `dropped` (one
-    *     small job over the stats, only when an accumulator is given).
+    *     bucket's min build id (output linear in probe rows), counted in
+    *     `hot`;
+    *   - n > hugeCutoff           → nothing, counted in `dropped`.
+    * Both counts come from one small job over the stats, run only when an
+    * accumulator is given.
     * Returns (`id`, `oid`) = (probe id, build id), not deduplicated.
     */
   def crossBucketPairs(probe: DataFrame, build: DataFrame, keys: Seq[String],
       maxAllPairs: Int, hugeCutoff: Long,
-      dropped: Option[LongAccumulator]): DataFrame = {
+      hot: Option[LongAccumulator], dropped: Option[LongAccumulator]): DataFrame = {
     val stats = build.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"), min("id").as("bmin"))
       .localCheckpoint(true)
@@ -64,13 +66,14 @@ object PairEmission {
         keys, "left_semi")
       .join(build.withColumnRenamed("id", "oid"), keys)
       .select("id", "oid")
+    val isChained = col("n") > maxAllPairs && col("n") <= hugeCutoff
     val chained = probe
-      .join(stats.filter(col("n") > maxAllPairs && col("n") <= hugeCutoff)
-        .select((keys :+ "bmin").map(col): _*), keys)
+      .join(stats.filter(isChained).select((keys :+ "bmin").map(col): _*), keys)
       .select(col("id"), col("bmin").as("oid"))
-    dropped.foreach { acc =>
-      val nHuge = stats.filter(col("n") > hugeCutoff).count()
-      if (nHuge > 0) acc.add(nHuge)
+    if (hot.isDefined || dropped.isDefined) {
+      val r = stats.agg(count(when(isChained, 1)), count(when(col("n") > hugeCutoff, 1))).head()
+      hot.foreach(_.add(r.getLong(0)))
+      dropped.foreach(_.add(r.getLong(1)))
     }
     small.union(chained)
   }

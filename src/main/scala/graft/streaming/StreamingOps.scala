@@ -23,10 +23,11 @@ object StreamingOps {
 
   /** Stateless signature projection — valid on batch and streaming frames
     * alike (no shuffle, no state). Its url, warc_ts, lang, content_hash,
-    * simhash, n_shingles and bands are the batch pipeline's signature
-    * columns, computed by the same expressions; the stage's id
+    * n_shingles and bands are the batch pipeline's signature columns,
+    * computed by the same expressions; the stage's id
     * (`xxhash64(url, warc_ts)`), source, text_len and stored shingles are
-    * left out (streams key by content_hash).
+    * left out (streams key by content_hash). The `simhash` column is the
+    * stream's own: the batch signatures do not carry it.
     * `sketchBits = Some(b)` additionally emits the packed b-bit MinHash
     * `sketch` column, so a streaming candidate feed can be sketch-verified
     * (`SketchVerify.verifyPairs`) against the stream's own signatures

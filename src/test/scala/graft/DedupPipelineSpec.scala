@@ -913,12 +913,55 @@ class DedupPipelineSpec extends AnyFunSuite {
     all.unpersist()
   }
 
+  test("incremental over a store that carries the retired comp state table equals " +
+      "batch; a fresh store writes no comp state") {
+    import scala.util.hashing.MurmurHash3
+    val all = DeterministicCorpus.pages(spark,
+      CorpusSpec(nFamilies = 60, pDup = 0.5, seed = 37)).cache()
+    def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 3)
+    val aPages = all.filter(p => part(p) == 2)
+    val bPages = all.filter(p => part(p) == 1)
+    val cPages = all.filter(p => part(p) == 0)
+    def key(df: DataFrame) = df.select("url", "cluster_id", "is_representative")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    val cfg = DedupConfig()
+    val full = key(new DedupPipeline(spark, cfg, freshStore())
+      .run(aPages.union(bPages).union(cPages)))
+
+    val store = freshStore()
+    val pipe = new DedupPipeline(spark, cfg, store)
+    pipe.run(aPages).count()
+    pipe.incremental("b", bPages).count()
+    // a batch writes its signatures, exact path, candidates, verified
+    // edges, union-find result and two state layers — no component layer
+    assert(store.stages("inc_b_").sorted === Seq("band_state", "candidate_pairs",
+      "cluster_state", "comp_delta", "exact_edges", "hash_min_state", "signatures",
+      "verified_edges").map("inc_b_" + _))
+    assert(store.stages("comp_state").isEmpty && !store.marked("comp_state_covers"))
+
+    // add what a build with a component state table wrote beside them: an
+    // adoption base of the run's components, its covers marker and b's
+    // layer of re-solved rows, each partitioned by pkey(component)
+    def compLayer(df: DataFrame) = df.select("id", "component")
+      .withColumn("pkey", pmod(xxhash64(col("component")), lit(cfg.statePartitions)).cast("int"))
+      .withColumn("_del", lit(false))
+    store.mark("comp_state_covers", "0 0")
+    store.writePartitioned("comp_state_base", compLayer(store.read("components")))
+    store.writePartitioned("inc_b_comp_state", compLayer(store.read("inc_b_comp_delta")))
+    assert(key(pipe.incremental("c", cPages)) === full,
+      "a store with retired comp state + a new delta must match the batch run")
+    // the retired stages are left as they were, unread
+    assert(store.has("comp_state_base") && store.has("inc_b_comp_state"))
+    assert(!store.has("inc_c_comp_state"))
+    all.unpersist()
+  }
+
   test("incremental state tables: partition-pruned reads, delta-proportional rewrites") {
     import spark.implicits._
     val all = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 600, seed = 5)).cache()
     // a tiny delta: 2 brand-new families plus 5 exact re-crawls of base
     // pages — the re-crawls link into existing components, so the member
-    // fetch and the comp/cluster partition rewrites are all exercised
+    // fetch and the cluster partition rewrites are all exercised
     val recrawls = all.take(5).toSeq
       .map(p => p.copy(url = p.url + "#recrawl",
         warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 60000L))).toDS()
@@ -963,9 +1006,10 @@ class DedupPipelineSpec extends AnyFunSuite {
     // the partitioned layer's manifest accounts for every row it wrote
     assert(store.lineage("inc_d1_cluster_state").agg(sum("rows")).as[Long].head() ===
       clRows)
-    val compRows = store.read("inc_d1_comp_state").count()
+    // the re-solve's durable result: touched members + delta only
+    val compRows = store.read("inc_d1_comp_delta").count()
     assert(compRows <= 4 * nDelta + 50,
-      s"component layer wrote $compRows rows for a $nDelta-page delta")
+      s"component re-solve wrote $compRows rows for a $nDelta-page delta")
     // hash-min layer: changed/new keys only — at most the delta's hashes
     val hashRows = store.read("inc_d1_hash_min_state").count()
     assert(hashRows > 0 && hashRows <= nDelta,
@@ -1058,8 +1102,12 @@ class DedupPipelineSpec extends AnyFunSuite {
     val pipe = new DedupPipeline(spark,
       DedupConfig(maxBucketAllPairs = 16), freshStore())
     pipe.run(basePages).count()
+    val hotBefore = pipe.hotBuckets.value
     val clusters = pipe.incremental("hot", deltaPages)
     assert(clusters.count() === all.count())
+    // the delta×prior ladder counts the prior buckets it chains into
+    assert(pipe.hotBuckets.value > hotBefore,
+      s"hotBuckets stayed at $hotBefore across a chained delta")
     val hotClusters = clusters.filter(col("url").contains("/f-1/"))
       .select("cluster_id").distinct().count()
     assert(hotClusters === 1L,
