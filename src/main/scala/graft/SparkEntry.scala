@@ -1028,10 +1028,11 @@ object SparkEntry {
     // every twin with its original, with the EARLIER capture as
     // representative (rep chain: text_len tie → earlier warc_ts), and
     // (b) be bit-identical to run(base ∪ delta) — the equivalence
-    // contract. Twins share a content hash, so the hash-min state links
-    // them; a twin whose id undercuts its original's takes the group min and
-    // enters the band state, so the delta×prior LSH cross join runs under
-    // the driver gate too.
+    // contract. Twins share a content hash, so the exact path links them
+    // through the group min read from the prior signatures; a twin whose id
+    // undercuts its original's takes the group min (demoting the original)
+    // and enters the band state, so the delta×prior LSH cross join runs
+    // under the driver gate too.
     "q_dedup_incremental" -> ((s, dir) => {
       // capped input: this row buys the equivalence CONTRACT (a fixed-size
       // correctness surface, dominated by per-stage job latency, not data);

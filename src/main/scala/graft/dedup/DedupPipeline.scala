@@ -499,13 +499,16 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     *       · band rows (key (band, bucket)) are APPEND-ONLY — each batch
     *         appends its delta's rows; prior rows are never re-derived from
     *         the corpus;
-    *       · hash-min (content_hash → min id) and clusters are
-    *         MERGE-ON-READ UPSERT tables — each batch appends a layer
-    *         holding only the rows it CHANGED (plus tombstones where a
-    *         key's partition moved); reads resolve latest-wins per key and
-    *         layers fold back into one base every `stateCompactEvery`
-    *         batches, so per-batch write volume is O(changed rows) even
-    *         when the touched keys hash into every partition;
+    *       · clusters is a MERGE-ON-READ UPSERT table — each batch
+    *         appends a layer holding only the rows it CHANGED (plus
+    *         tombstones where a key's partition moved); reads resolve
+    *         latest-wins per key and layers fold back into one base every
+    *         `stateCompactEvery` batches, so per-batch write volume is
+    *         O(changed rows) even when the touched keys hash into every
+    *         partition;
+    *   - exact duplicates link each delta doc to its content hash's group
+    *     min id, read from the prior signature stages (which already hold
+    *     every prior doc's (id, content_hash)) — no state table of its own;
     *   - LSH candidates join the delta's band rows against the band STATE
     *     pruned to delta-touched partitions (directory-level pruning) and
     *     semi-restricted to touched buckets, under the cross-bucket skew
@@ -532,8 +535,9 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * materialize it first.
     *
     * Remaining corpus-sized terms, stated honestly: (a) the already-present
-    * id anti-join and the verification shingle fetch scan the signature
-    * table (column-pruned, semi-filtered map-side — no corpus shuffle);
+    * id anti-join, the content-hash group-min probe and the verification
+    * shingle fetch scan the signature table (column-pruned, semi-filtered
+    * map-side — no corpus shuffle);
     * (b) the touched-component probe scans the slim (id, cluster_id)
     * projection of the cluster state once per batch — every doc's row,
     * singletons included, where a separate (id, component) table would
@@ -612,151 +616,134 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
       }
     }
 
-    // frames persisted for this batch, released however it ends: a stage
-    // that throws must not leave them pinned for the rest of the session
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      pinned += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    }
-    try {
-      // 2 — exact path via the (content_hash → min id) state: a pruned
-      // latest-wins read of the delta's hash partitions, then a layer append
-      // of ONLY the changed/new keys (merge-on-read upsert; the state key is
-      // also the partition key, so a newer layer shadows the same key in
-      // place and tombstones are never needed here). priorTouchedHash/
-      // deltaMin each feed two consumers (layer write + edge derivation):
-      // persist so the pruned read runs once, not per consumer.
-      val deltaMin = pin(sigsNew.groupBy("content_hash").agg(min("id").as("dm")))
-      val touchedHashPk = touchedPkeys("hash_min", deltaMin)
-      val priorTouchedHash = pin(resolveState("hash_min",
-        stateView("hash_min", applied, Some(touchedHashPk)))
-        .select("content_hash", "m"))
+    // 2 — exact path: each delta hash's prior group min comes from the
+    // prior signatures themselves (every prior doc's (id, content_hash) is
+    // stored there), semi-filtered map-side to the delta's hashes — the
+    // small side, broadcast by AQE — before the min aggregate
+    val exactInc = store.getOrCompute(s"inc_${batch}_exact_edges") {
+      val deltaMin = sigsNew.groupBy("content_hash").agg(min("id").as("dm"))
+      val priorMin = priorSigs.select("id", "content_hash")
+        .join(deltaMin.select("content_hash"), Seq("content_hash"), "left_semi")
+        .groupBy("content_hash").agg(min("id").as("pm"))
       // the batch's current min per delta hash — prior min if smaller
-      val curMin = deltaMin.join(priorTouchedHash, Seq("content_hash"), "left")
+      val curMin = deltaMin.join(priorMin, Seq("content_hash"), "left")
         .select(col("content_hash"),
-          least(col("dm"), coalesce(col("m"), col("dm"))).as("cm"),
-          col("m").as("pm"), col("dm"))
-      store.getOrComputePartitioned(s"inc_${batch}_hash_min_state") {
-        layerRows("hash_min", curMin.filter(col("pm").isNull || col("cm") < col("pm"))
-          .select(col("content_hash"), col("cm").as("m")))
-      }
-      val exactInc = store.getOrCompute(s"inc_${batch}_exact_edges") {
-        // delta docs to their (possibly old) group min …
-        val newDoc = sigsNew.select("id", "content_hash")
-          .join(curMin.select("content_hash", "cm"), "content_hash")
-          .filter(col("id") =!= col("cm"))
-          .select(col("cm").as("a"), col("id").as("b"))
-        // … and the demoted old min when the delta brings a smaller id
-        val repChange = curMin
-          .filter(col("pm").isNotNull && col("dm") < col("pm"))
-          .select(col("dm").as("a"), col("pm").as("b"))
-        newDoc.union(repChange).distinct()
-      }
+          least(col("dm"), coalesce(col("pm"), col("dm"))).as("cm"),
+          col("pm"), col("dm"))
+      // delta docs to their (possibly old) group min …
+      val newDoc = sigsNew.select("id", "content_hash")
+        .join(curMin.select("content_hash", "cm"), "content_hash")
+        .filter(col("id") =!= col("cm"))
+        .select(col("cm").as("a"), col("id").as("b"))
+      // … and the demoted old min when the delta brings a smaller id
+      val repChange = curMin
+        .filter(col("pm").isNotNull && col("dm") < col("pm"))
+        .select(col("dm").as("a"), col("pm").as("b"))
+      newDoc.union(repChange).distinct()
+    }
 
-      // 3 — LSH candidates: delta×delta via the batch plan, delta×prior via
-      //     the pkey-partitioned band STATE (appended per batch at ingest,
-      //     never re-derived from the corpus), pruned to delta-touched
-      //     partitions, under the shared cross-bucket skew ladder.
-      // The delta's band rows are APPENDED to the state table as their own
-      // stage FIRST — outside the candidate thunk, so a resume that skips
-      // the (complete) candidate stage still guarantees the append exists
-      // for every later batch.
-      val bandStateStage = store.getOrComputePartitioned(s"inc_${batch}_band_state") {
-        layerRows("band", bandRowsOf(sigsNew, exactInc))
-      }
-      val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
-        // the delta's band rows read back from their materialized state stage
-        // (delta-sized) feed both halves: delta×delta through the batch
-        // emission, delta×prior through the ladder
-        val deltaBand = bandStateStage.select("id", "band", "bucket")
-        val within = bandPairs(deltaBand)
-        // no broadcast hint: for a small delta AQE broadcasts the bucket set
-        // (prior band rows never shuffle); a corpus-sized delta would OOM the
-        // driver under a forced broadcast, and shuffling is then correct
-        val touchedBuckets = deltaBand.select("band", "bucket").distinct()
-        val touchedBandPk = touchedPkeys("band", deltaBand)
-        val oldBand = stateView("band", applied, Some(touchedBandPk))
-          .join(touchedBuckets, Seq("band", "bucket"), "left_semi")
-          .select("id", "band", "bucket")
-          .localCheckpoint(true)
-        val cross = PairEmission.crossBucketPairs(deltaBand, oldBand,
-          Seq("band", "bucket"), config.maxBucketAllPairs, HugeBucketCutoff,
-          Some(hotBuckets), Some(droppedBuckets))
-          .select(least(col("id"), col("oid")).as("a"),
-            greatest(col("id"), col("oid")).as("b"))
-          .filter(col("a") =!= col("b"))
-        within.union(cross).distinct()
-      }
-
-      // 4 — verification: same plan as batch, but the shingle side is
-      //     semi-filtered to pair-touched ids FIRST — the batch plan shuffles
-      //     the whole signature table (necessary there), which for a 5% delta
-      //     would make verification cost corpus-sized instead of delta-sized.
-      val allSigs = store.read(priorSigStages :+ sigsStage)
-      val verifiedInc = store.getOrCompute(s"inc_${batch}_verified_edges") {
-        val pairIds = candInc.select(col("a").as("id"))
-          .union(candInc.select(col("b").as("id"))).distinct()
-        verifiedEdgesPlan(allSigs.join(pairIds, Seq("id"), "left_semi"),
-          candInc, allPages)
-      }
-
-      // 5 — incremental connected components: re-solve ONLY touched
-      // components; the re-solved rows are the batch's comp_delta stage
-      val newEdges = exactInc.select("a", "b").union(verifiedInc.select("a", "b"))
-      val edgeIds = newEdges.select(col("a").as("id"))
-        .union(newEdges.select(col("b").as("id"))).distinct()
-      // prior component of every edge-touched node, read from the cluster
-      // state (a doc's cluster_id is its component, or its own id when no
-      // edge touches it; ids new in this batch = own id). The id probe
-      // semi-filters the slim (id, cluster_id) RAW layer rows map-side
-      // (edgeIds is delta-small ⇒ broadcast semi, no corpus shuffle), and
-      // latest-wins resolution runs on the delta-sized survivors only. The
-      // cluster-hash layout cannot prune an id lookup; production puts a
-      // bloom/id index on the state files.
-      val priorOfEdge = resolveState("cluster",
-        stateView("cluster", applied, None).select("id", "cluster_id", SeqCol, DelCol)
-          .join(edgeIds, Seq("id"), "left_semi"))
-      val touched = edgeIds.join(priorOfEdge, Seq("id"), "left")
-        .select(coalesce(col("cluster_id"), col("id")).as("cluster_id")).distinct()
+    // 3 — LSH candidates: delta×delta via the batch plan, delta×prior via
+    //     the pkey-partitioned band STATE (appended per batch at ingest,
+    //     never re-derived from the corpus), pruned to delta-touched
+    //     partitions, under the shared cross-bucket skew ladder.
+    // The delta's band rows are APPENDED to the state table as their own
+    // stage FIRST — outside the candidate thunk, so a resume that skips
+    // the (complete) candidate stage still guarantees the append exists
+    // for every later batch.
+    val bandStateStage = store.getOrComputePartitioned(s"inc_${batch}_band_state") {
+      layerRows("band", bandRowsOf(sigsNew, exactInc))
+    }
+    val candInc = store.getOrCompute(s"inc_${batch}_candidate_pairs") {
+      // the delta's band rows read back from their materialized state stage
+      // (delta-sized) feed both halves: delta×delta through the batch
+      // emission, delta×prior through the ladder
+      val deltaBand = bandStateStage.select("id", "band", "bucket")
+      val within = bandPairs(deltaBand)
+      // no broadcast hint: for a small delta AQE broadcasts the bucket set
+      // (prior band rows never shuffle); a corpus-sized delta would OOM the
+      // driver under a forced broadcast, and shuffling is then correct
+      val touchedBuckets = deltaBand.select("band", "bucket").distinct()
+      val touchedBandPk = touchedPkeys("band", deltaBand)
+      val oldBand = stateView("band", applied, Some(touchedBandPk))
+        .join(touchedBuckets, Seq("band", "bucket"), "left_semi")
+        .select("id", "band", "bucket")
         .localCheckpoint(true)
-      // the touched clusters' CURRENT rows: a partition-pruned scan +
-      // latest-wins resolve over the pruned rows (stale rows from earlier
-      // moves lose to their tombstones, see resolveState). They feed the
-      // re-solve as star edges and the cluster layer as the rows it
-      // supersedes.
-      val oldRows = resolveState("cluster",
-        stateView("cluster", applied, Some(touchedPkeys("cluster", touched))))
-        .join(touched, Seq("cluster_id"), "left_semi")
-        .select(ClusterCols.map(col): _*)
-        .localCheckpoint(true)
-      val subStage = store.getOrCompute(s"inc_${batch}_comp_delta") {
-        val subOld = oldRows
-          .select(col("cluster_id").as("a"), col("id").as("b"))
-          .filter(col("a") =!= col("b"))
-        ConnectedComponents.run(subOld.union(newEdges),
-          durable = Some((store, CcDurableInterval)), durablePrefix = s"inc_${batch}_cc")
-          .select("id", "component")
-      }
+      val cross = PairEmission.crossBucketPairs(deltaBand, oldBand,
+        Seq("band", "bucket"), config.maxBucketAllPairs, HugeBucketCutoff,
+        Some(hotBuckets), Some(droppedBuckets))
+        .select(least(col("id"), col("oid")).as("a"),
+          greatest(col("id"), col("oid")).as("b"))
+        .filter(col("a") =!= col("b"))
+      within.union(cross).distinct()
+    }
 
-      // 6 — clusters: recompute rows only for touched clusters + the delta;
-      // append only those rows (+ tombstones for ids whose cluster — hence
-      // state partition — moved). Write volume is O(touched members +
-      // delta); untouched rows are never read or copied.
-      store.getOrComputePartitioned(s"inc_${batch}_cluster_state") {
-        val affectedIds = oldRows.select("id").union(sigsNew.select("id")).distinct()
-        val affectedSigs = allSigs.join(affectedIds, Seq("id"), "left_semi")
-        // every affected id's component was re-solved (members of touched
-        // components and delta ids all enter the sub-solve), so the
-        // delta-sized comp_delta stage IS the component lookup — no scan of
-        // the full mapping
-        val affectedComps = subStage.join(affectedIds, Seq("id"), "left_semi")
-        val newRows = clustersPlan(affectedSigs, affectedComps)
-          .select(ClusterCols.map(col): _*).localCheckpoint(true)
-        upsertLayer("cluster", newRows, oldRows)
-      }
-      appendIncLog(batch)
-    } finally pinned.foreach(_.unpersist(blocking = false))
+    // 4 — verification: same plan as batch, but the shingle side is
+    //     semi-filtered to pair-touched ids FIRST — the batch plan shuffles
+    //     the whole signature table (necessary there), which for a 5% delta
+    //     would make verification cost corpus-sized instead of delta-sized.
+    val allSigs = store.read(priorSigStages :+ sigsStage)
+    val verifiedInc = store.getOrCompute(s"inc_${batch}_verified_edges") {
+      val pairIds = candInc.select(col("a").as("id"))
+        .union(candInc.select(col("b").as("id"))).distinct()
+      verifiedEdgesPlan(allSigs.join(pairIds, Seq("id"), "left_semi"),
+        candInc, allPages)
+    }
+
+    // 5 — incremental connected components: re-solve ONLY touched
+    // components; the re-solved rows are the batch's comp_delta stage
+    val newEdges = exactInc.select("a", "b").union(verifiedInc.select("a", "b"))
+    val edgeIds = newEdges.select(col("a").as("id"))
+      .union(newEdges.select(col("b").as("id"))).distinct()
+    // prior component of every edge-touched node, read from the cluster
+    // state (a doc's cluster_id is its component, or its own id when no
+    // edge touches it; ids new in this batch = own id). The id probe
+    // semi-filters the slim (id, cluster_id) RAW layer rows map-side
+    // (edgeIds is delta-small ⇒ broadcast semi, no corpus shuffle), and
+    // latest-wins resolution runs on the delta-sized survivors only. The
+    // cluster-hash layout cannot prune an id lookup; production puts a
+    // bloom/id index on the state files.
+    val priorOfEdge = resolveState("cluster",
+      stateView("cluster", applied, None).select("id", "cluster_id", SeqCol, DelCol)
+        .join(edgeIds, Seq("id"), "left_semi"))
+    val touched = edgeIds.join(priorOfEdge, Seq("id"), "left")
+      .select(coalesce(col("cluster_id"), col("id")).as("cluster_id")).distinct()
+      .localCheckpoint(true)
+    // the touched clusters' CURRENT rows: a partition-pruned scan +
+    // latest-wins resolve over the pruned rows (stale rows from earlier
+    // moves lose to their tombstones, see resolveState). They feed the
+    // re-solve as star edges and the cluster layer as the rows it
+    // supersedes.
+    val oldRows = resolveState("cluster",
+      stateView("cluster", applied, Some(touchedPkeys("cluster", touched))))
+      .join(touched, Seq("cluster_id"), "left_semi")
+      .select(ClusterCols.map(col): _*)
+      .localCheckpoint(true)
+    val subStage = store.getOrCompute(s"inc_${batch}_comp_delta") {
+      val subOld = oldRows
+        .select(col("cluster_id").as("a"), col("id").as("b"))
+        .filter(col("a") =!= col("b"))
+      ConnectedComponents.run(subOld.union(newEdges),
+        durable = Some((store, CcDurableInterval)), durablePrefix = s"inc_${batch}_cc")
+        .select("id", "component")
+    }
+
+    // 6 — clusters: recompute rows only for touched clusters + the delta;
+    // append only those rows (+ tombstones for ids whose cluster — hence
+    // state partition — moved). Write volume is O(touched members +
+    // delta); untouched rows are never read or copied.
+    store.getOrComputePartitioned(s"inc_${batch}_cluster_state") {
+      val affectedIds = oldRows.select("id").union(sigsNew.select("id")).distinct()
+      val affectedSigs = allSigs.join(affectedIds, Seq("id"), "left_semi")
+      // every affected id's component was re-solved (members of touched
+      // components and delta ids all enter the sub-solve), so the
+      // delta-sized comp_delta stage IS the component lookup — no scan of
+      // the full mapping
+      val affectedComps = subStage.join(affectedIds, Seq("id"), "left_semi")
+      val newRows = clustersPlan(affectedSigs, affectedComps)
+        .select(ClusterCols.map(col): _*).localCheckpoint(true)
+      upsertLayer("cluster", newRows, oldRows)
+    }
+    appendIncLog(batch)
     // fold layers back into a single base once enough batches piled up
     maybeCompactState(applied :+ batch)
     // the full updated table is the layered view — no corpus-sized write
@@ -815,14 +802,15 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
 
   // ──────────────── pkey-partitioned incremental state tables ────────────────
   //
-  // Three state tables back the incremental mode, each a set of StageStore
+  // Two state tables back the incremental mode, each a set of StageStore
   // stages partitioned by `pkey = hash(partition columns) mod
   // statePartitions` (production: Iceberg bucket-transform partitions),
-  // declared by [[PartitionCols]]: band is append-only, hash_min and
-  // cluster are UPSERT tables ([[UpsertKeys]]). The cluster table doubles
-  // as the component mapping of the incremental re-solve; stores written
-  // when components had a state table of their own keep its `comp_state*`
-  // stages, which nothing reads.
+  // declared by [[PartitionCols]]: band is append-only, cluster is an
+  // UPSERT table ([[UpsertKeys]]). The cluster table doubles as the
+  // component mapping of the incremental re-solve, and the signature
+  // stages answer the exact path's group-min lookups. Stores written when
+  // components and content-hash minima had state tables of their own
+  // ([[RetiredStateTables]]) lose those stages after their next batch.
   //
   // The append-only table: each batch appends one layer of new rows; the
   // current view is the pruned union. Upsert tables are MERGE-ON-READ
@@ -846,13 +834,16 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
 
   /** Each state table's partition columns. */
   private val PartitionCols: Map[String, Seq[String]] = Map(
-    "band" -> Seq("band", "bucket"), "hash_min" -> Seq("content_hash"),
-    "cluster" -> Seq("cluster_id"))
+    "band" -> Seq("band", "bucket"), "cluster" -> Seq("cluster_id"))
 
   /** Upsert tables and their latest-wins resolution keys; absent = append-only. */
-  private val UpsertKeys: Map[String, Seq[String]] = Map(
-    "hash_min" -> Seq("content_hash"),
-    "cluster" -> Seq("id"))
+  private val UpsertKeys: Map[String, Seq[String]] = Map("cluster" -> Seq("id"))
+
+  /** State tables older builds kept and nothing reads any more: `comp`
+    * (the cluster table is the component mapping) and `hash_min` (the
+    * signature stages hold every doc's content hash).
+    */
+  private val RetiredStateTables: Seq[String] = Seq("comp", "hash_min")
 
   /** The state partition of a row of table `name`. */
   private def pkeyOf(name: String): org.apache.spark.sql.Column =
@@ -934,9 +925,15 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * retry adopts the already-completed stage instantly. Stages superseded
     * by this fold get a one-cycle snapshot-expiry grace; the PREVIOUS
     * cycle's cohort is deleted here, derived by scan (crash-idempotent —
-    * see the inline note).
+    * see the inline note). Stages and markers of [[RetiredStateTables]]
+    * are deleted outright: no view reads them, so they need no grace.
     */
   private def maybeCompactState(appliedNow: Seq[String]): Unit = {
+    RetiredStateTables.foreach { name =>
+      store.stages(s"${name}_state_base").foreach(store.invalidate)
+      appliedNow.foreach(b => store.invalidate(s"inc_${b}_${name}_state"))
+      store.unmark(s"${name}_state_covers")
+    }
     PartitionCols.keys.foreach { name =>
       val (covers, ver) = baseInfo(name)
       val cN = appliedNow.size
@@ -1029,12 +1026,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * guarantees that a store with applied batches already has them.
     */
   private def ensureStateTables(applied: Seq[String]): Unit = {
-    lazy val baseSigs = store.read(signatureStages)
     ensureStateBase("band", applied) {
-      layerRows("band", bandRowsOf(baseSigs, store.read("exact_edges")))
-    }
-    ensureStateBase("hash_min", applied) {
-      layerRows("hash_min", baseSigs.groupBy("content_hash").agg(min("id").as("m")))
+      layerRows("band", bandRowsOf(store.read(signatureStages), store.read("exact_edges")))
     }
     ensureStateBase("cluster", applied) {
       layerRows("cluster", store.read("clusters").select(ClusterCols.map(col): _*))
@@ -1045,8 +1038,8 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * `pkeys = Some(ks)` prunes every layer's scan to those partitions
     * (directory-level pruning — the delta-proportional read; an empty `ks`
     * prunes everything). Every layer reads under its schema record, so an
-    * all-empty layer (e.g. the hash-min layer of a batch that lowered no
-    * group minimum) reads as zero typed rows. Append-only tables are
+    * all-empty layer (e.g. a layer of a batch whose every page was
+    * already present) reads as zero typed rows. Append-only tables are
     * complete as-is; upsert tables ([[UpsertKeys]]) come back with `_seq`
     * (layer index) and `_del` attached and MUST go through [[resolveState]]
     * — callers that only need a key subset semi-filter the raw rows first,

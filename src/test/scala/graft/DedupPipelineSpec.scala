@@ -228,8 +228,8 @@ class DedupPipelineSpec extends AnyFunSuite {
         .groupBy(_._1).values.map(_.map(_._2).toSet).toSet
     assert(partition(wide) === partition(narrow))
 
-    // incremental path under wide ids: least/greatest/'<' and the hash-min
-    // merge all operate on struct ids — delta of disjoint families plus an
+    // incremental path under wide ids: least/greatest/'<' and the group-min
+    // lookup all operate on struct ids — delta of disjoint families plus an
     // exact copy of an existing page (exercises the cross-batch exact path)
     val deltaSpec = CorpusSpec(nFamilies = 40, pDup = 0.3, seed = 42,
       familyOffset = 5000)
@@ -720,9 +720,9 @@ class DedupPipelineSpec extends AnyFunSuite {
     val all = DeterministicCorpus.generate(spark, spec).map(_._1).cache()
     def part(p: graft.schema.Page): Int = math.floorMod(MurmurHash3.stringHash(p.url), 4)
     val aPages = all.filter(p => part(p) >= 2)
-    // exact copies of A content landing in batch B: exercises the hash-min
-    // state (newDoc edges into old groups; repChange when a copy hashes to
-    // a smaller id than the old group minimum)
+    // exact copies of A content landing in batch B: newDoc edges into old
+    // groups, and repChange when a copy hashes to a smaller id than its
+    // old group minimum (asserted below)
     val copies = aPages.take(6).toSeq
       .map(p => p.copy(url = p.url + "#recrawl",
         warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 60000L))).toDS()
@@ -747,6 +747,20 @@ class DedupPipelineSpec extends AnyFunSuite {
     val incr = key(pipe.incremental("c", cPages))
     assert(incr === full,
       "incremental clusters must be bit-identical to the batch run")
+    // the demotion edge ran: some B copy's id undercuts the min id of the A
+    // docs with its content hash, and every such B group min links to (and
+    // so demotes) the old min in b's exact edges
+    val aMin = store.read((0 until DedupConfig().resumeChunks).map(i => s"signatures_chunk$i"))
+      .groupBy("content_hash").agg(min("id").as("am"))
+    val bSigs = store.read("inc_b_signatures")
+    val undercutting = bSigs.filter(col("url").endsWith("#recrawl"))
+      .join(aMin, "content_hash").filter(col("id") < col("am")).count()
+    assert(undercutting > 0, "no B copy undercuts its A group min")
+    val demotions = bSigs.groupBy("content_hash").agg(min("id").as("bm"))
+      .join(aMin, "content_hash").filter(col("bm") < col("am"))
+      .select(col("bm").as("a"), col("am").as("b"))
+    assert(demotions.join(store.read("inc_b_exact_edges"), Seq("a", "b"), "left_anti")
+      .isEmpty, "a demoted A group min is missing from b's exact edges")
     // re-applying a logged batch returns the checkpointed result
     assert(key(pipe.incremental("c", cPages)) === full)
     // stages from a half-applied OTHER batch are refused, not ignored
@@ -933,26 +947,42 @@ class DedupPipelineSpec extends AnyFunSuite {
     pipe.run(aPages).count()
     pipe.incremental("b", bPages).count()
     // a batch writes its signatures, exact path, candidates, verified
-    // edges, union-find result and two state layers — no component layer
+    // edges, union-find result and two state layers — no component or
+    // hash-min layer; adoption wrote the band and cluster bases only
     assert(store.stages("inc_b_").sorted === Seq("band_state", "candidate_pairs",
-      "cluster_state", "comp_delta", "exact_edges", "hash_min_state", "signatures",
+      "cluster_state", "comp_delta", "exact_edges", "signatures",
       "verified_edges").map("inc_b_" + _))
-    assert(store.stages("comp_state").isEmpty && !store.marked("comp_state_covers"))
+    assert(store.stages("").filter(_.contains("_state_base")).sorted ===
+      Seq("band_state_base", "cluster_state_base"))
+    val retired = Seq("comp", "hash_min")
+    def retiredLeft = retired.flatMap(t => store.stages(s"${t}_state") ++
+      store.stages("inc_").filter(_.endsWith(s"_${t}_state")) ++
+      Some(s"${t}_state_covers").filter(store.marked))
+    assert(retiredLeft.isEmpty, retiredLeft)
 
-    // add what a build with a component state table wrote beside them: an
-    // adoption base of the run's components, its covers marker and b's
-    // layer of re-solved rows, each partitioned by pkey(component)
-    def compLayer(df: DataFrame) = df.select("id", "component")
-      .withColumn("pkey", pmod(xxhash64(col("component")), lit(cfg.statePartitions)).cast("int"))
+    // add what builds with component and hash-min state tables wrote beside
+    // them: per table an adoption base, its covers marker and b's layer,
+    // partitioned by pkey(component) and pkey(content_hash)
+    def layer(df: DataFrame, part: String) = df
+      .withColumn("pkey", pmod(xxhash64(col(part)), lit(cfg.statePartitions)).cast("int"))
       .withColumn("_del", lit(false))
+    def compLayer(df: DataFrame) = layer(df.select("id", "component"), "component")
+    def hashMinLayer(df: DataFrame) =
+      layer(df.groupBy("content_hash").agg(min("id").as("m")), "content_hash")
     store.mark("comp_state_covers", "0 0")
     store.writePartitioned("comp_state_base", compLayer(store.read("components")))
     store.writePartitioned("inc_b_comp_state", compLayer(store.read("inc_b_comp_delta")))
+    store.mark("hash_min_state_covers", "0 0")
+    store.writePartitioned("hash_min_state_base", hashMinLayer(
+      store.read((0 until cfg.resumeChunks).map(i => s"signatures_chunk$i"))))
+    store.writePartitioned("inc_b_hash_min_state", hashMinLayer(store.read("inc_b_signatures")))
+    assert(retiredLeft.size === 6, retiredLeft)
     assert(key(pipe.incremental("c", cPages)) === full,
-      "a store with retired comp state + a new delta must match the batch run")
-    // the retired stages are left as they were, unread
-    assert(store.has("comp_state_base") && store.has("inc_b_comp_state"))
-    assert(!store.has("inc_c_comp_state"))
+      "a store with retired comp and hash-min state + a new delta must match the batch run")
+    // the next batch deletes the retired stages and markers; the re-solve's
+    // comp_delta stages stay
+    assert(retiredLeft.isEmpty, retiredLeft)
+    assert(store.has("inc_b_comp_delta") && store.has("inc_c_comp_delta"))
     all.unpersist()
   }
 
@@ -1010,10 +1040,6 @@ class DedupPipelineSpec extends AnyFunSuite {
     val compRows = store.read("inc_d1_comp_delta").count()
     assert(compRows <= 4 * nDelta + 50,
       s"component re-solve wrote $compRows rows for a $nDelta-page delta")
-    // hash-min layer: changed/new keys only — at most the delta's hashes
-    val hashRows = store.read("inc_d1_hash_min_state").count()
-    assert(hashRows > 0 && hashRows <= nDelta,
-      s"hash-min layer wrote $hashRows rows for a $nDelta-page delta")
     // band state: the batch appended ONLY its own band rows
     assert(store.read("inc_d1_band_state").count() ===
       pipe.stateView("band", Seq("d1"), None).count() -
