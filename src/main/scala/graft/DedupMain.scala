@@ -141,22 +141,12 @@ object DedupMain {
       return
     }
 
-    // stage row counts come from the checkpoint manifests (parquet footer
-    // metadata recorded at write time) — no re-scan of stage tables
-    val sigStages = pipeline.signatureStages
-    def rowsOf(sts: Seq[String]): Long =
-      sts.map(st => store.lineage(st).agg(sum("rows")).as[Long].collect()(0)).sum
-    val stages = (Seq("signatures" -> sigStages) ++
-      Seq("exact_edges", "candidate_pairs", "verified_edges", "components",
-        "clusters").map(st => st -> Seq(st)))
-      .map { case (name, sts) => s""""$name":${rowsOf(sts)}""" }
-      .mkString("{", ",", "}")
+    val stages = stageRows(store, pipeline.signatureStages)
 
     // consolidated per-partition lineage + metrics table (north_rule:
     // "writes per-partition lineage and metrics to Iceberg checkpoint
     // tables"; Iceberg → parquet-dir emulation, see StageStore)
-    val allStages = sigStages ++ Seq("exact_edges", "candidate_pairs",
-      "verified_edges", "components", "clusters")
+    val allStages = pipeline.signatureStages ++ RunStages
     allStages.map(store.lineage).reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$checkpointDir/_metrics")
     println(
@@ -167,6 +157,23 @@ object DedupMain {
          |"dropped_bucket_rows":${pipeline.droppedBucketRows.value}},
          |"stage_rows":$stages}""".stripMargin.replace("\n", ""))
     spark.stop()
+  }
+
+  /** The stages of `run()` after signatures, in pipeline order. */
+  private val RunStages = Seq("exact_edges", "candidate_pairs", "verified_edges",
+    "components", "clusters")
+
+  /** The rows of each `run()` stage as a JSON object, signatures summed over
+    * `sigStages`. Counts come from the checkpoint manifests (parquet footer
+    * metadata recorded at write time), not a re-scan of the stage tables;
+    * a stage with no data file (an empty signature chunk) counts 0.
+    */
+  private[graft] def stageRows(store: StageStore, sigStages: Seq[String]): String = {
+    def rowsOf(sts: Seq[String]): Long =
+      sts.map(st => store.lineage(st).agg(coalesce(sum("rows"), lit(0L))).head().getLong(0)).sum
+    (("signatures" -> sigStages) +: RunStages.map(st => st -> Seq(st)))
+      .map { case (name, sts) => s""""$name":${rowsOf(sts)}""" }
+      .mkString("{", ",", "}")
   }
 
   private val IntFlag = ("an integer", (v: String) => v.toIntOption.isDefined)

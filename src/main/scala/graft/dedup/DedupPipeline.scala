@@ -105,11 +105,16 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     * 128 (two-long struct; ~10⁻¹⁵ at 10¹² docs) — see [[idCol]].
     *
     * Partition-level resume (north_star: "a killed job resumes mid-pipeline
-    * without recomputing completed partitions"): the stage is written as
-    * `resumeChunks` independent checkpoints, chunked by `pmod(id, C)`. A
-    * kill between chunk commits loses only the in-flight chunk; completed
-    * chunks load from their manifests. The chunk key is a pure function of
-    * the row, so chunk contents are stable across runs.
+    * without recomputing completed partitions"): the stage is stored as
+    * `resumeChunks` independent checkpoints, chunked by
+    * `pmod(xxhash64(url, warc_ts), C)` (the id itself at `idBits = 64`).
+    * Every chunk without a manifest is computed by ONE job over ONE scan
+    * of the input ([[StageStore.writeChunks]]), filtered to those chunks
+    * only when some are already committed; completed chunks load from
+    * their manifests. A kill during that job loses every chunk it was
+    * writing, a kill between the chunk commits only the uncommitted ones.
+    * The chunk key is a pure function of the row, so chunk contents are
+    * stable across runs, and a chunk no row falls in commits with no file.
     *
     * The checkpoint stores the `bands` band keys (b longs), NOT the full
     * n-value MinHash signature — bands are the only thing the candidate
@@ -118,25 +123,21 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     */
   def signatures(pages: Dataset[Page]): DataFrame =
     withUniqueIds("input", "signatures_idcheck", signatureStages) { missing =>
-      val c = config.resumeChunks
-      // one input scan for all chunk computations: cache the pages only if
-      // more than one chunk needs computing (on clean resume: zero reads).
-      // In production the chunk key is the Iceberg ingest partition and
-      // each chunk's scan prunes to its own files — no cache needed.
-      // The signature projection never touches the raw html payload — keep
-      // it out of the cache (it is the corpus's largest column)
-      val slimPages = pages.toDF().drop("html")
-      val cached =
-        if (missing.size > 1)
-          Some(slimPages.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        else None
-      val input = cached.getOrElse(slimPages)
-      try signatureStages.zipWithIndex.filter(si => missing.contains(si._1)).foreach {
-        case (st, i) =>
-          store.write(st, signaturesChunkPlan(
-            if (c == 1) input
-            else input.filter(pmod(xxhash64(col("url"), col("warc_ts")), lit(c)) === i)))
-      } finally cached.foreach(_.unpersist(blocking = false))
+      if (missing.nonEmpty) {
+        val todo = signatureStages.zipWithIndex
+          .collect { case (st, i) if missing.contains(st) => i -> st }.toMap
+        val chunk = pmod(xxhash64(col("url"), col("warc_ts")), lit(config.resumeChunks))
+          .cast("int")
+        // the signature projection never touches the raw html payload (the
+        // corpus's largest column), so the scan drops it. In production the
+        // chunk key is the Iceberg ingest partition, and a resume's scan
+        // prunes to the missing chunks' files instead of filtering.
+        val slimPages = pages.toDF().drop("html")
+        val input =
+          if (todo.size == config.resumeChunks) slimPages
+          else slimPages.filter(chunk.isin(todo.keys.toSeq: _*))
+        store.writeChunks(todo, signaturesChunkPlan(input).withColumn("chunk", chunk))
+      }
       store.read(signatureStages)
     }
 
@@ -444,7 +445,7 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, checkpoints:
     else {
       // the html payload — the corpus's largest column — is NOT carried
       // through the dedup shuffle: no pipeline stage reads it (signatures
-      // drops it before caching, LCS joins normalized text), so shuffling
+      // drops it from its scan, LCS joins normalized text), so shuffling
       // it would multiply the stage's volume by the payload ratio for
       // nothing. The kept rows re-attach an empty payload. Production
       // ingest-time spelling-dedup keeps payloads in place by deduping

@@ -2,8 +2,12 @@ package graft.io
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -122,7 +126,7 @@ final class StageStore(spark: SparkSession, val root: String) {
     // has no pkey=N directory to discover, yet reads back the same columns
     commit(stage, (System.nanoTime() - t0) / 1000000, parquetFilesUnder(dir),
       StructType(df.schema.filterNot(_.name == "pkey") :+ df.schema("pkey")),
-      s""""pkeys":[${pkeyDirs(dir).distinct.sorted.mkString(",")}]""")
+      s""""pkeys":[${partitionValues(dir, "pkey").distinct.sorted.mkString(",")}]""")
     read(stage)
   }
 
@@ -136,14 +140,18 @@ final class StageStore(spark: SparkSession, val root: String) {
                      schema: StructType, extra: String*): Unit = {
     val dir = stageDir(stage)
     Files.writeString(dir.resolve("_SCHEMA.json"), schema.json)
+    // the session's Hadoop conf, passed to the footer read: reader options
+    // built without one construct a fresh `Configuration` per file, which
+    // re-parses its XML resources each time
     val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val readOptions = HadoopReadOptions.builder(hadoopConf).build()
     val entries = files.map { f =>
       val rows =
         try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), hadoopConf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try reader.getRecordCount finally reader.close()
+          val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), hadoopConf)
+          scala.util.Using.resource(in.newStream())(stream =>
+            ParquetFileReader.readFooter(in, readOptions, stream).getBlocks.asScala
+              .map(_.getRowCount).sum)
         } catch { case NonFatal(_) => -1L }
       s"""{"file":"${dir.relativize(f)}","rows":$rows,"bytes":${Files.size(f)}}"""
     }
@@ -158,12 +166,60 @@ final class StageStore(spark: SparkSession, val root: String) {
     if (has(stage)) read(stage)
     else writePartitioned(stage, thunk)
 
-  private def pkeyDirs(dir: Path): Seq[Int] =
+  // ──────────── chunked stages (one job, several checkpoints) ────────────
+
+  /** Write `df` — which must carry an int `chunk` column whose every value
+    * is a key of `stages` — as one stage per chunk in ONE job: `stages(i)`
+    * holds the rows with `chunk == i`. The job writes
+    * `partitionBy("chunk")` into [[StageStore.StagingDir]] under the root;
+    * each `chunk=i` directory is then renamed into place as `stages(i)`
+    * and committed as [[write]] commits, its schema record without
+    * `chunk`. A chunk with no rows gets no directory from the job and
+    * commits as a zero-file stage that reads back as zero rows.
+    *
+    * Each manifest's `wall_ms` is the chunk's share of the job's write
+    * time, apportioned by bytes written (evenly when nothing was written),
+    * so the chunks sum to the job's time.
+    *
+    * Granularity: a kill during the job loses every chunk it was writing;
+    * a kill between commits loses only the uncommitted ones. Whatever a
+    * killed or failed call leaves in the staging directory is never listed
+    * as a stage and is removed by the next call (or on failure).
+    */
+  def writeChunks(stages: Map[Int, String], df: DataFrame): Unit = {
+    require(stages.nonEmpty, "no chunk to write")
+    stages.values.foreach(st => require(!has(st), s"stage '$st' is already complete"))
+    val t0 = System.nanoTime()
+    val staging = Paths.get(root, StageStore.StagingDir)
+    (stages.values.map(stageDir) ++ Seq(staging)).filter(Files.exists(_))
+      .foreach(deleteRecursively)
+    try {
+      df.write.mode("overwrite").partitionBy("chunk").parquet(staging.toString)
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      val stray = partitionValues(staging, "chunk").filterNot(stages.contains)
+      require(stray.isEmpty, s"rows of chunks ${stray.sorted.mkString(", ")} have no stage")
+      val chunks = stages.keys.toSeq.sorted
+      val weights = chunks.map(i =>
+        parquetFilesUnder(staging.resolve(s"chunk=$i")).map(Files.size).sum)
+      val cum = (if (weights.sum > 0) weights else weights.map(_ => 1L)).scanLeft(0L)(_ + _)
+      val ends = cum.map(b => math.round(wallMs.toDouble * b / cum.last))
+      val schema = StructType(df.schema.filterNot(_.name == "chunk"))
+      chunks.zipWithIndex.foreach { case (i, k) =>
+        val (src, dst) = (staging.resolve(s"chunk=$i"), stageDir(stages(i)))
+        if (Files.exists(src)) Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+        else Files.createDirectories(dst)
+        commit(stages(i), ends(k + 1) - ends(k), parquetFilesUnder(dst), schema)
+      }
+    } finally if (Files.exists(staging)) deleteRecursively(staging)
+  }
+
+  /** The values of the `<column>=N` partition directories directly under `dir`. */
+  private def partitionValues(dir: Path, column: String): Seq[Int] =
     if (!Files.exists(dir)) Nil
     else scala.util.Using.resource(Files.list(dir))(
       _.toArray.map(_.asInstanceOf[Path]))
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("pkey="))
-      .map(_.getFileName.toString.stripPrefix("pkey=").toInt).toSeq
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$column="))
+      .map(_.getFileName.toString.stripPrefix(s"$column=").toInt).toSeq
 
   private def parquetFilesUnder(dir: Path): Seq[Path] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Path]
@@ -244,6 +300,11 @@ final class StageStore(spark: SparkSession, val root: String) {
 }
 
 object StageStore {
+  /** The directory under the root where [[StageStore.writeChunks]] writes
+    * before its chunks are renamed into place; it never holds a manifest.
+    */
+  private[graft] val StagingDir = "_staging"
+
   /** The manifest fields `lineage` reads — given, so the read infers nothing. */
   private val ManifestSchema = "stage STRING, status STRING, wall_ms BIGINT, " +
     "partitions ARRAY<STRUCT<file: STRING, rows: BIGINT, bytes: BIGINT>>"

@@ -29,18 +29,20 @@ class DedupPipelineSpec extends AnyFunSuite {
   private def freshStore(): StageStore =
     new StageStore(spark, Files.createTempDirectory("graft-stages-").toString)
 
-  /** Spark jobs submitted while `body` runs. A marker job submitted after
-    * `body` bounds the count: the listener bus delivers job starts in
-    * submission order, so every job of `body` arrives before the marker's.
+  /** Names (`<action> at <file>:<line>`) of the Spark jobs submitted while
+    * `body` runs. A marker job submitted after `body` bounds the list: the
+    * listener bus delivers job starts in submission order, so every job of
+    * `body` arrives before the marker's.
     */
-  private def jobsSubmitted(body: => Unit): Int = {
+  private def jobsRun(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val marker = "jobsSubmitted-marker"
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val starts = new java.util.concurrent.LinkedBlockingQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        starts.put((Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          e.stageInfos.maxBy(_.stageId).name))
     }
     sc.addSparkListener(listener)
     try {
@@ -51,9 +53,11 @@ class DedupPipelineSpec extends AnyFunSuite {
         val d = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
         assert(d != null, "listener saw no marker job within 60 s")
         d
-      }.takeWhile(_ != marker).size
+      }.takeWhile(_._1 != marker).map(_._2).toSeq
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsSubmitted(body: => Unit): Int = jobsRun(body).size
 
   /** Every completed stage of `store` reads back under its recorded schema
     * with the columns parquet inference gives; a stage with no data file
@@ -374,12 +378,101 @@ class DedupPipelineSpec extends AnyFunSuite {
         .otherwise(col("text")))
       .as[graft.schema.Page]
     val before = spark.sparkContext.getPersistentRDDs.size
+    val store = freshStore()
     val e = intercept[Exception](
-      new DedupPipeline(spark, DedupConfig(), freshStore()).run(failing))
+      new DedupPipeline(spark, DedupConfig(), store).run(failing))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("unreadable page")), e)
     assert(spark.sparkContext.getPersistentRDDs.size === before,
       "the cached pages must be released when a chunk write fails")
+    assert(store.stages("signatures").isEmpty, "a failed write commits no chunk")
+    assert(!Files.exists(java.nio.file.Paths.get(store.root, StageStore.StagingDir)),
+      "a failed write leaves no staging output")
+  }
+
+  test("signatures: one stage-write job writes every chunk of a fresh store") {
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 40, seed = 3))
+    val store = freshStore()
+    val pipe = new DedupPipeline(spark, DedupConfig(resumeChunks = 4), store)
+    val t0 = System.nanoTime()
+    val writes = jobsRun(pipe.signatures(pages)).filter(_.contains("StageStore.scala"))
+    val elapsedMs = (System.nanoTime() - t0) / 1000000
+    assert(writes.size === 1, writes)
+    assert(store.stages("signatures").sorted === pipe.signatureStages.sorted)
+    // chunk membership is pmod(id, C), and the chunks hold every page once
+    pipe.signatureStages.zipWithIndex.foreach { case (st, i) =>
+      assert(store.read(st).filter(pmod(col("id"), lit(4)) =!= i).count() === 0, st)
+    }
+    assert(store.read(pipe.signatureStages).count() === pages.count())
+    // each manifest holds its chunk's share of the one job's write time
+    val wallMs = pipe.signatureStages.map(st =>
+      store.lineage(st).select("wall_ms").head().getLong(0))
+    assert(wallMs.sum <= elapsedMs, wallMs)
+  }
+
+  test("signatures: staging output a killed chunk write left is removed, never a stage") {
+    val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = 40, seed = 3))
+    val store = freshStore()
+    val staging = java.nio.file.Paths.get(store.root, StageStore.StagingDir)
+    def leaveKilledWrite(): Unit = {
+      Files.createDirectories(staging.resolve("chunk=2"))
+      Files.writeString(staging.resolve("chunk=2").resolve("part-00000-k.parquet"), "torn")
+    }
+    def key(df: DataFrame) = df.select("url", "cluster_id", "is_representative")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+    // on a fresh store: not a stage checkpoint, so not the unfingerprinted
+    // store the config guard refuses
+    leaveKilledWrite()
+    assert(store.stages("").isEmpty)
+    val full = key(new DedupPipeline(spark, DedupConfig(), store).run(pages))
+    assert(!Files.exists(staging))
+    // a later run killed while writing chunk 2: the rerun computes it alone
+    store.invalidate("signatures_chunk2")
+    Seq("exact_edges", "candidate_pairs", "verified_edges", "components",
+      "clusters").foreach(store.invalidate)
+    leaveKilledWrite()
+    assert(!store.stages("").contains(StageStore.StagingDir))
+    assert(key(new DedupPipeline(spark, DedupConfig(), store).run(pages)) === full)
+    assert(!Files.exists(staging))
+    assert(store.has("signatures_chunk2"))
+  }
+
+  test("empty signature chunks: commit with no file, read back as zero rows") {
+    import spark.implicits._
+    // 2 pages over 4 chunks: at least two chunks get no row
+    val pages = Seq(
+      mkPage("e1", (1 to 30).map(i => s"ea$i").mkString(" "), "s"),
+      mkPage("e2", (1 to 30).map(i => s"eb$i").mkString(" "), "s")).toDS()
+    val store = freshStore()
+    val pipe = new DedupPipeline(spark, DedupConfig(), store)
+    assert(pipe.run(pages).count() === 2)
+    val (empty, full) = pipe.signatureStages.partition(st => store.read(st).count() == 0)
+    assert(empty.size >= 2 && full.nonEmpty, (empty, full))
+    assert(pipe.signatureStages.forall(store.stages("").contains))
+    empty.foreach { st =>
+      assert(store.lineage(st).count() === 0, s"$st holds a file")
+      assert(store.read(st).schema === store.read(full.head).schema)
+      assert(store.read(st).select("id", "url", "bands")
+        .as[(Long, String, Seq[Long])].collect().isEmpty)
+    }
+    assert(DedupMain.stageRows(store, pipe.signatureStages) ===
+      """{"signatures":2,"exact_edges":0,"candidate_pairs":0,"verified_edges":0,""" +
+        """"components":0,"clusters":2}""")
+  }
+
+  test("stage manifest: each file's rows come from its parquet footer") {
+    val store = freshStore()
+    // four files of unequal size
+    store.write("multi",
+      spark.range(0, 1000, 1, 4).toDF().filter(col("id") % 3 =!= 0 || col("id") < 250))
+    val lin = store.lineage("multi").collect()
+    assert(lin.length >= 3)
+    lin.foreach { r =>
+      val file = java.nio.file.Paths.get(store.root, "multi", r.getAs[String]("file"))
+      assert(r.getAs[Long]("rows") === spark.read.parquet(file.toString).count(), file)
+    }
+    assert(!lin.exists(_.getAs[Long]("rows") == -1L))
+    assert(lin.map(_.getAs[Long]("rows")).sum === store.read("multi").count())
   }
 
   test("signatures plan: narrow (no Exchange), one MinHash pass") {
